@@ -86,32 +86,34 @@ case class MinHashSig(child: Expression) extends UnaryExpression {
   */
 object MinHashSigKernel {
   private val Bands = 16
+  /** Null parity with the HOF's zip_with + array_min: a pair with a null
+    * half, or past the end of the shorter array (zip_with pads with
+    * nulls), contributes nothing; when no pair contributes, every
+    * element is null.
+    */
   def compute(h1s: ArrayData, h2s: ArrayData,
       allNull: GenericArrayData): GenericArrayData = {
-    val n = h1s.numElements()
-    if (n == 0) return allNull
+    val n = math.min(h1s.numElements(), h2s.numElements())
     val mins = new Array[Long](Bands)
+    java.util.Arrays.fill(mins, Long.MaxValue)
+    var seen = false
     var i = 0
     while (i < n) {
-      val h2 = h2s.getLong(i)
-      var g = h1s.getLong(i)
-      var j = 0
-      if (i == 0) {
+      if (!h1s.isNullAt(i) && !h2s.isNullAt(i)) {
+        val h2 = h2s.getLong(i)
+        var g = h1s.getLong(i)
+        var j = 0
         while (j < Bands) {
-          mins(j) = g
+          if (g < mins(j)) mins(j) = g
           g += h2 // g_j = h1 + j*h2, wrapping like the HOF long arithmetic
           j += 1
         }
-      } else {
-        while (j < Bands) {
-          if (g < mins(j)) mins(j) = g
-          g += h2
-          j += 1
-        }
+        seen = true
       }
       i += 1
     }
-    new GenericArrayData(Array.tabulate[Any](Bands)(j =>
+    if (!seen) allNull
+    else new GenericArrayData(Array.tabulate[Any](Bands)(j =>
       java.lang.Long.valueOf(mins(j))))
   }
 }

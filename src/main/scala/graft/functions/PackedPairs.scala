@@ -48,19 +48,24 @@ case class PackedPairs(child: Expression) extends UnaryExpression {
 }
 
 object PairKernel {
+  /** n(n-1)/2, the output length for an n-element input. It must stay an
+    * addressable array length, which bounds n at 65536 (65536*65535/2 =
+    * 2147450880). Computed in Long — the Int product n*(n-1) already
+    * wraps negative at n = 46342 — and narrowed only after the guard.
+    */
+  def pairCount(n: Int): Int = {
+    val m = n.toLong * (n - 1) / 2
+    require(m <= Int.MaxValue, s"graft_packed_pairs input too large: $n elements")
+    m.toInt
+  }
+
   /** static so generated code can call it directly — the pair loop is a
     * tight primitive nest either way; codegen only removes the eval()
     * boxing around it.
     */
   def compute(a: ArrayData): ArrayData = {
     val n = a.numElements()
-    // n(n-1)/2 must stay an addressable array length; the Int multiply
-    // n*(n-1) itself overflows past 65536 (65536*65535/2 = 2147450880 is
-    // the largest representable pair count), so the guard bounds n there
-    // — checked via the long product so the guard can never overflow
-    require(n.toLong * (n - 1) / 2 <= Int.MaxValue && n <= 65536,
-      s"graft_packed_pairs input too large: $n elements")
-    val m = n * (n - 1) / 2
+    val m = pairCount(n)
     var hasNull = false
     var i = 0
     while (i < n && !hasNull) { hasNull = a.isNullAt(i); i += 1 }

@@ -365,13 +365,6 @@ case class WordGrams(child: Expression, kExpr: Expression) extends UnaryExpressi
   override def prettyName: String = "graft_word_grams"
 }
 
-/** `graft_gram_h60(w: array<string>, k) -> array<bigint>` — h60 of every
-  * k-token window of `w` in position order, one native pass. The HOF twin
-  * `transform(sequence(0, size(w)-k), i -> h60(concat_ws(' ',
-  * slice(w, i+1, k))))` copies a k-element array per window (slice) and
-  * pays the hex/CONV garbage per window; this allocates one primitive
-  * output array per document. `k` must be a foldable positive int.
-  */
 /** `graft_char_ngrams(s: string, n) -> array<string>` — every n-char gram
   * of `s` in position order, one native pass over the codepoint
   * boundaries (see [[ShingleKernel.charNgrams]]). `n` must be a foldable
@@ -454,6 +447,13 @@ case class FixedLines(child: Expression, widthExpr: Expression) extends UnaryExp
   override def prettyName: String = "graft_lines"
 }
 
+/** `graft_gram_h60(w: array<string>, k) -> array<bigint>` — h60 of every
+  * k-token window of `w` in position order, one native pass. The HOF twin
+  * `transform(sequence(0, size(w)-k), i -> h60(concat_ws(' ',
+  * slice(w, i+1, k))))` copies a k-element array per window (slice) and
+  * pays the hex/CONV garbage per window; this allocates one primitive
+  * output array per document. `k` must be a foldable positive int.
+  */
 case class GramH60(child: Expression, kExpr: Expression) extends UnaryExpression {
   private lazy val k: Int = kExpr.eval(null) match {
     case i: Int => i

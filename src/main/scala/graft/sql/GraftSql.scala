@@ -1003,7 +1003,9 @@ object GraftSql {
       case _ => None
     }
     val conj = splitConj(cond)
-    def note(col: String, opened: Int): Unit = notes.foreach { ns =>
+    // `opened` is by name: each count is another log read plus a state
+    // fold, paid only when EXPLAIN asked for notes
+    def note(col: String, opened: => Int): Unit = notes.foreach { ns =>
       val total = t.commitLog.state()._1.size
       ns += s"$relName: probe on '$col' prunes to $opened of $total data files " +
         "(per-file stats + partition values + blooms)"
@@ -1057,18 +1059,18 @@ object GraftSql {
     val ranged = nLos.keySet.intersect(nHis.keySet).toSeq.sorted.iterator.flatMap { c =>
       (numLit(nLos(c)), numLit(nHis(c))) match {
         case (Some(lo), Some(hi)) =>
-          Some((c, t.prunedFileCount(c, lo, hi),
+          Some((c, () => t.prunedFileCount(c, lo, hi),
             () => t.readRange(c, lo, hi)))
         case _ => (strLit(nLos(c)), strLit(nHis(c))) match {
           case (Some(lo), Some(hi)) =>
-            Some((c, t.prunedFileCountStr(c, lo, hi),
+            Some((c, () => t.prunedFileCountStr(c, lo, hi),
               () => t.readRangeStr(c, lo, hi)))
           case _ => None
         }
       }
     }.nextOption()
     ranged.map { case (c, opened, build) =>
-      note(c, opened)
+      note(c, opened())
       build().queryExecution.analyzed
     }
   }

@@ -5,6 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, MetadataBuilder, StructField, StructType}
 
@@ -19,7 +20,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * seq ≤ the delete's seq — later appends are untouched, matching
   * Iceberg's sequence-number scoping of equality deletes. Catalyst sees
   * an ordinary left_anti join and optimizes it like any other (broadcast
-  * when the delete set is small — the common case).
+  * when the delete set is small — the common case). Scan schemas come
+  * from parquet file footers read on the driver, so building a read plan
+  * runs no Spark job (short of a scan listing more files than
+  * spark.sql.sources.parallelPartitionDiscovery.threshold).
   *
   * Write path: executors write parquet shards in parallel (df.write),
   * then the driver performs exactly ONE O(1) commit — the decoupled
@@ -43,24 +47,15 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     walked(dir)(_.filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map(_.toString).toSeq.sorted)
 
-  /** PER-FILE (Iceberg-manifest-granularity) column bounds for the files
-    * just written to `dir`, keyed to match `files` (plain paths). One
-    * column-pruned aggregate scan over the shard dir — grouped by
-    * input_file_name(), so cost is O(statsCols), not O(files).
+  /** PER-FILE (Iceberg-manifest-granularity) column bounds for `files`
+    * (plain paths: a fresh write, or live files spanning shard dirs).
+    * One column-pruned aggregate scan grouped by input_file_name(), so
+    * cost is O(statsCols), not O(files).
     */
-  private def perFileStats(
-      dir: Path, files: Seq[String], statsCols: Seq[String])
+  private def perFileStats(files: Seq[String], statsCols: Seq[String])
       : (Seq[Map[String, (String, String)]], Set[String]) =
     if (statsCols.isEmpty || files.isEmpty) (Nil, Set.empty)
-    else perFileStatsIn(spark.read.parquet(dir.toString), files, statsCols)
-
-  /** same bounded scan over an EXPLICIT live-file list (they span shard
-    * dirs, unlike a fresh write) — the backfill path of recomputeStats.
-    */
-  private def perFileStatsOf(files: Seq[String], statsCols: Seq[String])
-      : (Seq[Map[String, (String, String)]], Set[String]) =
-    if (statsCols.isEmpty || files.isEmpty) (Nil, Set.empty)
-    else perFileStatsIn(spark.read.parquet(files: _*), files, statsCols)
+    else perFileStatsIn(readParquet(files), files, statsCols)
 
   private def perFileStatsIn(
       df0: org.apache.spark.sql.DataFrame, files: Seq[String], statsCols: Seq[String])
@@ -116,8 +111,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         bounds.maxBy(b => BigDecimal(b._2))._2))
     }
 
-  /** Per-file bloom filters for `bloomCols` over the files just written
-    * to `dir` — one aggregate scan per column: each value contributes its
+  /** Per-file bloom filters for `bloomCols` over `files` (a fresh
+    * write) — one aggregate scan per column: each value contributes its
     * K md5-derived bit positions (the SQL twin of [[Bloom.positions]]),
     * folded DISTRIBUTEDLY into 64-bit lanes with bit_or (m/64 rows per
     * file — executor memory is O(lanes), never O(values)), and the driver
@@ -125,14 +120,14 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * matches an equality probe, so pruning a null-only file is correct.
     */
   private def perFileBlooms(
-      dir: Path, files: Seq[String], bloomCols: Seq[String],
+      files: Seq[String], bloomCols: Seq[String],
       bloomBits: Int = Bloom.DefaultM)
       : Seq[Map[String, String]] =
     if (bloomCols.isEmpty || files.isEmpty) Nil
     else {
       require(bloomBits >= 64 && (bloomBits & (bloomBits - 1)) == 0,
         s"bloomBits must be a power of two >= 64: $bloomBits")
-      val df0 = spark.read.parquet(dir.toString)
+      val df0 = readParquet(files)
       // ONE scan covers every bloom column: each row contributes K tagged
       // (column index, position) structs per column (nulls contribute
       // none). First 8 hex chars of md5("$i:" + value) = 32 bits; % m is
@@ -212,10 +207,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val dir = newShardDir("data")
     in.write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(dir, files, statsCols)
+    val (fs, strCols) = perFileStats(files, statsCols)
     log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = perFileBlooms(dir, files, bloomCols, bloomBits),
+      fileBlooms = perFileBlooms(files, bloomCols, bloomBits),
       fileRows = fileRowCounts(files), assignRowIds = true)
   }
 
@@ -261,7 +256,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     require(dupes.isEmpty,
       s"addFiles: ${dupes.size} file(s) already referenced by this table " +
         s"(re-run import?): ${dupes.take(3).mkString(", ")}")
-    val df0 = spark.read.parquet(files: _*)
+    val df0 = readParquet(files)
     requireNoReserved(df0)
     schemaFrom(log.entries()).foreach { cur =>
       val curT = cur.fields.map(f => f.name -> f.dataType).toMap
@@ -296,7 +291,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val dir = newShardDir("data")
     in.write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(dir, files, statsCols)
+    val (fs, strCols) = perFileStats(files, statsCols)
     // props (e.g. a txn.<appId> idempotence watermark) ride the staged
     // entry: invisible like its rows until the marker publishes, then
     // folded atomically WITH them — so a multi-table transaction can be
@@ -304,7 +299,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // after → the visible watermark skips the whole transaction)
     log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = perFileBlooms(dir, files, bloomCols),
+      fileBlooms = perFileBlooms(files, bloomCols),
       fileRows = fileRowCounts(files), assignRowIds = true,
       txnMarker = marker.toAbsolutePath.normalize.toString, props = props)
   }
@@ -338,10 +333,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val dir = newShardDir("data")
     in.write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(dir, files, statsCols)
+    val (fs, strCols) = perFileStats(files, statsCols)
     log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = perFileBlooms(dir, files, bloomCols),
+      fileBlooms = perFileBlooms(files, bloomCols),
       fileRows = fileRowCounts(files), assignRowIds = true,
       props = Map(key -> version.toString))
   }
@@ -410,14 +405,14 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       specs.indices.flatMap(i =>
         partValueFromPath(f, i).map(v => partColFor(i) -> (v, v))).toMap
     }
-    val (extra, strCols) = perFileStats(dir, files, statsCols)
+    val (extra, strCols) = perFileStats(files, statsCols)
     val merged =
       if (extra.isEmpty) partStat
       else partStat.zip(extra).map { case (a, b) => a ++ b }
     log.commit("add", dataFiles = files, stats = foldStats(extra, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = merged,
       partSpec = PartitionSpec.renderAll(specs),
-      fileBlooms = perFileBlooms(dir, files, bloomCols),
+      fileBlooms = perFileBlooms(files, bloomCols),
       fileRows = fileRowCounts(files), assignRowIds = true, txnMarker = txnMarker)
   }
 
@@ -445,7 +440,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val files = parquetFilesIn(dir)
     val partStat: Seq[Map[String, (String, String)]] =
       files.map(f => partValueFromPath(f, 0).map(v => PartCol -> (v, v)).toMap)
-    val (extra, strCols) = perFileStats(dir, files, statsCols)
+    val (extra, strCols) = perFileStats(files, statsCols)
     val merged =
       if (extra.isEmpty) partStat
       else partStat.zip(extra).map { case (a, b) => a ++ b }
@@ -463,7 +458,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       equalityCols = Seq(spec.col), stats = foldStats(extra, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = merged,
       partSpec = spec.render,
-      fileBlooms = perFileBlooms(dir, files, bloomCols),
+      fileBlooms = perFileBlooms(files, bloomCols),
       fileRows = fileRowCounts(files), assignRowIds = true)
   }
 
@@ -550,6 +545,27 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }
+  }
+
+  /** `spark.read.parquet(files)` with the scan schema read from the
+    * footer of `files.head` on the driver, converted exactly as Spark's
+    * own inference converts it. Without a schema, Spark runs a job per
+    * read just to infer it; with this, building a read plan runs none.
+    * Sound because Spark with mergeSchema off also samples one file,
+    * and every caller passes files sharing one physical schema. The
+    * footer, not the log, is the source: files physically carry columns
+    * the recorded schema leaves out (lineage, dropped-column
+    * pass-through).
+    */
+  private def readParquet(files: Seq[String]): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(files.head)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile
+        .fromPath(path, spark.sessionState.newHadoopConf()))
+    val footer = try new org.apache.parquet.hadoop.Footer(path, r.getFooter) finally r.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(files: _*)
   }
 
   private def partValueFromPath(f: String, dim: Int): Option[String] = {
@@ -987,10 +1003,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       return entries.lastOption.map(_.seq).getOrElse(-1L)
     val fromPos =
       if (posFiles.isEmpty) None
-      else Some(spark.read.parquet(posFiles: _*).select(col(FileCol), col(PosCol)))
+      else Some(readParquet(posFiles).select(col(FileCol), col(PosCol)))
     val fromDv =
       if (dvFiles.isEmpty) None
-      else Some(dvPositionsOf(spark.read.parquet(dvFiles.map(_._1): _*)))
+      else Some(dvPositionsOf(readParquet(dvFiles.map(_._1))))
     val addr = (fromPos.toSeq ++ fromDv.toSeq).reduce(_.unionByName(_))
     // validated like every state-dependent rewrite: a positional delete
     // committed after this fold's read would be superseded WITHOUT being
@@ -1009,12 +1025,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val delDir = newShardDir("deletes")
     keys.select(equalityCols.map(col): _*).distinct().write.parquet(delDir.toString)
     val files = parquetFilesIn(dDir)
-    val (fs, strCols) = perFileStats(dDir, files, statsCols)
+    val (fs, strCols) = perFileStats(files, statsCols)
     log.commit("mixed", dataFiles = files,
       deleteFiles = parquetFilesIn(delDir), equalityCols = equalityCols,
       stats = foldStats(fs, statsCols, strCols),
       schemaJson = schemaJson, fileStats = fs,
-      fileBlooms = perFileBlooms(dDir, files, bloomCols),
+      fileBlooms = perFileBlooms(files, bloomCols),
       fileRows = fileRowCounts(files), assignRowIds = true,
       txnMarker = txnMarker)
   }
@@ -1477,15 +1493,15 @@ final class GraftTable(spark: SparkSession, val root: Path) {
             if (CommitLog.isPositionalFlavor(e.equalityCols)) {
               val addrs =
                 if (e.equalityCols == CommitLog.DvCols)
-                  dvPositionsOf(spark.read.parquet(e.deleteFiles: _*))
-                else spark.read.parquet(e.deleteFiles: _*)
+                  dvPositionsOf(readParquet(e.deleteFiles))
+                else readParquet(e.deleteFiles)
               readPrunedState(CommitLog.stateFrom(pre), pre, keepLineage = true)
                 .withColumn(FileCol, fileKey(col(FileCol)))
                 .join(addrs.withColumn(FileCol, fileKey(col(FileCol))),
                   Seq(FileCol, PosCol), "left_semi")
                 .drop(FileCol, PosCol)
             } else {
-              val keys = spark.read.parquet(e.deleteFiles: _*)
+              val keys = readParquet(e.deleteFiles)
               readPrunedState(CommitLog.stateFrom(pre), pre)
                 .join(keys, e.equalityCols, "left_semi")
             }
@@ -1680,13 +1696,13 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     if (deleteFiles.nonEmpty || !uniformSchema || schemaChanged) {
       applySet(fullView).write.parquet(dir.toString)
       val files = parquetFilesIn(dir)
-      val (fs, strCols) = perFileStats(dir, files, statsCols)
+      val (fs, strCols) = perFileStats(files, statsCols)
       val (mrows, mids) = physMarkers(files, fullMat)
       return log.commit("replace", dataFiles = files,
         stats = foldStats(fs, statsCols, strCols),
         schemaJson = materializedSchemaJson(applySet(fullView)),
         fileStats = fs,
-        fileBlooms = perFileBlooms(dir, files, bloomCols),
+        fileBlooms = perFileBlooms(files, bloomCols),
         fileRows = mrows, fileRowIds = mids,
         rowIdHigh = CommitLog.nextRowId(entries),
         expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
@@ -1698,8 +1714,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val (src, mat) = rewriteSource(entries, (affected, Nil))
     applySet(src).write.parquet(dir.toString)
     val newFiles = parquetFilesIn(dir)
-    val (newStats, _) = perFileStats(dir, newFiles, statsCols)
-    val newBlooms = perFileBlooms(dir, newFiles, bloomCols)
+    val (newStats, _) = perFileStats(newFiles, statsCols)
+    val newBlooms = perFileBlooms(newFiles, bloomCols)
     val (keptStats, keptBlooms) = adoptedMeta(entries, kept)
     val (keptRows, keptIds) = adoptedLineage(entries, kept)
     val padStats =
@@ -1766,13 +1782,13 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       val (fullView, fullMat) = rewriteSource(entries, state)
       fullView.filter(retain).write.parquet(dir.toString)
       val files = parquetFilesIn(dir)
-      val (fs, strCols) = perFileStats(dir, files, statsCols)
+      val (fs, strCols) = perFileStats(files, statsCols)
       val (mrows, mids) = physMarkers(files, fullMat)
       val seq = log.commit("replace", dataFiles = files,
         stats = foldStats(fs, statsCols, strCols),
         schemaJson = schemaJson,
         fileStats = fs,
-        fileBlooms = perFileBlooms(dir, files, bloomCols),
+        fileBlooms = perFileBlooms(files, bloomCols),
         fileRows = mrows, fileRowIds = mids,
         rowIdHigh = CommitLog.nextRowId(entries),
         expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
@@ -1806,8 +1822,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         src.filter(retain).write.parquet(dir.toString)
         (parquetFilesIn(dir), m)
       }
-    val (newStats0, _) = perFileStats(dir, newFiles, statsCols)
-    val newBlooms0 = perFileBlooms(dir, newFiles, bloomCols)
+    val (newStats0, _) = perFileStats(newFiles, statsCols)
+    val newBlooms0 = perFileBlooms(newFiles, bloomCols)
     val (keptStats, keptBlooms) = adoptedMeta(entries, kept)
     val (keptRows, keptIds) = adoptedLineage(entries, kept)
     val padStats =
@@ -2332,7 +2348,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // before a column was added contribute nulls for it; alignByFieldId
     // first maps each epoch's names/types onto the current schema by id.
     def readEpoch(seq: Long, files: Seq[String], bases: Map[String, Long]): DataFrame = {
-      val raw0 = spark.read.parquet(files: _*)
+      val raw0 = readParquet(files)
       val hasPhys = raw0.columns.contains(RowIdPhys)
       // physically materialized lineage (rewrites carry it) is internal:
       // it never reaches a plain read's output
@@ -2375,7 +2391,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           .withColumn(LastSeqCol, lit(seq))
       }
     }
-    val data = dataFiles
+    val scanned = dataFiles
       .groupBy(_._2).toSeq.sortBy(_._1)
       .flatMap { case (seq, files) =>
         val marked: Map[String, Long] = byEntrySeq.get(seq)
@@ -2394,6 +2410,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           .map(fs => readEpoch(seq, fs.map(_._1), bases))
       }
       .reduce(_.unionByName(_, allowMissingColumns = true))
+    // a current column absent from EVERY scanned epoch (a pruned read
+    // that opens only files written before the column was added) still
+    // reads null: the output schema must not depend on what was pruned
+    val data = current.map(_.fields.toSeq).getOrElse(Nil)
+      .filterNot(f => scanned.columns.contains(f.name))
+      .foldLeft(scanned)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
     val result = deleteFiles.groupBy(x => (x._2, x._3)).toSeq.sortBy(_._1._1)
       .foldLeft(data) { case (acc, ((dseq, eqCols), files)) =>
         if (eqCols == CommitLog.DvCols) {
@@ -2403,7 +2425,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           // immutable rows, and files appended after the DV are simply
           // absent from its map (left join keeps them). try_element_at:
           // an ordinal past the bitmap's tail means "not deleted".
-          val dv = spark.read.parquet(files.map(_._1): _*)
+          val dv = readParquet(files.map(_._1))
             .select(fileKey(col(FileCol)).as("_dvf"), col(DvWordsCol).as("_dvw"))
           acc.join(broadcast(dv), fileKey(col(FileCol)) === col("_dvf"), "left")
             .filter(col("_dvw").isNull ||
@@ -2416,7 +2438,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           // positional flavor: drop exactly the addressed rows. The seq
           // guard is redundant (files are immutable, an address can only
           // name a row that predates the delete) but kept for symmetry.
-          val dels = spark.read.parquet(files.map(_._1): _*)
+          val dels = readParquet(files.map(_._1))
             .select(fileKey(col(FileCol)).as(s"_d$FileCol"), col(PosCol).as(s"_d$PosCol"))
           acc.join(dels,
             fileKey(col(FileCol)) === col(s"_d$FileCol") && col(PosCol) === col(s"_d$PosCol") &&
@@ -2434,7 +2456,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           }
           // prefix the delete-side keys so the anti-join condition is
           // unambiguous; left_anti output keeps only left columns.
-          val dels = spark.read.parquet(files.map(_._1): _*)
+          val dels = readParquet(files.map(_._1))
             .select(eqCols.map(c => col(c).as(s"_d_${toCurrent.getOrElse(c, c)}")): _*)
           // strictly-less: an equality delete applies to data committed
           // BEFORE it — data in the same (mixed) commit is untouched,
@@ -2585,12 +2607,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val (view, mat) = rewriteSource(entries, CommitLog.stateFrom(entries))
     view.write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(dir, files, statsCols)
+    val (fs, strCols) = perFileStats(files, statsCols)
     val (mrows, mids) = physMarkers(files, mat)
     log.commit("replace", dataFiles = files,
       stats = foldStats(fs, statsCols, strCols),
       schemaJson = materializedSchemaJson(view), fileStats = fs,
-      fileBlooms = perFileBlooms(dir, files, bloomCols),
+      fileBlooms = perFileBlooms(files, bloomCols),
       fileRows = mrows, fileRowIds = mids,
       rowIdHigh = CommitLog.nextRowId(entries),
       expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
@@ -2624,7 +2646,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val partStat: Seq[Map[String, (String, String)]] = files.map { f =>
       partValueFromPath(f, 0).map(v => pcol -> (v, v)).toMap
     }
-    val (extra, strCols) = perFileStats(dir, files, statsCols)
+    val (extra, strCols) = perFileStats(files, statsCols)
     val merged =
       if (extra.isEmpty) partStat
       else partStat.zip(extra).map { case (a, b) => a ++ b }
@@ -2692,8 +2714,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val (packSrc, packMat) = rewriteSource(entries, (small.map(x => (x._1, x._2)), Nil))
     packSrc.repartition(outFiles).write.parquet(dir.toString)
     val newFiles = parquetFilesIn(dir)
-    val (newStats, _) = perFileStats(dir, newFiles, statsCols)
-    val newBlooms = perFileBlooms(dir, newFiles, bloomCols)
+    val (newStats, _) = perFileStats(newFiles, statsCols)
+    val newBlooms = perFileBlooms(newFiles, bloomCols)
     val (keptStats, keptBlooms) = adoptedMeta(entries, kept.map(x => (x._1, x._2)))
     val (keptRows, keptIds) = adoptedLineage(entries, kept.map(x => (x._1, x._2)))
     val padStats =
@@ -2748,7 +2770,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
     if (deleteFiles.nonEmpty || !uniformSchema) return compact(statsCols)
     val files = dataFiles.map(_._1)
-    val (fresh, strCols) = perFileStatsOf(files, statsCols)
+    val (fresh, strCols) = perFileStats(files, statsCols)
     val (oldStats, oldBlooms) = adoptedMeta(entries, dataFiles)
     val (rows, ids) = adoptedLineage(entries, dataFiles)
     val merged = oldStats.zip(fresh).map { case (o, f) => o ++ f }
@@ -2846,7 +2868,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       .sortWithinPartitions(sortCol)
       .write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(dir, files, Seq(sortCol))
+    val (fs, strCols) = perFileStats(files, Seq(sortCol))
     val (mrows, mids) = physMarkers(files, mat)
     log.commit("replace", dataFiles = files,
       stats = foldStats(fs, Seq(sortCol), strCols),
@@ -2914,7 +2936,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       .select(outCols: _*)
       .write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(dir, files, cols)
+    val (fs, strCols) = perFileStats(files, cols)
     val (mrows, mids) = physMarkers(files, mat)
     log.commit("replace", dataFiles = files,
       stats = foldStats(fs, cols, strCols),

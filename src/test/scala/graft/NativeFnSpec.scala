@@ -150,4 +150,34 @@ class NativeFnSpec extends AnyFunSuite {
       .count()
     assert(diff == 0L)
   }
+
+  test("graft_packed_pairs counts pairs in Long up to its guard") {
+    // n = 46342 is the first length whose Int product n*(n-1) wraps
+    // negative; the output array itself (8.6 GB) is too big to build here
+    assert(graft.functions.PairKernel.pairCount(46342) == 1073767311)
+    assert(graft.functions.PairKernel.pairCount(65536) == 2147450880)
+    assert(graft.functions.PairKernel.pairCount(0) == 0)
+    intercept[IllegalArgumentException](graft.functions.PairKernel.pairCount(65537))
+  }
+
+  test("graft_minhash_sig skips null hash elements like its zip_with/array_min HOF") {
+    // a nullable element type (any parquet round trip yields one) is
+    // accepted; a pair with a null half contributes nothing, and a
+    // document with no contributing pair reads 16 nulls
+    val hof = "transform(sequence(0, 15), j -> " +
+      "array_min(zip_with(hs.h1s, hs.h2s, (a, b) -> a + j * b)))"
+    val df = spark.createDataFrame(Seq[(Seq[Option[Long]], Seq[Option[Long]])](
+      (Seq(Some(5L), None, Some(3L)), Seq(Some(1L), Some(9L), Some(4L))),
+      (Seq(Some(7L), Some(2L)), Seq(None, Some(6L))),
+      (Seq(None), Seq(Some(1L))),
+      (Seq(Some(1L), Some(8L)), Seq(Some(2L)))))
+      .toDF("a", "b")
+      .select(struct(col("a").as("h1s"), col("b").as("h2s")).as("hs"))
+    val rows = df.select(
+      call_function("graft_minhash_sig", col("hs")).as("native"), expr(hof).as("hofv"))
+      .collect()
+    rows.foreach(r => assert(r.getSeq[Any](0) == r.getSeq[Any](1)))
+    assert(rows(0).getSeq[Any](0).head == 3L)
+    assert(rows(2).getSeq[Any](0).forall(_ == null))
+  }
 }

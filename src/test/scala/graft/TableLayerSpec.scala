@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import graft.sql.GraftSql
 import graft.table.{CommitLog, GraftCatalog, GraftTable, PartitionSpec, Transform}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Snapshot-lineage assertions for the table layer: append → delete →
@@ -2780,5 +2783,76 @@ class TableLayerSpec extends AnyFunSuite {
     assert(swept == 0, s"vacuum deleted $swept marker(s) a branch still references")
     // the branch still serves the txn's rows (not flipped to presumed-abort)
     assert(t.branch("wip").read().count() == items.count())
+  }
+
+  /** Spark jobs started while `build` runs. The build runs under a job
+    * group the listener keys on; a sentinel job in its own group then
+    * flushes the listener bus (events arrive in order), so every job the
+    * build started has been counted when the sentinel's start arrives.
+    */
+  private def jobsDuring[A](build: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"plan-${java.util.UUID.randomUUID()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "plan build")
+      val out = try build finally sc.clearJobGroup()
+      sc.setJobGroup(s"$tag-sentinel", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(s"$tag-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$tag-sentinel"), "listener never saw the sentinel job")
+      (out, groups.toArray.count(_ == tag))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a read plan starts no Spark job: every delete flavor, schema change, packed file") {
+    val cat = GraftCatalog(spark, Files.createTempDirectory("spec_nojob").toString)
+    cat.createNamespace("ns")
+    val t = cat.createTable("ns", "t")
+    val stats = Seq("count", "name")
+    def rows(lo: Int, hi: Int) = (lo until hi)
+      .map(i => (f"n$i%02d", if (i % 2 == 0) "even" else "odd", i))
+      .toDF("name", "size", "count").repartition(1)
+    // three small appends packed into physical-lineage (-2) files
+    (0 until 3).foreach(k => t.append(rows(10 * k, 10 * k + 10), statsCols = stats))
+    t.compactSmall(targetBytes = 1L << 20, statsCols = stats)
+    assert(t.commitLog.entries().last.fileRowIds.contains(-2L))
+    t.append(rows(30, 40), statsCols = stats)
+    t.addColumn("note", StringType)
+    t.append(rows(40, 50).withColumn("note", concat(lit("x"), col("name"))), statsCols = stats)
+    t.renameColumn("size", "parity")
+    t.append(rows(50, 60).withColumnRenamed("size", "parity").withColumn("note", lit("y")),
+      statsCols = stats)
+    // equality, positional and deletion-vector deletes, in separate groups
+    t.delete(Seq("n03", "n41", "n57").toDF("name"), Seq("name"))
+    t.deleteAt(t.readWithPos().filter(col("count").isin(12, 33)).select("_file", "_pos"))
+    t.deleteVectors(t.readWithPos().filter(col("count").isin(25, 55)).select("_file", "_pos"))
+    val full = t.read()
+    assert(full.count() == 60 - 7)
+    val probes = Seq(3, 12, 15, 41, 44, 55, 56)
+    val cases: Seq[(String, () => DataFrame, DataFrame)] = Seq(
+      ("readEq", () => t.readEq("count", 15), full.filter(col("count") === 15)),
+      ("readRange", () => t.readRange("count", BigDecimal(8), BigDecimal(45)),
+        full.filter(col("count").between(8, 45))),
+      ("readEqIn", () => t.readEqIn("count", probes), full.filter(col("count").isin(probes: _*))),
+      ("readRangeStr", () => t.readRangeStr("name", "n10", "n52"),
+        full.filter(col("name").between("n10", "n52"))),
+      ("GraftSql point SELECT", () => GraftSql.sql(spark, cat, "SELECT * FROM graft.ns.t WHERE count = 44"),
+        full.filter(col("count") === 44)))
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    cases.foreach { case (label, build, want) =>
+      val (df, jobs) = jobsDuring(build())
+      assert(jobs == 0, s"$label: $jobs job(s) started while building the plan")
+      val got = sorted(df)
+      assert(got.nonEmpty && got == sorted(want), label)
+    }
   }
 }
