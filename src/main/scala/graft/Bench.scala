@@ -600,10 +600,10 @@ object Bench {
                 .orderBy(col("csim").desc, col("cid"))))
             .filter(col("crn") <= 4)
             .select(col("probe_id"), col("pv"), col("pn"), col("cid").as("list_id"))
-          // ONE pruned multi-value read (r13) — nprobe unioned readEq
-          // plans paid nprobe log reads + plan builds per probe leg
+          // ONE pruned IN scan — nprobe unioned readEq plans paid nprobe
+          // log reads + plan builds per probe leg
           val lists = pl.select("list_id").distinct().collect().map(_.getLong(0))
-          val cand = t.readEqIn("list_id", lists.toSeq)
+          val cand = t.planScan(s"list_id IN (${lists.mkString(", ")})").read
           val candRows = cand.count()
           val top = cand.join(broadcast(pl), Seq("list_id"))
             .filter(col("vec_id") =!= col("probe_id"))

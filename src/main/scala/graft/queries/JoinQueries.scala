@@ -56,8 +56,8 @@ object JoinQueries extends QueryPack {
     * while the entries still exercise the parser/analyzer front end that
     * pure DataFrame plans bypass.
     */
-  // boundedSort comes from QueryPack (r13: shared across packs; SortProbe
-  // measured 0.89 s -> 0.51 s per run on a representative aggregate)
+  // boundedSort comes from QueryPack (r13: shared across packs; 0.89 s ->
+  // 0.51 s per run on a representative aggregate, OPTIMIZATION_r12/r13)
 
   private def sqlOverViews(s: SparkSession, views: (String, DataFrame)*)(
       sql: String): DataFrame = {

@@ -259,7 +259,7 @@ object MultimodalQueries extends QueryPack {
     * call re-walks the provider registry behind shared synchronization,
     * which SERIALIZES concurrent decode tasks — measured 0.12 ms/doc
     * single-threaded vs 5.3 ms/doc-cpu with 32 threads on the same
-    * loop (WavProbe). The spi.AudioFileReader/Writer types are public
+    * loop (OPTIMIZATION_r12). The spi.AudioFileReader/Writer types are public
     * API and the resolved providers are the very objects AudioSystem
     * dispatches to (stateless parsers, thread-safe by AudioSystem's own
     * concurrent use); behavior is identical, the global lock is gone.

@@ -52,6 +52,15 @@ object TableQueries extends QueryPack {
     GraftTable.createOrReplace(s,
       Files.createTempDirectory(s"graft_$tag").toString)
 
+  /** each (label, WHERE) pair's planned read, tagged `probe` = label and
+    * `files_opened` = the data files that same plan opens.
+    */
+  private def probes(t: GraftTable, byLabel: (String, String)*): DataFrame =
+    byLabel.map { case (label, where) =>
+      val scan = t.planScan(where)
+      scan.read.withColumn("probe", lit(label)).withColumn("files_opened", lit(scan.filesOpened))
+    }.reduce(_ unionByName _)
+
   override def queries: Seq[Q] = Seq(
 
     // A5+A6: parquet write + atomic snapshot append (fast_append,
@@ -394,9 +403,9 @@ object TableQueries extends QueryPack {
       t.append(batch(0), statsCols = Seq("count"))
       t.append(batch(100), statsCols = Seq("count"))
       t.append(batch(200), statsCols = Seq("count"))
-      val opened = t.prunedFileCount("count", BigDecimal(100), BigDecimal(109))
-      t.readRange("count", BigDecimal(100), BigDecimal(109))
-        .withColumn("files_opened", lit(opened))
+      val scan = t.planScan("count BETWEEN 100 AND 109")
+      scan.read
+        .withColumn("files_opened", lit(scan.filesOpened))
         .orderBy("count")
     },
 
@@ -459,15 +468,15 @@ object TableQueries extends QueryPack {
       t.append(batch(2), statsCols = cols, bloomCols = cols) // counts 2,6,10,14,18
       // the range path carries no bloom positions — it is the stats-only
       // comparator for the same point probe
+      def probe(label: String, eq: String, range: String) = {
+        val scan = t.planScan(eq)
+        (label, scan.read.count().toInt, t.planScan(range).filesOpened, scan.filesOpened)
+      }
       Seq(
-        ("count_eq_8", t.readEq("count", 8).count().toInt,
-          t.prunedFileCount("count", BigDecimal(8), BigDecimal(8)),
-          t.prunedFileCountEq("count", 8)),
+        probe("count_eq_8", "count = 8", "count BETWEEN 8 AND 8"),
         // "k4" sits inside BOTH epochs' lexicographic name bounds
         // ([k0,k8] and [k10,k6]) but exists only in the first
-        ("name_eq_k4", t.readEq("name", "k4").count().toInt,
-          t.prunedFileCountStr("name", "k4", "k4"),
-          t.prunedFileCountEq("name", "k4")))
+        probe("name_eq_k4", "name = 'k4'", "name BETWEEN 'k4' AND 'k4'"))
         .toDF("probe", "n_rows", "files_stats_only", "files_bloom")
         .orderBy("probe")
     },
@@ -510,14 +519,7 @@ object TableQueries extends QueryPack {
       t.appendPartitioned(items(s), spec, statsCols = Seq("count"))
       t.appendPartitioned(items(s).withColumn("count", col("count") + 100),
         spec, statsCols = Seq("count"))
-      val eq = t.readEq("count", 15)
-        .withColumn("probe", lit("eq15"))
-        .withColumn("files_opened", lit(t.prunedFileCountEq("count", 15)))
-      val range = t.readRange("count", BigDecimal(100), BigDecimal(119))
-        .withColumn("probe", lit("range100_119"))
-        .withColumn("files_opened",
-          lit(t.prunedFileCount("count", BigDecimal(100), BigDecimal(119))))
-      eq.unionByName(range)
+      probes(t, "eq15" -> "count = 15", "range100_119" -> "count BETWEEN 100 AND 119")
         .select("probe", "name", "size", "count", "files_opened")
         .orderBy("probe", "name")
     },
@@ -547,7 +549,7 @@ object TableQueries extends QueryPack {
       t.delete(Seq("B").toDF("name"), Seq("name")) // pending MoR delete
       t.compactPartitioned(spec, statsCols = Seq("count"))
       t.read().select("name", "size", "count")
-        .withColumn("files_opened_eq10", lit(t.prunedFileCountEq("count", 10)))
+        .withColumn("files_opened_eq10", lit(t.planScan("count = 10").filesOpened))
         .orderBy("name", "count")
     },
 
@@ -808,14 +810,7 @@ object TableQueries extends QueryPack {
       t.appendPartitioned(rows,
         Seq(PartitionSpec("day", Transform.Identity),
           PartitionSpec("val", Transform.Truncate(5))), Nil, Nil)
-      val eq = t.readEq("day", 1)
-        .withColumn("probe", lit("eq_day1"))
-        .withColumn("files_opened", lit(t.prunedFileCountEq("day", 1)))
-      val range = t.readRange("val", BigDecimal(0), BigDecimal(4))
-        .withColumn("probe", lit("range_val0_4"))
-        .withColumn("files_opened",
-          lit(t.prunedFileCount("val", BigDecimal(0), BigDecimal(4))))
-      eq.unionByName(range)
+      probes(t, "eq_day1" -> "day = 1", "range_val0_4" -> "val BETWEEN 0 AND 4")
         .select("probe", "name", "day", "val", "files_opened")
         .orderBy("probe", "name")
     },
@@ -840,12 +835,12 @@ object TableQueries extends QueryPack {
         .toDF("name", "count").repartition(2)
       (0 until 3).foreach(b => t.append(batch(b)))
       t.delete(Seq("k0").toDF("name"), Seq("name"))
-      val before = t.prunedFileCount("count", BigDecimal(29), BigDecimal(29))
+      val before = t.planScan("count BETWEEN 29 AND 29").filesOpened
       t.compactSorted("count", numFiles = 3)
-      val after = t.prunedFileCount("count", BigDecimal(29), BigDecimal(29))
-      t.readRange("count", BigDecimal(29), BigDecimal(29))
+      val after = t.planScan("count BETWEEN 29 AND 29")
+      after.read
         .withColumn("files_before", lit(before))
-        .withColumn("files_after", lit(after))
+        .withColumn("files_after", lit(after.filesOpened))
     },
 
     // MERGE-by-key upsert: one atomic commit equality-deletes the incoming
@@ -1085,14 +1080,14 @@ object TableQueries extends QueryPack {
       val (e1, e2) = grid.partition { case (x, y, _) => (x + y) % 2 == 0 }
       t.append(e1.toDF("x", "y", "v").repartition(2), statsCols = Seq("x", "y"))
       t.append(e2.toDF("x", "y", "v").repartition(2), statsCols = Seq("x", "y"))
-      val before = t.prunedFileCount("x", BigDecimal(0), BigDecimal(3))
+      val before = t.planScan("x BETWEEN 0 AND 3").filesOpened
       t.compactZOrder(Seq("x", "y"), numFiles = 4)
-      val afterX = t.prunedFileCount("x", BigDecimal(0), BigDecimal(3))
-      val afterY = t.prunedFileCount("y", BigDecimal(0), BigDecimal(3))
-      t.readRange("x", BigDecimal(0), BigDecimal(3))
+      val afterX = t.planScan("x BETWEEN 0 AND 3")
+      val afterY = t.planScan("y BETWEEN 0 AND 3").filesOpened
+      afterX.read
         .agg(count(lit(1)).as("n"), sum(col("v")).cast("long").as("sum_v"))
         .withColumn("files_before", lit(before))
-        .withColumn("files_x_after", lit(afterX))
+        .withColumn("files_x_after", lit(afterX.filesOpened))
         .withColumn("files_y_after", lit(afterY))
     },
 
@@ -1166,17 +1161,8 @@ object TableQueries extends QueryPack {
         PartitionSpec("count", Transform.Truncate(10)), statsCols = Seq("count"))
       t.appendPartitioned(items(s).withColumn("count", col("count") + 100),
         PartitionSpec("count", Transform.Truncate(100)), statsCols = Seq("count"))
-      val eq15 = t.readEq("count", 15)
-        .withColumn("probe", lit("eq15"))
-        .withColumn("files_opened", lit(t.prunedFileCountEq("count", 15)))
-      val eq110 = t.readEq("count", 110)
-        .withColumn("probe", lit("eq110"))
-        .withColumn("files_opened", lit(t.prunedFileCountEq("count", 110)))
-      val range = t.readRange("count", BigDecimal(10), BigDecimal(19))
-        .withColumn("probe", lit("range10_19"))
-        .withColumn("files_opened",
-          lit(t.prunedFileCount("count", BigDecimal(10), BigDecimal(19))))
-      eq15.unionByName(eq110).unionByName(range)
+      probes(t, "eq15" -> "count = 15", "eq110" -> "count = 110",
+          "range10_19" -> "count BETWEEN 10 AND 19")
         .select("probe", "name", "size", "count", "files_opened")
         .orderBy("probe", "name")
     },
@@ -1266,13 +1252,7 @@ object TableQueries extends QueryPack {
         .toDF("name", "size", "count").repartition(1), statsCols = Seq("name"))
       t.append(Seq(("nina", "x", 4), ("oscar", "x", 5), ("zed", "x", 6))
         .toDF("name", "size", "count").repartition(1), statsCols = Seq("name"))
-      val range = t.readRangeStr("name", "a", "c")
-        .withColumn("probe", lit("range_a_c"))
-        .withColumn("files_opened", lit(t.prunedFileCountStr("name", "a", "c")))
-      val eq = t.readEq("name", "oscar")
-        .withColumn("probe", lit("eq_oscar"))
-        .withColumn("files_opened", lit(t.prunedFileCountEq("name", "oscar")))
-      range.unionByName(eq)
+      probes(t, "range_a_c" -> "name BETWEEN 'a' AND 'c'", "eq_oscar" -> "name = 'oscar'")
         .select("probe", "name", "count", "files_opened")
         .orderBy("probe", "name")
     },
@@ -1659,9 +1639,9 @@ object TableQueries extends QueryPack {
       t.append(items(s).repartition(1))                                   // counts 2..20
       t.append(items(s).withColumn("count", col("count") + 100)
         .repartition(1))                                                  // counts 102..120
-      val blind = t.prunedFileCount("count", BigDecimal(100), BigDecimal(130))
+      val blind = t.planScan("count BETWEEN 100 AND 130").filesOpened
       t.recomputeStats(Seq("count"))
-      val after = t.prunedFileCount("count", BigDecimal(100), BigDecimal(130))
+      val after = t.planScan("count BETWEEN 100 AND 130").filesOpened
       t.read()
         .withColumn("files_blind", lit(blind))
         .withColumn("files_after", lit(after))
@@ -1732,7 +1712,7 @@ object TableQueries extends QueryPack {
     // codebook). Serve: a probe ranks the 16 centroids (metadata-sized
     // planning, like Iceberg manifest pruning — the only collect is the
     // ≤ nprobe·probes list-id set), then reads ONLY its nprobe=4 nearest
-    // lists via partition-pruned readEq — opening nprobe/nlist of the
+    // lists via one partition-pruned IN scan — opening nprobe/nlist of the
     // index files — and re-scores those candidates exactly. At 100 TB:
     // nlist scales with N to bound list size, probes batch into a
     // broadcast join keyed on list_id, and index maintenance stays an
@@ -1797,9 +1777,9 @@ object TableQueries extends QueryPack {
         .select(col("probe_id"), col("pv"), col("pn"), col("cid").as("list_id"))
       // index planning: the distinct list-id set (≤ nprobe·probes rows,
       // metadata-sized) decides which partitions to open — ONE pruned
-      // multi-value read (r13), not nprobe unioned readEq plans
+      // IN scan, not nprobe unioned readEq plans
       val lists = probeLists.select("list_id").distinct().collect().map(_.getLong(0))
-      val cand = t.readEqIn("list_id", lists.toSeq)
+      val cand = t.planScan(s"list_id IN (${lists.mkString(", ")})").read
       cand.join(broadcast(probeLists), Seq("list_id"))
         .filter(col("vec_id") =!= col("probe_id"))
         .withColumn("score", cosine(dot(col("pv"), col("embedding")), col("pn"), col("vn")))
@@ -1878,7 +1858,7 @@ object TableQueries extends QueryPack {
       require(extFiles.forall(f => !f.startsWith(t.root.toString)),
         "fixture broke: legacy files must live outside the table root")
       // adoption stats prune: a count>200 probe opens no native file
-      require(t.prunedFileCount("count", BigDecimal(202), BigDecimal(10000)) <= 2,
+      require(t.planScan("count BETWEEN 202 AND 10000").filesOpened <= 2,
         "adopted per-file stats must prune the native files")
       t.read().orderBy("name", "count")
     },

@@ -1,11 +1,11 @@
 package graft.sql
 
-import graft.table.{GraftCatalog, PartitionSpec, Transform}
+import graft.table.{GraftCatalog, PartitionSpec, ScanPlan, Transform}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedProcedure, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
-import org.apache.spark.sql.catalyst.expressions.{And, Between, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, NamedArgumentExpression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedProcedure, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression, Literal, NamedArgumentExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AlterColumns, Assignment, Call, CreateNamespace, CreateTableAsSelect, CreateTable, DeleteAction, DeleteFromTable, DescribeRelation, DropTable, Filter, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, RenameColumn, ReplaceTableAsSelect, SetTableProperties, ShowCreateTable, ShowTableProperties, ShowTables, SubqueryAlias, TableSpecBase, UnresolvedHint, UnresolvedTableSpec, UnresolvedWith, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, Transform => V2Transform}
 import org.apache.spark.sql.execution.command.ExplainCommand
@@ -747,65 +747,37 @@ object GraftSql {
     * I/O); single-column IN → multi-key equality delete; closed numeric
     * range → stats-pruned deleteWhereRange (aligned files drop
     * metadata-only). Anything else fails loudly — a silent full-table
-    * rewrite is never the right surprise at 100 TB.
+    * rewrite is never the right surprise at 100 TB. The shapes come from
+    * the scan planner's conjunct split ([[ScanPlan.conjuncts]]); a
+    * strict bound, or a conjunct beside the range, is anything else.
     */
   private def deleteByPredicate(spark: SparkSession, t: graft.table.GraftTable,
       cond: Expression): Long = {
-    val conj = splitConj(cond)
-    val eqs = conj.collect {
-      case EqualTo(a: UnresolvedAttribute, l: Literal) => (a.name, l)
-      case EqualTo(l: Literal, a: UnresolvedAttribute) => (a.name, l)
-    }
-    val ins = conj.collect {
-      case In(a: UnresolvedAttribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        (a.name, vs.map(v => lit2Scala(v.asInstanceOf[Literal])))
-    }
-    // flatMap keeps the BETWEEN match total: a non-literal bound falls
-    // through to None and the final unsupported-DELETE refusal, never a
-    // MatchError (driver ADVICE r10)
-    val los = conj.flatMap {
-      case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) => Some((a.name, lit2Scala(l)))
-      case LessThanOrEqual(l: Literal, a: UnresolvedAttribute) => Some((a.name, lit2Scala(l)))
-      case Between(a: UnresolvedAttribute, lo: Literal, _, _) => Some((a.name, lit2Scala(lo)))
-      // the parser emits BETWEEN as an unresolved function call
-      case f: UnresolvedFunction if f.nameParts == Seq("between") =>
-        f.arguments match {
-          case Seq(a: UnresolvedAttribute, lo: Literal, _: Literal) =>
-            Some((a.name, lit2Scala(lo)))
-          case _ => None
-        }
-      case _ => None
-    }
-    val his = conj.flatMap {
-      case LessThanOrEqual(a: UnresolvedAttribute, l: Literal) => Some((a.name, lit2Scala(l)))
-      case GreaterThanOrEqual(l: Literal, a: UnresolvedAttribute) => Some((a.name, lit2Scala(l)))
-      case Between(a: UnresolvedAttribute, _, hi: Literal, _) => Some((a.name, lit2Scala(hi)))
-      case f: UnresolvedFunction if f.nameParts == Seq("between") =>
-        f.arguments match {
-          case Seq(a: UnresolvedAttribute, _: Literal, hi: Literal) =>
-            Some((a.name, lit2Scala(hi)))
-          case _ => None
-        }
-      case _ => None
-    }
-    (eqs, ins, los, his) match {
-      case (es, Seq(), Seq(), Seq()) if es.nonEmpty && es.size == conj.size &&
-          es.map(_._1).distinct.size == es.size =>
+    val conj = ScanPlan.conjuncts(cond)
+    val eqs = conj.collect { case ScanPlan.Eq(a, l) => (a.name, l) }
+    val bounds = conj.flatMap { case ScanPlan.Range(bs) => bs; case _ => Nil }
+    def unsupported = new IllegalArgumentException(
+      "DELETE supports `<col> = <lit> [AND ...]` (equality delete), " +
+        "`<col> IN (<lits>)`, or `<col> BETWEEN <lo> AND <hi>`; got: " + cond.sql)
+    conj match {
+      case _ if eqs.size == conj.size && eqs.map(_._1).distinct.size == eqs.size =>
         val keys = spark.createDataFrame(
-          java.util.List.of(Row(es.map(e => lit2Scala(e._2)): _*)),
-          StructType(es.map(e => StructField(e._1, e._2.dataType))))
-        t.delete(keys, es.map(_._1))
-      case (Seq(), Seq((c, vs)), Seq(), Seq()) if conj.size == 1 =>
-        val dt = conj.head.asInstanceOf[In].list.head.dataType
+          java.util.List.of(Row(eqs.map(e => lit2Scala(e._2)): _*)),
+          StructType(eqs.map(e => StructField(e._1, e._2.dataType))))
+        t.delete(keys, eqs.map(_._1))
+      case Seq(ScanPlan.InList(a, vs)) =>
         val keys = spark.createDataFrame(
-          vs.map(v => Row(v)).asJava, StructType(Seq(StructField(c, dt))))
-        t.delete(keys, Seq(c))
-      case (Seq(), Seq(), Seq((cl, lo)), Seq((ch, hi)))
-          if cl == ch && conj.size <= 2 => // one Between or a >=/<= pair
-        t.deleteWhereRange(cl, lo, hi).seq
-      case _ => throw new IllegalArgumentException(
-        "DELETE supports `<col> = <lit> [AND ...]` (equality delete), " +
-          "`<col> IN (<lits>)`, or `<col> BETWEEN <lo> AND <hi>`; got: " + cond.sql)
+          vs.map(v => Row(lit2Scala(v))).asJava,
+          StructType(Seq(StructField(a.name, vs.head.dataType))))
+        t.delete(keys, Seq(a.name))
+      // one BETWEEN or a >=/<= pair, nothing else
+      case _ if conj.forall(_.isInstanceOf[ScanPlan.Range]) && !bounds.exists(_.strict) =>
+        bounds.partition(_.lower) match {
+          case (Seq(lo), Seq(hi)) if lo.col.name == hi.col.name =>
+            t.deleteWhereRange(lo.col.name, lit2Scala(lo.value), lit2Scala(hi.value)).seq
+          case _ => throw unsupported
+        }
+      case _ => throw unsupported
     }
   }
 
@@ -910,13 +882,12 @@ object GraftSql {
         w.copy(cteRelations = w.cteRelations.map { case (n, sa, maxRec) =>
           (n, sa.copy(child = substitute(spark, cat, sa.child, prefix, notes)), maxRec)
         })
-      // WHERE directly over one graft relation: route literal equality /
-      // range conjuncts through the table layer's manifest-level file
-      // pruning (readEq/readRange — the hidden-partitioning + per-file-
-      // stats path), so a SQL point probe opens only the matching files
-      // instead of every live file. Parquet row-group pushdown still
-      // applies on the survivors; the original Filter stays in the tree,
-      // so an over-eager prune can never change results — pruning only
+      // WHERE directly over one graft relation: plan the table scan from
+      // the WHERE itself (GraftTable.planScan — per-file stats, every
+      // partition dimension, blooms), so a SQL point probe opens only the
+      // matching files instead of every live file. Parquet row-group
+      // pushdown still applies on the survivors; the original Filter
+      // stays in the tree, so pruning can never change results — it only
       // removes files whose recorded stats PROVE they cannot match.
       case f: Filter =>
         val (rel, rebuild): (Option[UnresolvedRelation], LogicalPlan => LogicalPlan) =
@@ -932,11 +903,11 @@ object GraftSql {
           case Some(u) if isGraft(u.multipartIdentifier, prefix) &&
               u.multipartIdentifier.length <= 3 =>
             val (ns, tbl) = splitIdent(u.multipartIdentifier, prefix)
-            val pruned = sniffedRead(spark, cat.openTable(ns, tbl),
-              s"$prefix.$ns.$tbl", f.condition, notes)
+            val pruned = prunedRead(cat.openTable(ns, tbl), s"$prefix.$ns.$tbl",
+              unqualified(f.condition, qualifiersOf(f.child), Set.empty), notes)
             pruned match {
               case Some(p) => f.copy(child = rebuild(p))
-              case None => f // no usable conjunct: the relation case below runs
+              case None => f // nothing prunes: the relation case below runs
             }
           case _ => f
         }
@@ -963,115 +934,23 @@ object GraftSql {
     }
   }
 
-  /** Sniff a parsed WHERE (sitting directly over one graft relation) for
-    * the table layer's native prune shapes, and return the PRUNED read
-    * plan when one applies: `col = <lit>` → readEq (per-file stats,
-    * blooms, and every partition dimension incl. bucket), closed or open
-    * numeric range → readRange, string range → readRangeStr (hidden
-    * partitioning: the caller names only the source column). First
-    * usable conjunct wins — the remaining conjuncts still filter, they
-    * just don't prune. Columns are matched by EXACT name against the
-    * snapshot schema; a miss (or a non-literal) simply falls back to the
-    * full snapshot scan. At 100 TB this is the difference between a SQL
-    * point probe opening 3 files and opening 300,000.
+  /** The pruned read for a WHERE sitting directly over one graft
+    * relation, its relation qualifiers already stripped: the table's
+    * scan plan for that WHERE when any conjunct prunes, else None (the
+    * full snapshot scan). Every conjunct on a snapshot column prunes —
+    * equalities, ranges and the first IN together — and the rest only
+    * filter. The plan's `scan` carries no residual filter: the caller's
+    * Filter stays above it, and may reference an outer query's columns.
     */
-  private def sniffedRead(spark: SparkSession, t: graft.table.GraftTable,
-      relName: String, cond: Expression,
+  private def prunedRead(t: graft.table.GraftTable, relName: String, cond: Expression,
       notes: Option[scala.collection.mutable.ArrayBuffer[String]]): Option[LogicalPlan] = {
-    val fields: Set[String] =
-      t.schemaAt().map(_.fields.map(_.name).toSet).getOrElse(Set.empty)
-    def colOf(a: UnresolvedAttribute): Option[String] =
-      Some(a.nameParts.last).filter(fields.contains)
-    // prune-safe literal kinds: numeric + string match the stats/
-    // partition-value renderings the write side records; anything else
-    // (timestamps, intervals, binary) falls back to the unpruned scan
-    def eqLit(l: Literal): Option[Any] = lit2Scala(l) match {
-      case v: Int => Some(v)
-      case v: Long => Some(v)
-      case v: String => Some(v)
-      case v: java.math.BigDecimal => Some(BigDecimal(v))
-      case _ => None
-    }
-    def numLit(l: Literal): Option[BigDecimal] = lit2Scala(l) match {
-      case v: Int => Some(BigDecimal(v))
-      case v: Long => Some(BigDecimal(v))
-      case v: java.math.BigDecimal => Some(BigDecimal(v))
-      case _ => None
-    }
-    def strLit(l: Literal): Option[String] = lit2Scala(l) match {
-      case v: String => Some(v)
-      case _ => None
-    }
-    val conj = splitConj(cond)
-    // `opened` is by name: each count is another log read plus a state
-    // fold, paid only when EXPLAIN asked for notes
-    def note(col: String, opened: => Int): Unit = notes.foreach { ns =>
-      val total = t.commitLog.state()._1.size
-      ns += s"$relName: probe on '$col' prunes to $opened of $total data files " +
-        "(per-file stats + partition values + blooms)"
-    }
-    // 1. equality probe — the strongest prune (stats + bucket + bloom)
-    val eq = conj.iterator.flatMap {
-      case EqualTo(a: UnresolvedAttribute, l: Literal) =>
-        for { c <- colOf(a); v <- eqLit(l) } yield (c, v)
-      case EqualTo(l: Literal, a: UnresolvedAttribute) =>
-        for { c <- colOf(a); v <- eqLit(l) } yield (c, v)
-      case _ => None
-    }.nextOption()
-    eq match {
-      case Some((c, v)) =>
-        note(c, t.prunedFileCountEq(c, v))
-        return Some(t.readEq(c, v).queryExecution.analyzed)
-      case None => ()
-    }
-    // 2. range probe: a closed BETWEEN, or any >=/>/<=/<  pair on one
-    // column (strict bounds prune with their closed superset — sound,
-    // the residual Filter still applies the strict comparison)
-    def bounds(colLit: PartialFunction[Expression, Option[(String, Literal)]])
-        : Map[String, Literal] =
-      conj.flatMap(e => colLit.lift(e).flatten).toMap
-    val nLos = bounds {
-      case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) => colOf(a).map(_ -> l)
-      case GreaterThan(a: UnresolvedAttribute, l: Literal) => colOf(a).map(_ -> l)
-      case LessThanOrEqual(l: Literal, a: UnresolvedAttribute) => colOf(a).map(_ -> l)
-      case LessThan(l: Literal, a: UnresolvedAttribute) => colOf(a).map(_ -> l)
-      case Between(a: UnresolvedAttribute, lo: Literal, _, _) => colOf(a).map(_ -> lo)
-      case f: UnresolvedFunction if f.nameParts == Seq("between") =>
-        f.arguments match {
-          case Seq(a: UnresolvedAttribute, lo: Literal, _: Literal) =>
-            colOf(a).map(_ -> lo)
-          case _ => None
-        }
-    }
-    val nHis = bounds {
-      case LessThanOrEqual(a: UnresolvedAttribute, l: Literal) => colOf(a).map(_ -> l)
-      case LessThan(a: UnresolvedAttribute, l: Literal) => colOf(a).map(_ -> l)
-      case GreaterThanOrEqual(l: Literal, a: UnresolvedAttribute) => colOf(a).map(_ -> l)
-      case GreaterThan(l: Literal, a: UnresolvedAttribute) => colOf(a).map(_ -> l)
-      case Between(a: UnresolvedAttribute, _, hi: Literal, _) => colOf(a).map(_ -> hi)
-      case f: UnresolvedFunction if f.nameParts == Seq("between") =>
-        f.arguments match {
-          case Seq(a: UnresolvedAttribute, _: Literal, hi: Literal) =>
-            colOf(a).map(_ -> hi)
-          case _ => None
-        }
-    }
-    val ranged = nLos.keySet.intersect(nHis.keySet).toSeq.sorted.iterator.flatMap { c =>
-      (numLit(nLos(c)), numLit(nHis(c))) match {
-        case (Some(lo), Some(hi)) =>
-          Some((c, () => t.prunedFileCount(c, lo, hi),
-            () => t.readRange(c, lo, hi)))
-        case _ => (strLit(nLos(c)), strLit(nHis(c))) match {
-          case (Some(lo), Some(hi)) =>
-            Some((c, () => t.prunedFileCountStr(c, lo, hi),
-              () => t.readRangeStr(c, lo, hi)))
-          case _ => None
-        }
-      }
-    }.nextOption()
-    ranged.map { case (c, opened, build) =>
-      note(c, opened())
-      build().queryExecution.analyzed
+    val plan = t.planScan(cond)
+    if (plan.pruneCols.isEmpty) None
+    else {
+      notes.foreach(_ += s"$relName: probe on ${plan.pruneCols.map(c => s"'$c'").mkString(", ")} " +
+        s"prunes to ${plan.filesOpened} of ${plan.filesLive} data files " +
+        "(per-file stats + partition values + blooms)")
+      Some(plan.scan.queryExecution.analyzed)
     }
   }
 

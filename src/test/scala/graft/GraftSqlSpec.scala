@@ -308,6 +308,22 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(GraftSql.sql(spark, cat, "SELECT * FROM graft.ns.t").count() == 5)
   }
 
+  test("DELETE refuses a range with a strict bound or a filter beside it") {
+    val cat = freshCat()
+    cat.createNamespace("ns")
+    cat.createTable("ns", "t").append(items)
+    // routing the range alone would drop the other conjunct's filter and
+    // delete rows it excludes (here: every row)
+    for (where <- Seq("count BETWEEN 1 AND 25 AND name LIKE 'A%'",
+        "count > 15 AND count BETWEEN 1 AND 25")) {
+      val e = intercept[IllegalArgumentException] {
+        GraftSql.sql(spark, cat, s"DELETE FROM graft.ns.t WHERE $where")
+      }
+      assert(e.getMessage.contains("DELETE supports"), e.getMessage)
+    }
+    assert(GraftSql.sql(spark, cat, "SELECT * FROM graft.ns.t").count() == 5)
+  }
+
   test("CALL graft.system.* maintenance procedures map onto the table layer's ops") {
     val cat = freshCat()
     cat.createNamespace("ns")
@@ -624,20 +640,28 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(ddl.contains("'quality.tier' = 'gold'"), ddl)
   }
 
-  test("EXPLAIN shows the pushed filter AND the manifest-level file prune " +
-      "for a governed read") {
+  /** graft.ns.t partitioned by truncate(10, count), loaded through SQL
+    * as three partition-separated batches (counts +0, +100, +200), so
+    * probes have files to prune.
+    */
+  private def partitionedCat(): GraftCatalog = {
     val cat = freshCat()
     GraftSql.sql(spark, cat, "CREATE NAMESPACE graft.ns")
     GraftSql.sql(spark, cat,
       """CREATE TABLE graft.ns.t (name STRING, size STRING, count INT)
         |PARTITIONED BY (truncate(10, count))""".stripMargin)
-    // three partition-separated batches so a point probe has files to prune
     for (shift <- Seq(0, 100, 200)) {
       val src = s"gsql_ex_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       items.withColumn("count", col("count") + shift).createOrReplaceTempView(src)
       try GraftSql.sql(spark, cat, s"INSERT INTO graft.ns.t SELECT * FROM $src")
         finally spark.catalog.dropTempView(src)
     }
+    cat
+  }
+
+  test("EXPLAIN shows the pushed filter AND the manifest-level file prune " +
+      "for a governed read") {
+    val cat = partitionedCat()
     val plan = GraftSql.sql(spark, cat,
       "EXPLAIN FORMATTED SELECT name FROM graft.ns.t WHERE count = 115")
       .collect().head.getString(0)
@@ -659,6 +683,36 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(GraftSql.sql(spark, cat,
       "SELECT name FROM graft.ns.t WHERE count = 115").collect()
       .map(_.getString(0)).toSeq == Seq("B"))
+  }
+
+  test("SQL pruning takes every conjunct: IN prunes, and an AND opens no " +
+      "more files than either side") {
+    val cat = partitionedCat()
+    def opened(where: String): (Int, Int) = {
+      val plan = GraftSql.sql(spark, cat,
+        s"EXPLAIN SELECT name FROM graft.ns.t WHERE $where").collect().head.getString(0)
+      val m = "prunes to (\\d+) of (\\d+)".r.findFirstMatchIn(plan)
+      assert(m.isDefined, s"expected a pruning note for `$where`:\n$plan")
+      (m.get.group(1).toInt, m.get.group(2).toInt)
+    }
+    def rows(where: String): Seq[String] = GraftSql.sql(spark, cat,
+      s"SELECT name, count FROM graft.ns.t WHERE $where").collect().map(_.toString).sorted.toSeq
+    val full = cat.openTable("ns", "t").read()
+    def unpruned(c: org.apache.spark.sql.Column): Seq[String] =
+      full.filter(c).select("name", "count").collect().map(_.toString).sorted.toSeq
+    // IN prunes to the union of its values' partitions
+    val (inOpened, live) = opened("count IN (115, 215)")
+    assert(inOpened < live, s"IN must prune: opened $inOpened of $live")
+    assert(rows("count IN (115, 215)") == unpruned(col("count").isin(115, 215)))
+    assert(rows("count IN (115, 215)").size == 2)
+    // both conjuncts prune: never more files than either one alone
+    val both = "count BETWEEN 100 AND 219 AND name = 'B'"
+    val (bothOpened, rangeOpened, eqOpened) =
+      (opened(both)._1, opened("count BETWEEN 100 AND 219")._1, opened("name = 'B'")._1)
+    assert(bothOpened <= rangeOpened && bothOpened <= eqOpened,
+      s"AND opened $bothOpened files; range alone $rangeOpened, equality alone $eqOpened")
+    assert(rows(both) == unpruned(col("count").between(100, 219) && col("name") === "B"))
+    assert(rows(both).size == 2)
   }
 
   test("SQL point probes route through the table layer's pruned read and " +

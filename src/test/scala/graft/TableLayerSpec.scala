@@ -967,8 +967,9 @@ class TableLayerSpec extends AnyFunSuite {
     assert(t.prunedFileCountEq("name", "beta") == 1)
     assert(t.readEq("name", "beta").count() == 1)
     // range probe [aa, b~]: prefixes 'a' and 'b' intersect, 'n'/'z' pruned
-    assert(t.prunedFileCountStr("name", "aa", "bz") == 2)
-    assert(t.readRangeStr("name", "aa", "bz").count() == 2)
+    val aaBz = t.planScan("name BETWEEN 'aa' AND 'bz'")
+    assert(aaBz.filesOpened == 2)
+    assert(aaBz.read.count() == 2)
     // a miss prunes everything
     assert(t.prunedFileCountEq("name", "quark") == 0)
     // the spec round-trips through the log rendering
@@ -982,17 +983,18 @@ class TableLayerSpec extends AnyFunSuite {
     t.append(Seq(("nina", "x", 4), ("oscar", "x", 5), ("zed", "x", 6))
       .toDF("name", "size", "count").repartition(1), statsCols = Seq("name"))
     // [a, c] intersects only [alpha, carol]; carol itself sorts above "c"
-    assert(t.prunedFileCountStr("name", "a", "c") == 1)
-    assert(t.readRangeStr("name", "a", "c").count() == 2)
+    val aC = t.planScan("name BETWEEN 'a' AND 'c'")
+    assert(aC.filesOpened == 1)
+    assert(aC.read.count() == 2)
     // [p, t] intersects only [nina, zed]
-    assert(t.prunedFileCountStr("name", "p", "t") == 1)
+    assert(t.planScan("name BETWEEN 'p' AND 't'").filesOpened == 1)
     // a string point probe prunes through the same lexicographic stats
     assert(t.prunedFileCountEq("name", "oscar") == 1)
     assert(t.readEq("name", "oscar").count() == 1)
     // a spanning range opens both files; deletes still apply on top
-    assert(t.prunedFileCountStr("name", "b", "o") == 2)
+    assert(t.planScan("name BETWEEN 'b' AND 'o'").filesOpened == 2)
     t.delete(Seq("beta").toDF("name"), Seq("name"))
-    assert(t.readRangeStr("name", "a", "c").count() == 1)
+    assert(t.planScan("name BETWEEN 'a' AND 'c'").read.count() == 1)
   }
 
   test("partition overwrite replaces only touched partitions, atomically") {
@@ -1156,9 +1158,9 @@ class TableLayerSpec extends AnyFunSuite {
     assert(t.readEq("count", "150").count() == 1)
     // an unparseable probe prunes nothing on the source column
     assert(t.prunedFileCountEq("count", "nope") == 2)
-    // the string-range API over a numeric column opens everything rather
+    // a string range over a numeric column opens everything rather
     // than comparing renderings lexicographically
-    assert(t.prunedFileCountStr("count", "1", "2") == 2)
+    assert(t.planScan("count BETWEEN '1' AND '2'").filesOpened == 2)
     // typed probes still prune as before
     assert(t.prunedFileCountEq("count", 150) == 1)
   }
@@ -2711,10 +2713,10 @@ class TableLayerSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { cat.createTable("lake", "_sneaky") }
   }
 
-  // readEqIn = one pruned MoR plan over the union of per-value file sets
-  // (r13): rows must equal the unioned per-value readEq results, and the
+  // an IN scan = one pruned MoR plan over the union of per-value file
+  // sets: rows must equal the unioned per-value readEq results, and the
   // probe must open only the files the per-value prunes admit.
-  test("readEqIn matches unioned readEq rows and prunes to the same files") {
+  test("an IN scan matches unioned readEq rows and prunes to the same files") {
     val t = freshTable("eqin")
     // identity-partitioned on count%3 buckets via three disjoint appends
     // with per-file stats — each value's rows land in separate files
@@ -2724,16 +2726,17 @@ class TableLayerSpec extends AnyFunSuite {
     }
     t.delete(Seq(("B", "y", 10)).toDF("name", "size", "count"),
       Seq("name", "size", "count")) // MoR delete must apply through the read
-    val got = t.readEqIn("count", Seq(2, 20)).orderBy("name", "count").collect()
+    val in2 = t.planScan("count IN (2, 20)")
+    val got = in2.read.orderBy("name", "count").collect()
     val want = (t.readEq("count", 2) unionByName t.readEq("count", 20))
       .orderBy("name", "count").collect()
     assert(got.toSeq == want.toSeq)
     assert(got.length == 4)
     // pruning: the two-value probe opens 2 of the 3 data files
-    assert(t.prunedFileCountEqIn("count", Seq(2, 20)) == 2,
+    assert(in2.filesOpened == 2,
       "multi-value probe must open only the per-value pruned files")
     // MoR correctness through the merged state: the deleted row is absent
-    assert(t.readEqIn("count", Seq(10)).count() == 1)
+    assert(t.planScan("count IN (10)").read.count() == 1)
   }
 
   // the r12 branch-seeding semantics, pinned (ADVICE r12): pending txn
@@ -2842,9 +2845,13 @@ class TableLayerSpec extends AnyFunSuite {
       ("readEq", () => t.readEq("count", 15), full.filter(col("count") === 15)),
       ("readRange", () => t.readRange("count", BigDecimal(8), BigDecimal(45)),
         full.filter(col("count").between(8, 45))),
-      ("readEqIn", () => t.readEqIn("count", probes), full.filter(col("count").isin(probes: _*))),
-      ("readRangeStr", () => t.readRangeStr("name", "n10", "n52"),
+      ("planScan IN", () => t.planScan(s"count IN (${probes.mkString(", ")})").read,
+        full.filter(col("count").isin(probes: _*))),
+      ("planScan string range", () => t.planScan("name BETWEEN 'n10' AND 'n52'").read,
         full.filter(col("name").between("n10", "n52"))),
+      ("planScan IN + range", () => t.planScan(
+          s"count IN (${probes.mkString(", ")}) AND name BETWEEN 'n10' AND 'n52'").read,
+        full.filter(col("count").isin(probes: _*) && col("name").between("n10", "n52"))),
       ("GraftSql point SELECT", () => GraftSql.sql(spark, cat, "SELECT * FROM graft.ns.t WHERE count = 44"),
         full.filter(col("count") === 44)))
     def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
