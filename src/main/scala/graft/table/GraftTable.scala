@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -215,14 +218,27 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val in = conformToCurrent(df)
     enforceConstraints(in)
     val dir = newShardDir("data")
+    val rootAtStart = rootKey()
     in.write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
     val (fs, strCols) = perFileStats(files, statsCols)
+    val blooms = perFileBlooms(files, bloomCols, bloomBits)
+    val rows = fileRowCounts(files)
+    // a directory swapped onto `root` mid-write (GraftSql's REPLACE
+    // TABLE) leaves this write's earlier task files in the moved-away
+    // copy and its later ones here: committing would add a partial batch
+    // to the replacement. Refuse instead; `dir` is then an orphan.
+    if (rootKey() != rootAtStart)
+      throw new java.util.ConcurrentModificationException(
+        s"append: table directory $root was replaced during the write")
     log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = perFileBlooms(files, bloomCols, bloomBits),
-      fileRows = fileRowCounts(files), assignRowIds = true)
+      fileBlooms = blooms, fileRows = rows, assignRowIds = true)
   }
+
+  /** the identity (device and inode) of the directory now at `root`. */
+  private def rootKey(): AnyRef =
+    Files.readAttributes(root, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
 
   /** Register EXISTING parquet files into the table WITHOUT copying or
     * rewriting a byte — Iceberg's `add_files` procedure / Delta's
@@ -548,11 +564,14 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * These are Iceberg's manifest record_count fields.
     */
   private def fileRowCounts(files: Seq[String]): Seq[Long] = {
+    // explicit options on the session's conf: the one-argument
+    // ParquetFileReader.open builds a fresh Hadoop Configuration (default
+    // resources parsed again) on every call
     val conf = spark.sessionState.newHadoopConf()
+    val opts = HadoopReadOptions.builder(conf).build()
     files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf), opts)
       try r.getRecordCount finally r.close()
     }
   }
@@ -569,9 +588,9 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     */
   private def readParquet(files: Seq[String]): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(files.head)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(path, spark.sessionState.newHadoopConf()))
+    val conf = spark.sessionState.newHadoopConf()
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(path, conf), HadoopReadOptions.builder(conf).build())
     val footer = try new org.apache.parquet.hadoop.Footer(path, r.getFooter) finally r.close()
     val schema = ParquetFileFormat.readSchemaFromFooter(
       footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))

@@ -2,24 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for specs — one JVM-wide session, UTC, small
-  * shuffle fan-out (local[4] test scale).
+/** Shared local session for specs — one JVM-wide session built like every
+  * other (GraftSession: UTC, native functions injected at session build, so
+  * raw Q.fn plans resolve without SparkEntry's per-query wrapper, and the
+  * graft.fs local file system), small shuffle fan-out (local[4] test scale).
   */
 object SparkSessionFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // native functions registered up front: specs exercise raw Q.fn
-    // plans (bypassing SparkEntry's per-query wrapper), which must not
-    // depend on another suite having registered them first
-    _root_.graft.functions.GraftFunctions.register(s)
     s
   }
   val sf: String = "/root/testdata/sf0.001"
