@@ -509,8 +509,8 @@ final class CommitLog(val root: Path) {
     * file survives only if EVERY applicable [[Prune]] can intersect its
     * recorded bounds — file-level when present, commit-level fallback —
     * Iceberg-style scan planning with data skipping (delete files are
-    * always kept: they apply regardless of where the surviving data
-    * lives).
+    * always kept here; a read then drops the equality deletes none of
+    * its files can hold, see [[DeleteScope]]).
     */
   def state(
       asOf: Long = Long.MaxValue,

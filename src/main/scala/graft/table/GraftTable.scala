@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkShims
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, MetadataBuilder, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, MetadataBuilder, NumericType, StringType, StructField, StructType}
 
 /** A Spark-managed table over the CommitLog: the capability port of the
   * reference's Iceberg table (create/append/equality+positional deletes/
@@ -27,7 +27,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * seq ≤ the delete's seq — later appends are untouched, matching
   * Iceberg's sequence-number scoping of equality deletes. Catalyst sees
   * an ordinary left_anti join and optimizes it like any other (broadcast
-  * when the delete set is small — the common case). Every pruned read
+  * when the delete set is small — the common case). A delete that no
+  * scanned file can hold, by seq and by key bounds, is left out of the
+  * plan altogether ([[DeleteScope]]). Every pruned read
   * is planned by one planner, [[planScan]]: it turns a predicate's
   * conjuncts into file prunes over per-file stats, partition values and
   * blooms, and returns one [[ScanPlan]] holding the log entries it read,
@@ -79,14 +81,25 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       // else normalizes through decimal so renderings parse numerically.
       // The ordering is fixed by column TYPE at write time, and fold +
       // prune reuse it, so the two can never disagree.
-      val strCols = statsCols.filter(c =>
-        df0.schema.find(_.name == c)
-          .exists(_.dataType == org.apache.spark.sql.types.StringType)).toSet
+      def typeOf(c: String) = df0.schema.find(_.name == c).map(_.dataType)
+      val strCols = statsCols.filter(c => typeOf(c).contains(StringType)).toSet
+      // numeric bounds render on the driver at six decimals, rounded
+      // OUTWARD (min toward -inf, max toward +inf) so a bound never
+      // excludes a value its file holds; other types keep the decimal cast
+      val numCols = statsCols.filter(c => typeOf(c).exists(_.isInstanceOf[NumericType])).toSet
       val aggs = statsCols.flatMap { c =>
-        if (strCols(c)) Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"))
+        if (strCols(c) || numCols(c)) Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"))
         else Seq(min(col(c)).cast("decimal(38,6)").as(s"mn_$c"),
           max(col(c)).cast("decimal(38,6)").as(s"mx_$c"))
       }
+      def render(c: String, v: Any, mode: java.math.RoundingMode): Option[String] =
+        if (!numCols(c)) Some(v.toString)
+        else (v match {
+          case d: java.math.BigDecimal => Some(d)
+          case d: Double => Option.when(!d.isNaN && !d.isInfinite)(new java.math.BigDecimal(d))
+          case f: Float => Option.when(!f.isNaN && !f.isInfinite)(new java.math.BigDecimal(f.toDouble))
+          case n: Number => Some(java.math.BigDecimal.valueOf(n.longValue))
+        }).map(_.setScale(6, mode).toPlainString)
       val byFile = df0
         .groupBy(input_file_name().as("_f"))
         .agg(aggs.head, aggs.tail: _*)
@@ -99,7 +112,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           // never-prune-blind instead of choking on "null" (ADVICE r2)
           path -> statsCols.zipWithIndex.flatMap { case (c, i) =>
             if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-            else Some(c -> (r.get(1 + 2 * i).toString, r.get(2 + 2 * i).toString))
+            else for {
+              mn <- render(c, r.get(1 + 2 * i), java.math.RoundingMode.FLOOR)
+              mx <- render(c, r.get(2 + 2 * i), java.math.RoundingMode.CEILING)
+            } yield c -> (mn, mx)
           }.toMap
         }.toMap
       (files.map(f => byFile.getOrElse(f, Map.empty)), strCols)
@@ -224,13 +240,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val (fs, strCols) = perFileStats(files, statsCols)
     val blooms = perFileBlooms(files, bloomCols, bloomBits)
     val rows = fileRowCounts(files)
-    // a directory swapped onto `root` mid-write (GraftSql's REPLACE
-    // TABLE) leaves this write's earlier task files in the moved-away
-    // copy and its later ones here: committing would add a partial batch
-    // to the replacement. Refuse instead; `dir` is then an orphan.
-    if (rootKey() != rootAtStart)
-      throw new java.util.ConcurrentModificationException(
-        s"append: table directory $root was replaced during the write")
+    requireSameRoot("append", rootAtStart)
     log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = fs,
       fileBlooms = blooms, fileRows = rows, assignRowIds = true)
@@ -239,6 +249,18 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   /** the identity (device and inode) of the directory now at `root`. */
   private def rootKey(): AnyRef =
     Files.readAttributes(root, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
+
+  /** Refuse to commit a write that began when `root` had identity
+    * `atStart` (see [[rootKey]]) if another directory has since been
+    * swapped onto `root` (GraftSql's REPLACE TABLE): the write's earlier
+    * task files landed in the moved-away copy and its later ones here, so
+    * committing would add a partial file set to the replacement. The
+    * uncommitted shard is then an orphan for removeOrphanFiles.
+    */
+  private def requireSameRoot(op: String, atStart: AnyRef): Unit =
+    if (rootKey() != atStart)
+      throw new java.util.ConcurrentModificationException(
+        s"$op: table directory $root was replaced during the write")
 
   /** Register EXISTING parquet files into the table WITHOUT copying or
     * rewriting a byte — Iceberg's `add_files` procedure / Delta's
@@ -419,6 +441,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val in = conformToCurrent(df)
     enforceConstraints(in)
     val dir = newShardDir("data")
+    val rootAtStart = rootKey()
     val pcols = specs.indices.map(partColFor)
     specs.zipWithIndex.foldLeft(in) { case (d, (sp, i)) =>
         d.withColumn(partColFor(i), sp.transform.expr(col(sp.col)))
@@ -435,6 +458,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val merged =
       if (extra.isEmpty) partStat
       else partStat.zip(extra).map { case (a, b) => a ++ b }
+    requireSameRoot("appendPartitioned", rootAtStart)
     log.commit("add", dataFiles = files, stats = foldStats(extra, statsCols, strCols),
       schemaJson = idSchemaJson(in.schema), fileStats = merged,
       partSpec = PartitionSpec.renderAll(specs),
@@ -630,7 +654,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   // metadata); reads resolve old files to the current schema BY ID, so
   // renames and safe type widenings never rewrite data files. ----
 
-  private val FidKey = "graft_fid"
+  import GraftTable.FidKey
 
   /** field-metadata key holding a column's INITIAL DEFAULT (Iceberg v3
     * default values): a SQL literal, read in place of null for rows whose
@@ -867,8 +891,11 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     require(equalityCols != CommitLog.DvCols,
       s"equality columns ${CommitLog.DvCols.mkString(",")} are reserved for deletion vectors")
     val dir = newShardDir("deletes")
+    val rootAtStart = rootKey()
     keys.select(equalityCols.map(col): _*).distinct().write.parquet(dir.toString)
-    log.commit("delete", deleteFiles = parquetFilesIn(dir), equalityCols = equalityCols)
+    val files = parquetFilesIn(dir)
+    requireSameRoot("delete", rootAtStart)
+    log.commit("delete", deleteFiles = files, equalityCols = equalityCols)
   }
 
   /** equality delete STAGED under a multi-table transaction: identical to
@@ -884,8 +911,11 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     require(equalityCols != CommitLog.DvCols,
       s"equality columns ${CommitLog.DvCols.mkString(",")} are reserved for deletion vectors")
     val dir = newShardDir("deletes")
+    val rootAtStart = rootKey()
     keys.select(equalityCols.map(col): _*).distinct().write.parquet(dir.toString)
-    log.commit("delete", deleteFiles = parquetFilesIn(dir), equalityCols = equalityCols,
+    val files = parquetFilesIn(dir)
+    requireSameRoot("deleteInTxn", rootAtStart)
+    log.commit("delete", deleteFiles = files, equalityCols = equalityCols,
       txnMarker = marker.toAbsolutePath.normalize.toString)
   }
 
@@ -2196,9 +2226,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         // all subsets of the same snapshot state
         (states.flatMap(_._1).distinct, states.flatMap(_._2).distinct)
     }
-    new ScanPlan(where, entries, data, dels,
+    val applied = DeleteScope.reachable(entries, data, dels, deleteKeys)
+    new ScanPlan(where, entries, data, applied,
       (eqs.map(_._1) ++ in.map(_._1) ++ ranges.map(_._1)).distinct,
-      () => readPrunedState((data, dels), entries))
+      () => readPrunedState((data, applied), entries))
   }
 
   /** [[planScan]] of a predicate in SQL text, parsed by the session's
@@ -2328,12 +2359,20 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     readPrunedState(CommitLog.stateFrom(entries, prune), entries, keepLineage)
   }
 
+  /** delete-file key bounds for [[DeleteScope]], from footers read on
+    * the driver (and cached)
+    */
+  private def deleteKeys: String => DeleteScope.FileKeys = {
+    lazy val conf = spark.sessionState.newHadoopConf()
+    DeleteScope.footerKeys(_, conf)
+  }
+
   private def readPrunedState(
       state: (Seq[(String, Long)], Seq[(String, Long, Seq[String])]),
       entries: Seq[LogEntry],
       keepLineage: Boolean = false,
       rowLineage: Boolean = false): DataFrame = {
-    val (dataFiles, deleteFiles) = state
+    val (dataFiles, liveDeletes) = state
     // schema as of any point of this read's history — drives field-id
     // alignment of old epochs onto the CURRENT schema (renames/widenings)
     val current = schemaFrom(entries)
@@ -2352,7 +2391,9 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // ordinal) — also kept when the caller asked for lineage (readWithPos)
     // and while DERIVING row ids (base + ordinal) for rowLineage reads
     val needsPos = keepLineage || rowLineage ||
-      deleteFiles.exists(d => CommitLog.isPositionalFlavor(d._3))
+      liveDeletes.exists(d => CommitLog.isPositionalFlavor(d._3))
+    // an equality delete no scanned file can hold is never read or joined
+    val deleteFiles = DeleteScope.reachable(entries, dataFiles, liveDeletes, deleteKeys)
     val byEntrySeq = entries.map(e => e.seq -> e).toMap
     // allowMissingColumns = add-column evolution on read: snapshots written
     // before a column was added contribute nulls for it; alignByFieldId
@@ -2613,12 +2654,14 @@ final class GraftTable(spark: SparkSession, val root: Path) {
 
   private def compactOnce(statsCols: Seq[String], bloomCols: Seq[String]): Long = {
     val dir = newShardDir("data")
+    val rootAtStart = rootKey()
     val entries = log.entries()
     val (view, mat) = rewriteSource(entries, CommitLog.stateFrom(entries))
     view.write.parquet(dir.toString)
     val files = parquetFilesIn(dir)
     val (fs, strCols) = perFileStats(files, statsCols)
     val (mrows, mids) = physMarkers(files, mat)
+    requireSameRoot("compact", rootAtStart)
     log.commit("replace", dataFiles = files,
       stats = foldStats(fs, statsCols, strCols),
       schemaJson = materializedSchemaJson(view), fileStats = fs,
@@ -2681,13 +2724,22 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * should pay for that tail, never for the healthy bulk a full rewrite
     * would copy (at 100 TB a full compact IS a 100 TB write).
     *
-    * Falls back to a full compact() when delete files are pending or the
-    * live files straddle a schema boundary — the same two conditions as
-    * rollbackTo's metadata-only path, for the same structural reasons (a
-    * replace entry carries one flat file list and one schema, so it can
-    * neither re-scope deletes nor align mixed physical schemas). With
-    * fewer than two small files there is nothing to pack: no commit, the
-    * current head seq is returned. The replace records no partition
+    * Pending equality deletes are applied, not folded by a full rewrite:
+    * the files a pending delete can touch ([[DeleteScope]]: older than
+    * the delete, with bounds that can hold its keys) are rewritten with
+    * the deletes applied, each on its own, never merged or shuffled with
+    * other files, so it keeps its key clustering; every other file is adopted,
+    * and the replace carries no delete file. Pending deletes that touch
+    * no file give a metadata-only replace.
+    *
+    * Falls back to a full compact() when a positional delete or deletion
+    * vector is pending, or when the live files straddle a schema
+    * boundary — rollbackTo's conditions, for the same structural reasons
+    * (a replace entry carries one flat file list and one schema, so it
+    * can neither re-scope positional deletes, which name rows by file and
+    * ordinal, nor align mixed physical schemas). With fewer than two
+    * small files and no pending delete there is nothing to do: no
+    * commit, the current head seq is returned. The replace records no partition
     * spec (like rollbackTo); adopted files keep pruning through their
     * per-file stats, and the next partitioned rewrite re-establishes
     * spec pruning. With `statsCols`/`bloomCols`, the NEW packed files
@@ -2701,6 +2753,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       bloomCols: Seq[String]): Long = {
     val entries = log.entries()
     require(entries.nonEmpty, "compactSmall on an empty table")
+    val rootAtStart = rootKey()
     val (dataFiles, deleteFiles) = CommitLog.stateFrom(entries)
     val schemaJson =
       entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
@@ -2709,21 +2762,37 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
     // the full-rewrite fallback records the SAME skipping metadata the
     // caller asked for — a maintenance op must never erase pruning
-    if (deleteFiles.nonEmpty || !uniformSchema) return compact(statsCols, bloomCols)
+    if (deleteFiles.exists(d => CommitLog.isPositionalFlavor(d._3)) || !uniformSchema)
+      return compact(statsCols, bloomCols)
     val sized = dataFiles.map { case (f, s) => (f, s, Files.size(Paths.get(f))) }
     val small = sized.filter(_._3 < targetBytes)
-    if (small.size < 2) return entries.last.seq // nothing to pack
-    val smallPaths = small.map(_._1).toSet
-    val kept = sized.filterNot(x => smallPaths(x._1))
+    val packed = if (small.size >= 2) small else Nil
+    if (packed.isEmpty && deleteFiles.isEmpty) return entries.last.seq // nothing to pack
+    // the files a pending equality delete can touch are rewritten with it
+    // applied; the replace then carries no delete file
+    val reach = DeleteScope.reach(entries, deleteFiles, deleteKeys).map(_._2)
+    val packedPaths = packed.map(_._1).toSet
+    val touched = sized.filter(x => !packedPaths(x._1) && reach.exists(_((x._1, x._2))))
+    val rewritten = packedPaths ++ touched.map(_._1)
+    val kept = sized.filterNot(x => rewritten(x._1))
     val dir = newShardDir("data")
     val outFiles =
-      math.max(1, math.ceil(small.map(_._3).sum.toDouble / targetBytes).toInt)
-    // pack through the lineage-aware source (per-epoch read, no deletes by
-    // precondition): the packed files materialize their rows' original ids
-    // physically, exactly like a full compact's output
-    val (packSrc, packMat) = rewriteSource(entries, (small.map(x => (x._1, x._2)), Nil))
-    packSrc.repartition(outFiles).write.parquet(dir.toString)
-    val newFiles = parquetFilesIn(dir)
+      math.max(1, math.ceil(packed.map(_._3).sum.toDouble / targetBytes).toInt)
+    // all read through the lineage-aware MoR view, deletes applied: the
+    // rewritten files materialize their rows' original ids physically,
+    // exactly like a full compact's output. Small files are packed into
+    // outFiles; each touched file is its own view, written as read, so
+    // no read split merges it with another and it keeps its key
+    // clustering and its pruning.
+    val views = (Seq(packed -> true).filter(_._1.nonEmpty) ++ touched.map(f => Seq(f) -> false))
+      .map { case (fs, pack) =>
+        val (v, mat) = rewriteSource(entries, (fs.map(x => (x._1, x._2)), deleteFiles))
+        (if (pack) v.repartition(outFiles) else v, mat)
+      }
+    views.map(_._1).reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .foreach(_.write.parquet(dir.toString))
+    val newFiles = if (views.isEmpty) Nil else parquetFilesIn(dir)
+    val newMat = views.exists(_._2)
     val (newStats, _) = perFileStats(newFiles, statsCols)
     val newBlooms = perFileBlooms(newFiles, bloomCols)
     val (keptStats, keptBlooms) = adoptedMeta(entries, kept.map(x => (x._1, x._2)))
@@ -2734,6 +2803,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val padBlooms =
       if (newBlooms.isEmpty) newFiles.map(_ => Map.empty[String, String])
       else newBlooms
+    requireSameRoot("compactSmall", rootAtStart)
     // no commit-level stats fold: the adopted files' recorded columns may
     // differ from statsCols, and absent commit stats just mean pruning
     // consults the per-file bounds directly (never-prune-blind fallback)
@@ -2742,10 +2812,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       schemaJson = schemaJson,
       fileStats = keptStats ++ padStats,
       fileBlooms = keptBlooms ++ padBlooms,
-      // kept files adopt their lineage; packed files carry it physically
-      // (marker -2 — the read path uses their materialized column)
+      // kept files adopt their lineage; rewritten files carry it
+      // physically (marker -2 — the read path uses their materialized column)
       fileRows = keptRows ++ newFiles.map(_ => 0L),
-      fileRowIds = keptIds ++ newFiles.map(_ => if (packMat) -2L else -1L),
+      fileRowIds = keptIds ++ newFiles.map(_ => if (newMat) -2L else -1L),
       rowIdHigh = CommitLog.nextRowId(entries),
       expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
   }
@@ -3159,6 +3229,9 @@ final class GraftTable(spark: SparkSession, val root: Path) {
 final case class DeleteWhereReport(seq: Long, dropped: Int, kept: Int, rewritten: Int)
 
 object GraftTable {
+  /** field-metadata key holding a column's stable field id */
+  private[table] val FidKey = "graft_fid"
+
   /** idempotent create: drop-if-exists then create — the reference's
     * init() shape (lib.rs:44-78: exists → drop → create).
     */

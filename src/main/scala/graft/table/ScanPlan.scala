@@ -17,8 +17,10 @@ import org.apache.spark.sql.graft.SparkShims
   * @param where       the predicate the plan was made for
   * @param entries     the log entries read for this plan
   * @param dataFiles   surviving data files, tagged with their commit seq
-  * @param deleteFiles live delete files (never pruned: they apply
-  *                    wherever the surviving rows live)
+  * @param deleteFiles the delete files the read applies: every live
+  *                    positional delete and deletion vector, and each
+  *                    equality delete that can touch a surviving file
+  *                    (see [[DeleteScope]])
   * @param pruneCols   snapshot columns whose conjuncts pruned files;
   *                    empty when the plan is a full snapshot scan
   */

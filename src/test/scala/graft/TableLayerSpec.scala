@@ -1235,7 +1235,8 @@ class TableLayerSpec extends AnyFunSuite {
     val head = t.headSeq
     assert(t.compactSmall(targetBytes = 16384) == head)
     assert(t.headSeq == head)
-    // pending deletes force the full-compact fallback and stay correct
+    // a pending delete on a column without stats can touch every file:
+    // all of them are rewritten with it applied
     t.delete(Seq("A").toDF("name"), Seq("name"))
     t.compactSmall(targetBytes = 16384)
     assert(t.commitLog.state()._2.isEmpty) // deletes folded in
@@ -2861,5 +2862,165 @@ class TableLayerSpec extends AnyFunSuite {
       val got = sorted(df)
       assert(got.nonEmpty && got == sorted(want), label)
     }
+  }
+
+  test("per-file numeric bounds round outward: a point probe keeps the file holding its value") {
+    val cat = GraftCatalog(spark, Files.createTempDirectory("spec_outward").toString)
+    cat.createNamespace("ns")
+    val t = cat.createTable("ns", "t")
+    // one file per value; rounded half-up to six decimals, 1.2345675
+    // recorded (1.234568, 1.234568) and 2.2345674 (2.234567, 2.234567),
+    // each a pair of bounds excluding the file's own value
+    val xs = Seq(1.2345675, 2.2345674)
+    xs.foreach(x => t.append(Seq(("v", x)).toDF("k", "x").repartition(1), statsCols = Seq("x")))
+    assert(t.snapshots.map(_.fileStats.head("x")) ==
+      Seq(("1.234567", "1.234568"), ("2.234567", "2.234568")))
+    xs.foreach { x =>
+      assert(t.read().filter(col("x") === x).count() == 1)
+      assert(t.prunedFileCountEq("x", x) == 1, s"x = $x")
+      assert(t.readEq("x", x).count() == 1, s"x = $x")
+    }
+    assert(GraftSql.sql(spark, cat, "SELECT count(*) FROM graft.ns.t WHERE x = 1.2345675")
+      .head().getLong(0) == 1)
+  }
+
+  /** one file holding keys [lo, hi), with per-file stats on k */
+  private def keyed(t: GraftTable, lo: Long, hi: Long, stats: Boolean = true): Long =
+    t.append((lo until hi).map(i => (i, s"p$i")).toDF("k", "payload").repartition(1),
+      statsCols = if (stats) Seq("k") else Nil)
+
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("compactSmall rewrites only the small files and the files a pending delete can touch") {
+    val t = freshTable("scoped_small")
+    Seq(0L, 1000L, 2000L).foreach(lo => keyed(t, lo, lo + 1000))
+    keyed(t, 5000, 5001)
+    keyed(t, 5001, 5002)
+    val target = 4096L
+    val files = t.commitLog.state()._1.map(_._1)
+    def size(f: String) = Files.size(java.nio.file.Paths.get(f))
+    assert(files.take(3).forall(size(_) >= target) && files.drop(3).forall(size(_) < target))
+    val ids = t.readWithLineage().select("k", "_row_id").as[(Long, Long)].collect().toMap
+    t.delete(Seq(1500L).toDF("k"), Seq("k"))
+    val want = rowsOf(t.read())
+    t.compactSmall(targetBytes = target, statsCols = Seq("k"))
+    val (after, dels) = t.commitLog.state()
+    // the delete is applied and gone; the first and third large files
+    // are adopted by path, the second is rewritten without key 1500 and
+    // the two small ones are packed into one
+    assert(dels.isEmpty)
+    assert(after.size == 4)
+    assert(after.map(_._1).toSet.intersect(files.toSet) == Set(files(0), files(2)))
+    assert(rowsOf(t.read()) == want && want.size == 3001)
+    assert(t.readWithLineage().select("k", "_row_id").as[(Long, Long)].collect().toMap ==
+      ids - 1500L)
+    // the rewritten file kept its key clustering: a probe in its range
+    // opens it alone
+    assert(t.prunedFileCountEq("k", 1200L) == 1)
+    assert(t.readEq("k", 1500L).count() == 0)
+    // a pending delete no file can hold gives a metadata-only replace
+    t.delete(Seq(9999L).toDF("k"), Seq("k"))
+    val live = t.commitLog.state()._1.map(_._1)
+    t.compactSmall(targetBytes = target, statsCols = Seq("k"))
+    assert(t.snapshots.last.action == "replace")
+    assert(t.commitLog.state() == ((live.map(_ -> t.headSeq), Nil)))
+    assert(rowsOf(t.read()) == want)
+  }
+
+  test("a read applies only the equality deletes its files can hold") {
+    val t = freshTable("scoped_read")
+    keyed(t, 0, 1000)
+    keyed(t, 1000, 2000)
+    t.delete(Seq(1500L).toDF("k"), Seq("k"))
+    val full = t.read()
+    assert(t.planScan("k IS NOT NULL").deleteFiles.nonEmpty)
+    val miss = t.planScan("k = 200")
+    assert(miss.filesOpened == 1 && miss.deleteFiles.isEmpty)
+    assert(rowsOf(miss.read) == rowsOf(full.filter(col("k") === 200L)))
+    val hit = t.planScan("k BETWEEN 1400 AND 1600")
+    assert(hit.deleteFiles.nonEmpty)
+    assert(rowsOf(hit.read) == rowsOf(full.filter(col("k").between(1400L, 1600L))))
+    assert(hit.read.count() == 200)
+    // a file committed after the delete is out of its reach by seq, even
+    // with bounds that hold the deleted key
+    val t2 = freshTable("scoped_read_seq")
+    keyed(t2, 0, 1000)
+    t2.delete(Seq(1500L).toDF("k"), Seq("k"))
+    keyed(t2, 1000, 2000)
+    val later = t2.planScan("k = 1500")
+    assert(later.filesOpened == 1 && later.deleteFiles.isEmpty)
+    assert(later.read.count() == 1 && t2.read().count() == 2000)
+    // string keys scope by their lexicographic bounds
+    val t3 = freshTable("scoped_read_str")
+    t3.append((0 until 100).map(i => (f"a$i%03d", i)).toDF("name", "count").repartition(1),
+      statsCols = Seq("name"))
+    t3.delete(Seq("zzz").toDF("name"), Seq("name"))
+    assert(t3.planScan("name = 'a042'").deleteFiles.isEmpty)
+    t3.delete(Seq("a042").toDF("name"), Seq("name"))
+    val probe = t3.planScan("name = 'a042'")
+    assert(probe.deleteFiles.size == 1 && probe.read.count() == 0 && t3.read().count() == 99)
+  }
+
+  test("a delete whose reach cannot be bounded still applies") {
+    // a null key: the null-safe join deletes null rows, which bounds do
+    // not describe (the non-null keys alone would miss the file)
+    val t1 = freshTable("scope_null")
+    t1.append((Seq[(Option[Long], String)]((None, "n")) ++
+      (0L until 10L).map(i => (Some(i), s"p$i"))).toDF("k", "payload").repartition(1),
+      statsCols = Seq("k"))
+    t1.delete(Seq[Option[Long]](None, Some(5000L)).toDF("k"), Seq("k"))
+    assert(t1.planScan("k = 3").deleteFiles.nonEmpty)
+    assert(t1.read().count() == 10 && t1.read().filter(col("k").isNull).count() == 0)
+    // a rename, then a new column under the old name: the old file's
+    // bounds under "k" belong to another field id, so they cannot rule
+    // a delete on the new k out
+    val t2 = freshTable("scope_readd")
+    keyed(t2, 0, 10)
+    t2.renameColumn("k", "k_old")
+    t2.addColumn("k", LongType)
+    t2.append(Seq((3000L, "new", 5000L)).toDF("k_old", "payload", "k"),
+      statsCols = Seq("k_old", "k"))
+    t2.delete(Seq(5000L).toDF("k"), Seq("k"))
+    val old = t2.planScan("k_old = 7")
+    assert(old.filesOpened == 1 && old.deleteFiles.nonEmpty)
+    assert(old.read.count() == 1 && t2.read().count() == 10)
+    // no stats on the key column: nothing bounds the file
+    val t3 = freshTable("scope_nostats")
+    keyed(t3, 0, 10, stats = false)
+    t3.delete(Seq(5000L).toDF("k"), Seq("k"))
+    assert(t3.planScan("k = 3").deleteFiles.nonEmpty)
+    assert(t3.read().count() == 10)
+    // a pending positional delete keeps compactSmall on the full rewrite
+    val t4 = freshTable("scope_pos")
+    Seq(0L, 1000L).foreach(lo => keyed(t4, lo, lo + 1000))
+    keyed(t4, 5000, 5001)
+    keyed(t4, 5001, 5002)
+    t4.delete(Seq(1500L).toDF("k"), Seq("k"))
+    t4.deleteAt(t4.readWithPos().filter(col("k") === 7L).select("_file", "_pos"))
+    val before = t4.commitLog.state()._1.map(_._1).toSet
+    t4.compactSmall(targetBytes = 4096, statsCols = Seq("k"))
+    val (after, dels) = t4.commitLog.state()
+    assert(dels.isEmpty && after.map(_._1).toSet.intersect(before).isEmpty)
+    assert(t4.read().count() == 2000)
+  }
+
+  test("a delete whose table directory is swapped mid-write commits nothing") {
+    val t = freshTable("rootswap")
+    t.append(items)
+    val root = t.root
+    val aside = root.resolveSibling(s"${root.getFileName}_aside")
+    // the REPLACE TABLE shape: while the delete's keys are computed, the
+    // live directory moves aside and a fresh one takes its place
+    val swap = udf { (n: String) =>
+      if (!Files.exists(aside)) {
+        Files.move(root, aside)
+        Files.createDirectories(root)
+      }
+      n
+    }.asNondeterministic()
+    intercept[java.util.ConcurrentModificationException](
+      t.delete(Seq("A").toDF("name").select(swap(col("name")).as("name")), Seq("name")))
+    assert(GraftTable.open(spark, aside.toString).headSeq == 0)
+    assert(GraftTable.open(spark, root.toString).headSeq == -1)
   }
 }

@@ -92,14 +92,22 @@ object TableModelProps extends Properties("graft-table-model") {
   // must match, unlike an append which may widen on write).
   private case class AddFilesOp(rows: List[Row]) extends Op
   private case class Delete(keys: List[String]) extends Op
+  // equality delete keyed on `count`, the column every append records
+  // stats for, so reads and compactSmall scope it by file bounds (every
+  // other delete keys the stats-less string column and always applies).
+  // Keys are drawn from the live view, where deletes bite: a pick p >= 0
+  // takes the (p mod n)-th smallest live count, p < 0 the raw value -p.
+  private case class DeleteCount(picks: List[Int]) extends Op
   private case class Mixed(rows: List[Row], keys: List[String]) extends Op
   private case class Upsert(rows: List[Row]) extends Op
   private case object Compact extends Op
   private case object CompactSorted extends Op
   // bin-packing rewrite: interpreted so it ALWAYS commits one replace
   // (the <2-small-files no-op would desync op index from commit seq);
-  // its delete-pending / schema-straddle fallbacks run the full compact
-  // internally — same model either way
+  // pending equality deletes are applied to the files they can touch
+  // and every other file is adopted, while its positional-delete /
+  // schema-straddle fallbacks run the full compact internally — same
+  // model either way
   private case object CompactSmall extends Op
   // z-order rewrite: same replace semantics as Compact, different layout;
   // both dims point at the one numeric column (layout is irrelevant to
@@ -141,10 +149,12 @@ object TableModelProps extends Properties("graft-table-model") {
     var rows = Vector.empty[(Row, Int)] // (row, data seq)
     var dels = Vector.empty[(String, Int)] // (key, delete seq)
     var pdels = Vector.empty[(Int, Int)] // (partition value, delete seq)
+    var cdels = Vector.empty[(Int, Int)] // (count, delete seq)
     var marks = Map.empty[String, Long] // appId -> idempotence watermark
     def dead(r: Row, s: Int): Boolean =
       dels.exists { case (k, ds) => k == r._1 && s < ds } ||
-        pdels.exists { case (p, ds) => pval(r._2) == p && s < ds }
+        pdels.exists { case (p, ds) => pval(r._2) == p && s < ds } ||
+        cdels.exists { case (c, ds) => c == r._2 && s < ds }
     ops.take(asOf + 1).zipWithIndex.foreach { case (op, seq) =>
       def view = rows.collect { case (r, s) if !dead(r, s) => r }
       op match {
@@ -171,6 +181,7 @@ object TableModelProps extends Properties("graft-table-model") {
             rows = view.map(_ -> seq)
             dels = Vector.empty
             pdels = Vector.empty
+            cdels = Vector.empty
           }
         case TxnIdemAppend(rs, app, ver, pub) =>
           if (ver > marks.getOrElse(app, Long.MinValue)) {
@@ -181,9 +192,11 @@ object TableModelProps extends Properties("graft-table-model") {
             rows = view.map(_ -> seq)
             dels = Vector.empty
             pdels = Vector.empty
+            cdels = Vector.empty
           }
         case AddFilesOp(rs) => rows ++= rs.map(_ -> seq) // ≡ append
         case Delete(ks) => dels ++= ks.map(_ -> seq)
+        case DeleteCount(picks) => cdels ++= countKeys(picks, view.map(_._2)).map(_ -> seq)
         case Mixed(rs, ks) =>
           // one atomic entry: the delete scopes to data BELOW this seq,
           // the appended rows carry this seq and therefore survive it
@@ -203,15 +216,18 @@ object TableModelProps extends Properties("graft-table-model") {
           rows = view.map(_ -> seq)
           dels = Vector.empty
           pdels = Vector.empty
+          cdels = Vector.empty
         case UpdateEq(k, d) =>
           rows = view.map(r => (if (r._1 == k) (r._1, r._2 + d) else r) -> seq)
           dels = Vector.empty
           pdels = Vector.empty
+          cdels = Vector.empty
         case Rollback(raw) =>
           // the view at the clamped target becomes this seq's content
           rows = model(ops, math.min(raw, seq - 1)).map(_ -> seq).toVector
           dels = Vector.empty
           pdels = Vector.empty
+          cdels = Vector.empty
         case RenameKey | WidenCount => () // metadata-only: one seq, no rows
       }
     }
@@ -235,6 +251,17 @@ object TableModelProps extends Properties("graft-table-model") {
         if (m.get(key).forall(_.toLong < ver)) m.updated(key, ver.toString) else m
       case (m, _) => m
     }
+
+  /** the counts a [[DeleteCount]] deletes, given the live counts */
+  private def countKeys(picks: List[Int], live: Seq[Int]): List[Int] = {
+    val present = live.distinct.sorted
+    picks.map(p => if (p >= 0 && present.nonEmpty) present(p % present.size) else math.abs(p) % 100)
+      .distinct
+  }
+
+  private val genDeleteCount: Gen[Op] =
+    Gen.listOfN(3, Gen.frequency(4 -> Gen.choose(0, 20), 1 -> Gen.choose(-99, -1)))
+      .map(ps => DeleteCount(ps.distinct))
 
   private val genRow: Gen[Row] = for {
     name <- Gen.oneOf("A", "B", "C", "D", "E", "F")
@@ -274,6 +301,7 @@ object TableModelProps extends Properties("graft-table-model") {
     } yield TxnIdemAppend(rows, app, ver, pub)),
     2 -> Gen.nonEmptyListOf(Gen.oneOf("A", "B", "C", "D", "E", "F"))
       .map(ks => Delete(ks.distinct.take(3))),
+    2 -> genDeleteCount,
     2 -> Gen.nonEmptyListOf(genRow).map(rs => AddFilesOp(rs.take(3))),
     1 -> (for {
       rows <- Gen.nonEmptyListOf(genRow).map(_.take(3))
@@ -421,6 +449,10 @@ object TableModelProps extends Properties("graft-table-model") {
         }
         t.addFiles(extFiles, statsCols = Seq("count"))
       case Delete(keys) => t.delete(keys.toDF(keyCol), Seq(keyCol))
+      case DeleteCount(picks) =>
+        val live = t.read().select(org.apache.spark.sql.functions.col("count").cast("int"))
+          .as[Int].collect().toSeq
+        t.delete(countKeys(picks, live).toDF("count"), Seq("count"))
       case Mixed(rows, keys) =>
         t.appendAndDelete(rows.toDF(keyCol, "count"), keys.toDF(keyCol), Seq(keyCol))
       case Upsert(rows) =>
@@ -429,9 +461,14 @@ object TableModelProps extends Properties("graft-table-model") {
         t.overwritePartitions(rows.toDF(keyCol, "count"), spec, statsCols = Seq("count"))
       case Compact => t.compact()
       case CompactSmall =>
-        val nSmall = t.commitLog.state()._1.count(f =>
-          Files.size(java.nio.file.Paths.get(f._1)) < (1L << 20))
-        if (nSmall >= 2) t.compactSmall(1L << 20, statsCols = Seq("count"))
+        // a target just above the median live-file size packs about half
+        // the files and adopts the rest, so adoption meets pending deletes
+        val (live, pending) = t.commitLog.state()
+        val sizes = live.map(f => Files.size(java.nio.file.Paths.get(f._1))).sorted
+        val target = sizes.lift(sizes.size / 2).getOrElse(0L) + 1
+        val nSmall = sizes.count(_ < target)
+        // with a delete pending, compactSmall always commits one replace
+        if (nSmall >= 2 || pending.nonEmpty) t.compactSmall(target, statsCols = Seq("count"))
         else t.compact()
       case CompactSorted => t.compactSorted("count", numFiles = 2)
       case CompactZOrder => t.compactZOrder(Seq("count", "count"), numFiles = 4)
@@ -523,6 +560,52 @@ object TableModelProps extends Properties("graft-table-model") {
         if (!ok) println(s"MISMATCH asOf=$asOf ops=$ops\n got=$got\n want=$want")
         ok
       }
+    }
+
+  // count-keyed deletes at high density, mixed with the ops that move
+  // files and bounds under them: appends (plain and partitioned, both
+  // recording count stats per file), compactSmall (which adopts every
+  // file no pending delete can touch), a widening of count, and
+  // rollbacks. Besides every snapshot, the head's point reads on each
+  // deleted count run through planScan, whose plan applies only the
+  // deletes its files can hold.
+  private val genScopeOps: Gen[List[Op]] = for {
+    first <- Gen.nonEmptyListOf(genRow).map(rs => Append(rs.take(5), partitioned = 0))
+    rest <- Gen.listOfN(6, Gen.frequency(
+      3 -> (for {
+        rows <- Gen.nonEmptyListOf(genRow).map(_.take(5))
+        part <- Gen.oneOf(0, 1)
+      } yield Append(rows, part)),
+      3 -> genDeleteCount,
+      2 -> Gen.const(CompactSmall),
+      1 -> Gen.const(WidenCount),
+      1 -> Gen.choose(0, 5).map(Rollback)))
+  } yield first :: rest
+
+  property("count-keyed deletes scoped by file bounds match the model") =
+    forAll(genScopeOps) { ops =>
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      val t = run("prop_scope", ops)
+      def rows(df: org.apache.spark.sql.DataFrame): List[Row] = sortedRows(
+        df.select(col("name"), col("count").cast("int").as("count")).as[Row].collect().toSeq)
+      val snapshotsOk = (0 until ops.size).forall { asOf =>
+        val got = rows(t.read(if (asOf == ops.size - 1) Long.MaxValue else asOf.toLong))
+        val want = sortedRows(model(ops, asOf))
+        if (got != want) println(s"SCOPE MISMATCH asOf=$asOf ops=$ops\n got=$got\n want=$want")
+        got == want
+      }
+      val head = model(ops, ops.size - 1)
+      val deleted = ops.zipWithIndex.collect {
+        case (DeleteCount(ps), i) => countKeys(ps, model(ops, i - 1).map(_._2))
+      }.flatten.distinct
+      val probesOk = deleted.take(6).forall { c =>
+        val got = rows(t.readEq("count", c))
+        val want = sortedRows(head.filter(_._2 == c))
+        if (got != want) println(s"SCOPE PROBE MISMATCH count=$c ops=$ops\n got=$got\n want=$want")
+        got == want
+      }
+      snapshotsOk && probesOk
     }
 
   // changelog fuzz runs on replace-free lineages (a replace range is

@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-side PLANNING cost at manifest scale (VERDICT r7 #7): the
@@ -121,5 +122,47 @@ class PlanningScaleSpec extends AnyFunSuite {
       s"puffin=${puffinBytes / 1024}KiB fold=${tFold}ms parse=${tParse}ms " +
       s"plain=${tPlain}ms probe_cold=${tProbeCold}ms probe_warm=${tProbeWarm}ms")
     assert(tParse < 5000, s"stats-only checkpoint parse took ${tParse}ms")
+  }
+
+  test("50k files, 100 equality-delete groups: scoping the deletes stays interactive") {
+    val log = new CommitLog(Files.createTempDirectory("plan_scale_scope"))
+    val schema = StructType(Seq(StructField("k", LongType,
+      metadata = new MetadataBuilder().putLong(GraftTable.FidKey, 1L).build()))).json
+    val commits = 500
+    val filesPer = 100
+    (0 until commits).foreach { c =>
+      val files = (0 until filesPer).map(f =>
+        f"data/epoch-$c%04d/part-$f%05d-0123456789abcdef.snappy.parquet")
+      // k tiles disjointly: file i of commit c holds [c*100000 + i*1000, …+999]
+      log.commit("add", dataFiles = files, schemaJson = schema,
+        fileStats = files.indices.map(i => Map(
+          "k" -> (s"${c * 100000 + i * 1000}.000000", s"${c * 100000 + i * 1000 + 999}.000000"))),
+        fileRows = files.map(_ => 10000L))
+    }
+    // 100 one-key delete commits above every data file: group g's key
+    // lies in file 0 of commit 5g for even g and beyond every file for
+    // odd g. Footer bounds come from a table, not from parquet files.
+    val keyOf = (0 until 100).map { g =>
+      val file = f"deletes/d$g%03d/part-00000.parquet"
+      log.commit("delete", deleteFiles = Seq(file), equalityCols = Seq("k"))
+      val key = if (g % 2 == 0) (g * 5L) * 100000 + 500 else 1000000000L + g
+      log.root.resolve(file).toString ->
+        DeleteScope.FileKeys(empty = false, Map("k" -> DeleteScope.IntRange(key, key)))
+    }.toMap
+    log.checkpoint()
+    val es = log.entries()
+    val (data, dels) = CommitLog.stateFrom(es)
+    assert(data.size == commits * filesPer && dels.size == 100)
+    val (all, tAll) = ms(DeleteScope.reachable(es, data, dels, keyOf))
+    assert(all.size == 50)
+    val pruned = CommitLog.stateFrom(es,
+      Seq(Prune("k", BigDecimal(40 * 100000), BigDecimal(40 * 100000 + 99999))))._1
+    assert(pruned.size == filesPer)
+    val (one, tPruned) = ms(DeleteScope.reachable(es, pruned, dels, keyOf))
+    assert(one.size == 1)
+    info(s"50k files x 100 delete groups: full scan ${tAll}ms, one-commit probe ${tPruned}ms")
+    println(s"PLANNING_SCALE scope: full=${tAll}ms pruned=${tPruned}ms")
+    assert(tAll < 15000, s"scoping 100 groups over 50k files took ${tAll}ms")
+    assert(tPruned < 5000)
   }
 }
