@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -91,53 +92,33 @@ case class VecDot(left: Expression, right: Expression)
   override def prettyName: String = "graft_vecdot"
 }
 
-/** Session registration for the engine's native functions. Idempotent —
-  * safe to call per query build (the driver may hand us a session built
-  * without extensions).
+/** The engine's native functions, in ONE table of (name, expression
+  * info, builder) that both registration paths iterate: [[register]] for
+  * a session built without extensions (idempotent — safe to call per
+  * query build; a caller may hand us such a session), and
+  * [[GraftExtensions]] at session build.
   */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vecdot",
-      (children: Seq[Expression]) => VecDot(children(0), children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig",
-      (children: Seq[Expression]) => MinHashSig(children(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_packed_pairs",
-      (children: Seq[Expression]) => PackedPairs(children(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      (children: Seq[Expression]) => Shingles(children(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_hs",
-      (children: Seq[Expression]) => MinHashHs(children(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_h60",
-      (children: Seq[Expression]) => H60(children(0)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_h60",
-      (children: Seq[Expression]) => GramH60(children(0), children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_ngrams",
-      (children: Seq[Expression]) => CharNgrams(children(0), children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lines",
-      (children: Seq[Expression]) => FixedLines(children(0), children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_word_grams",
-      (children: Seq[Expression]) => WordGrams(children(0), children(1)),
-      "scala_udf")
-  }
+  val table: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn[VecDot]("graft_vecdot")(c => VecDot(c(0), c(1))),
+    fn[MinHashSig]("graft_minhash_sig")(c => MinHashSig(c(0))),
+    fn[PackedPairs]("graft_packed_pairs")(c => PackedPairs(c(0))),
+    fn[Shingles]("graft_shingles")(c => Shingles(c(0))),
+    fn[MinHashHs]("graft_minhash_hs")(c => MinHashHs(c(0))),
+    fn[H60]("graft_h60")(c => H60(c(0))),
+    fn[GramH60]("graft_gram_h60")(c => GramH60(c(0), c(1))),
+    fn[CharNgrams]("graft_char_ngrams")(c => CharNgrams(c(0), c(1))),
+    fn[FixedLines]("graft_lines")(c => FixedLines(c(0), c(1))),
+    fn[WordGrams]("graft_word_grams")(c => WordGrams(c(0), c(1))))
+
+  private def fn[T](name: String)(build: Seq[Expression] => Expression)(
+      implicit ct: scala.reflect.ClassTag[T]) =
+    (FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getCanonicalName, name), build)
+
+  def register(spark: SparkSession): Unit =
+    table.foreach { case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+    }
 }
 
 /** Production wiring: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
@@ -148,59 +129,6 @@ object GraftFunctions {
   * because the driver hands us an already-built session.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vecdot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VecDot].getCanonicalName, "graft_vecdot"),
-      (children: Seq[Expression]) => VecDot(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash_sig"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashSig].getCanonicalName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children(0))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_packed_pairs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PackedPairs].getCanonicalName, "graft_packed_pairs"),
-      (children: Seq[Expression]) => PackedPairs(children(0))))
-    // the extensions path must expose the SAME function set as
-    // GraftFunctions.register — DedupQueries requires these two, and an
-    // extensions-only session would otherwise fail analysis (ADVICE r12)
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingles"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[Shingles].getCanonicalName, "graft_shingles"),
-      (children: Seq[Expression]) => Shingles(children(0))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash_hs"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashHs].getCanonicalName, "graft_minhash_hs"),
-      (children: Seq[Expression]) => MinHashHs(children(0))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_h60"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[H60].getCanonicalName, "graft_h60"),
-      (children: Seq[Expression]) => H60(children(0))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_gram_h60"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[GramH60].getCanonicalName, "graft_gram_h60"),
-      (children: Seq[Expression]) => GramH60(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_char_ngrams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[CharNgrams].getCanonicalName, "graft_char_ngrams"),
-      (children: Seq[Expression]) => CharNgrams(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lines"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[FixedLines].getCanonicalName, "graft_lines"),
-      (children: Seq[Expression]) => FixedLines(children(0), children(1))))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_word_grams"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[WordGrams].getCanonicalName, "graft_word_grams"),
-      (children: Seq[Expression]) => WordGrams(children(0), children(1))))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach(ext.injectFunction)
 }

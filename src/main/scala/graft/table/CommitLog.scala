@@ -93,14 +93,14 @@ final case class LogEntry(
     bloomsRef: String = "") {
 
   /** bounds-intersection under the PRUNE's ordering: string prunes
-    * compare lexicographically (string columns record native min/max —
-    * same ordering at write and read); numeric prunes parse the decimal
+    * compare in code-point order ([[Prune.StrOrder]], the order string
+    * columns record their min/max in); numeric prunes parse the decimal
     * rendering. A probe mistyped against the column's recorded kind may
     * fail to parse — never prune blind on it.
     */
   private def intersects(mn: String, mx: String, p: Prune): Boolean =
     p.strBounds match {
-      case Some((lo, hi)) => mx >= lo && mn <= hi
+      case Some((lo, hi)) => Prune.StrOrder.gteq(mx, lo) && Prune.StrOrder.lteq(mn, hi)
       case None =>
         try BigDecimal(mx) >= p.lo && BigDecimal(mn) <= p.hi
         catch { case _: NumberFormatException => true }
@@ -153,6 +153,29 @@ object Prune {
   /** lexicographic range predicate for a STRING column. */
   def str(col: String, lo: String, hi: String, requireSpec: String = ""): Prune =
     Prune(col, 0, 0, requireSpec, strBounds = Some((lo, hi)))
+
+  /** Code-point order, which is unsigned UTF-8 byte order: the order
+    * Spark's min/max and parquet footers record string bounds in, and so
+    * the one every string bound is compared and folded with. Java's
+    * `compareTo` orders UTF-16 units instead, and disagrees once a
+    * character at or above U+E000 meets a supplementary one (U+F000 sorts
+    * before U+1F600 here, after it there). At the first differing unit,
+    * surrogates move above U+E000-U+FFFF, the ICU fix-up.
+    */
+  val StrOrder: Ordering[String] = new Ordering[String] {
+    private def fix(c: Char): Int =
+      if (c < '\uD800') c else if (c >= '\uE000') c - 0x800 else c + 0x2000
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val (x, y) = (a.charAt(i), b.charAt(i))
+        if (x != y) return fix(x) - fix(y)
+        i += 1
+      }
+      a.length - b.length
+    }
+  }
 }
 
 /** File-based commit log with CAS concurrency control — the Spark-native

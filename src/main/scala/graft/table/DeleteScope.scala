@@ -38,9 +38,6 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   *  - its type is not INT32/INT64 (signed, unannotated) or STRING;
   *  - it holds a null (the read's null-safe join matches null to null,
   *    which bounds do not describe), or the footer has no statistics;
-  *  - a string bound has a character at or above U+D800: recorded
-  *    string bounds follow Spark's UTF-8 byte order and the comparison
-  *    follows Java's UTF-16 order, and the two agree only below it;
   *  - by field id, it resolves to no column of the schema the data file
   *    was written under, or to one of another kind (integral keys need
   *    an integral column, string keys a STRING column);
@@ -134,7 +131,7 @@ private[table] object DeleteScope {
   private def union(a: KeyRange, b: KeyRange): Option[KeyRange] = (a, b) match {
     case (IntRange(l1, h1), IntRange(l2, h2)) => Some(IntRange(l1 min l2, h1 max h2))
     case (StrRange(l1, h1), StrRange(l2, h2)) =>
-      Some(StrRange(if (l1 <= l2) l1 else l2, if (h1 >= h2) h1 else h2))
+      Some(StrRange(Prune.StrOrder.min(l1, l2), Prune.StrOrder.max(h1, h2)))
     case _ => None
   }
 
@@ -198,9 +195,8 @@ private[table] object DeleteScope {
         Some(IntRange(st.genericGetMin.asInstanceOf[Number].longValue,
           st.genericGetMax.asInstanceOf[Number].longValue))
       case (BINARY, _: StringLogicalTypeAnnotation) =>
-        val lo = st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8
-        val hi = st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8
-        if ((lo + hi).forall(_ < '\uD800')) Some(StrRange(lo, hi)) else None
+        Some(StrRange(st.genericGetMin.asInstanceOf[Binary].toStringUsingUTF8,
+          st.genericGetMax.asInstanceOf[Binary].toStringUsingUTF8))
       case _ => None
     }
 }

@@ -40,11 +40,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * an equality probe on a partition column and a string range over a
   * truncstr one, whose partition values a one-row local job computes).
   *
-  * Write path: executors write parquet shards in parallel (df.write),
-  * then the driver performs exactly ONE O(1) commit — the decoupled
-  * many-writers/one-committer architecture of decouple.rs:112-300.
+  * Write path: every write that stages files goes through one
+  * primitive, [[writeAndCommit]]. Executors write parquet shards in
+  * parallel (df.write); the Spark driver lists them, derives the metadata
+  * the write records (per-file stats, blooms, row counts or lineage
+  * markers, partition values), checks that the table directory is still
+  * the one the write began in, and makes exactly ONE O(1) commit — the
+  * decoupled many-writers/one-committer architecture of
+  * decouple.rs:112-300.
   */
 final class GraftTable(spark: SparkSession, val root: Path) {
+  import GraftTable.{Assign, Derive, Derived, Lineage, NoLineage, Rewritten}
+
   private val log = new CommitLog(root)
 
   private def newShardDir(kind: String): Path =
@@ -65,22 +72,19 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   /** PER-FILE (Iceberg-manifest-granularity) column bounds for `files`
     * (plain paths: a fresh write, or live files spanning shard dirs).
     * One column-pruned aggregate scan grouped by input_file_name(), so
-    * cost is O(statsCols), not O(files).
+    * cost is O(statsCols), not O(files). `src` is the read of `files`
+    * when the caller already has it.
     */
-  private def perFileStats(files: Seq[String], statsCols: Seq[String])
-      : (Seq[Map[String, (String, String)]], Set[String]) =
+  private def perFileStats(files: Seq[String], statsCols: Seq[String],
+      src: Option[DataFrame]): (Seq[Map[String, (String, String)]], Set[String]) =
     if (statsCols.isEmpty || files.isEmpty) (Nil, Set.empty)
-    else perFileStatsIn(readParquet(files), files, statsCols)
-
-  private def perFileStatsIn(
-      df0: org.apache.spark.sql.DataFrame, files: Seq[String], statsCols: Seq[String])
-      : (Seq[Map[String, (String, String)]], Set[String]) =
-    {
-      // STRING columns keep their native lexicographic min/max — the
-      // ordering string prunes compare with at read time; everything
-      // else normalizes through decimal so renderings parse numerically.
-      // The ordering is fixed by column TYPE at write time, and fold +
-      // prune reuse it, so the two can never disagree.
+    else {
+      val df0 = src.getOrElse(readParquet(files))
+      // STRING columns keep their native min/max, in code-point order
+      // (Prune.StrOrder), which string prunes compare with at read time;
+      // everything else normalizes through decimal so renderings parse
+      // numerically. The ordering is fixed by column TYPE at write time,
+      // and fold + prune reuse it, so the two can never disagree.
       def typeOf(c: String) = df0.schema.find(_.name == c).map(_.dataType)
       val strCols = statsCols.filter(c => typeOf(c).contains(StringType)).toSet
       // numeric bounds render on the driver at six decimals, rounded
@@ -133,8 +137,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     statsCols.flatMap { c =>
       val bounds = fileStats.flatMap(_.get(c))
       if (bounds.isEmpty) None
-      else if (strCols(c)) // lexicographic fold, matching string prunes
-        Some((c, bounds.map(_._1).min, bounds.map(_._2).max))
+      else if (strCols(c)) // code-point fold, matching string prunes
+        Some((c, bounds.map(_._1).min(Prune.StrOrder), bounds.map(_._2).max(Prune.StrOrder)))
       else Some((c,
         bounds.minBy(b => BigDecimal(b._1))._1,
         bounds.maxBy(b => BigDecimal(b._2))._2))
@@ -191,15 +195,6 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       }
     }
 
-  /** fast_append: write data files, commit one `add` entry. With
-    * `statsCols`, the commit records min/max of those (numeric) columns at
-    * BOTH commit and per-file granularity — the manifest statistics
-    * Iceberg uses for scan pruning — from a single aggregate scan. With
-    * `bloomCols`, each file additionally records a bloom filter (default
-    * 16 KiB, see [[Bloom.DefaultM]]) per
-    * column so POINT reads skip files whose bounds intersect but which
-    * definitely lack the key (see [[Bloom]]).
-    */
   /** Write-side CHECK constraints (Delta's ALTER TABLE ADD CONSTRAINT):
     * table properties `check.<name> = <sql predicate>` are enforced on
     * every ROW-ADDING path — append/appendInTxn/appendPartitioned/
@@ -228,39 +223,154 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     }
   }
 
-  def append(df: DataFrame, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, bloomBits: Int = Bloom.DefaultM): Long = {
-    requireNoReserved(df)
-    val in = conformToCurrent(df)
-    enforceConstraints(in)
-    val dir = newShardDir("data")
-    val rootAtStart = rootKey()
-    in.write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(files, statsCols)
-    val blooms = perFileBlooms(files, bloomCols, bloomBits)
-    val rows = fileRowCounts(files)
-    requireSameRoot("append", rootAtStart)
-    log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
-      schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = blooms, fileRows = rows, assignRowIds = true)
+  /** The one place a write's file metadata is derived. Spark jobs run in
+    * a fixed order: the stats aggregate, then the bloom aggregate; row
+    * counts come from footers and partition values from paths.
+    */
+  private def derived(files: Seq[String], d: Derive, lineage: Lineage,
+      src: Option[DataFrame] = None): Derived = {
+    val (stats, strCols) = perFileStats(files, d.statsCols, src)
+    val fileStats =
+      if (d.partDims == 0) stats
+      else {
+        val parts = files.map(f => (0 until d.partDims).flatMap(i =>
+          partValueFromPath(f, i).map(v => partColFor(i) -> (v, v))).toMap)
+        if (stats.isEmpty) parts else parts.zip(stats).map { case (a, b) => a ++ b }
+      }
+    val blooms = perFileBlooms(files, d.bloomCols, d.bloomBits)
+    val (rows, ids) = lineage match {
+      case Assign => (fileRowCounts(files), Nil)
+      case Rewritten(mat, _) => physMarkers(files, mat)
+      case NoLineage => (Nil, Nil)
+    }
+    Derived(files, strCols, foldStats(stats, d.statsCols, strCols), fileStats, blooms, rows, ids)
+  }
+
+  /** The one write-and-commit path of every table write that stages
+    * files (decouple.rs:112-300: many writers, one committer):
+    *  1. note the identity of the directory at `root` ([[rootKey]]);
+    *  2. run `write`, which stages files by writing into the fresh shard
+    *     directory `shard(kind)` names — at most one `data` and one
+    *     `deletes` shard; a write that stages nothing calls neither;
+    *  3. list the staged files;
+    *  4. derive what `derive` and `lineage` ask of the data files;
+    *  5. refuse if another directory was swapped onto `root` meanwhile
+    *     ([[requireSameRoot]]), also when step 2 or 4 failed;
+    *  6. commit ONE entry: the staged files, after the files `adopt`
+    *     keeps by path with their recorded metadata (a replace that keeps
+    *     part of the live set). `base` is the committed set a
+    *     state-dependent rewrite was built from (see [[rewriteRetry]]).
+    * A failure at any step leaves the staged shards for
+    * removeOrphanFiles. Returns the entry's seq and the staged data files.
+    */
+  private def writeAndCommit(op: String, action: String,
+      derive: Derive = Derive(), lineage: Lineage = NoLineage,
+      equalityCols: Seq[String] = Nil, schemaJson: => String = "",
+      partSpec: String = "", txnMarker: String = "",
+      props: Map[String, String] = Map.empty,
+      base: Option[Seq[LogEntry]] = None,
+      adopt: Option[(Seq[LogEntry], Seq[(String, Long)])] = None)(
+      write: (String => String) => Unit): (Long, Seq[String]) = {
+    val atStart = rootKey()
+    val staged = scala.util.Try {
+      val shards = scala.collection.mutable.Map.empty[String, Path]
+      write { kind =>
+        val dir = newShardDir(kind)
+        shards(kind) = dir
+        dir.toString
+      }
+      def files(kind: String) = shards.get(kind).map(parquetFilesIn).getOrElse(Nil)
+      (derived(files("data"), derive, lineage), files("deletes"))
+    }
+    requireSameRoot(op, atStart, staged.failed.toOption)
+    val (m, deleteFiles) = staged.get
+    // a replace keeping files by path: they keep their recorded metadata,
+    // and the fresh files' arrays pad to one element each. No commit-level
+    // fold: the kept files' recorded columns may differ from statsCols, and
+    // absent commit stats make pruning consult the per-file bounds
+    val (files, fold, fileStats, blooms, rows, ids) = adopt match {
+      case None => (m.files, m.fold, m.fileStats, m.blooms, m.rows, m.ids)
+      case Some((entries, kept)) =>
+        val (keptStats, keptBlooms) = adoptedMeta(entries, kept)
+        val (keptRows, keptIds) = adoptedLineage(entries, kept)
+        def pad[A](xs: Seq[A], empty: A): Seq[A] = if (xs.isEmpty) m.files.map(_ => empty) else xs
+        (kept.map(_._1) ++ m.files, Nil, keptStats ++ pad(m.fileStats, Map.empty[String, (String, String)]),
+          keptBlooms ++ pad(m.blooms, Map.empty[String, String]),
+          keptRows ++ pad(m.rows, 0L), keptIds ++ pad(m.ids, -1L))
+    }
+    val seq = log.commit(action, files, deleteFiles, equalityCols, fold, schemaJson, fileStats,
+      partSpec, blooms, rows, ids,
+      rowIdHigh = lineage match { case Rewritten(_, high) => high; case _ => -1L },
+      assignRowIds = lineage == Assign, txnMarker = txnMarker, props = props,
+      expectedCommittedSeqs = base.map(_.map(_.seq).toSet))
+    (seq, m.files)
   }
 
   /** the identity (device and inode) of the directory now at `root`. */
   private def rootKey(): AnyRef =
     Files.readAttributes(root, classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
 
-  /** Refuse to commit a write that began when `root` had identity
-    * `atStart` (see [[rootKey]]) if another directory has since been
-    * swapped onto `root` (GraftSql's REPLACE TABLE): the write's earlier
-    * task files landed in the moved-away copy and its later ones here, so
-    * committing would add a partial file set to the replacement. The
-    * uncommitted shard is then an orphan for removeOrphanFiles.
+  /** [[writeAndCommit]]'s refusal to commit a write that began when
+    * `root` had identity `atStart` (see [[rootKey]]) if another directory
+    * has since been swapped onto `root` (GraftSql's REPLACE TABLE): the
+    * write's earlier task files landed in the moved-away copy and its
+    * later ones here, so committing would add a partial file set to the
+    * replacement. A write that failed (`failure`, often the swap's own
+    * doing: a shard or input file gone from under it) is refused the same
+    * way, with the failure as the cause. Not a [[CommitConflictException]],
+    * so [[rewriteRetry]] never retries it. A swap after this check and
+    * before the commit's claim still commits to the replacement.
     */
-  private def requireSameRoot(op: String, atStart: AnyRef): Unit =
+  private def requireSameRoot(op: String, atStart: AnyRef, failure: Option[Throwable]): Unit =
     if (rootKey() != atStart)
       throw new java.util.ConcurrentModificationException(
-        s"$op: table directory $root was replaced during the write")
+        s"$op: table directory $root was replaced during the write", failure.orNull)
+
+  /** marker path a staged transaction entry records */
+  private def markerOf(marker: Path): String = marker.toAbsolutePath.normalize.toString
+
+  /** fast_append: write data files, commit one `add` entry. With
+    * `statsCols`, the commit records min/max of those columns at BOTH
+    * commit and per-file granularity — the manifest statistics Iceberg
+    * uses for scan pruning — from a single aggregate scan. With
+    * `bloomCols`, each file additionally records a bloom filter (default
+    * 16 KiB, see [[Bloom.DefaultM]]) per column so POINT reads skip files
+    * whose bounds intersect but which definitely lack the key (see
+    * [[Bloom]]).
+    */
+  def append(df: DataFrame, statsCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil, bloomBits: Int = Bloom.DefaultM): Long =
+    appendAs("append", df, Nil, Derive(statsCols, bloomCols, bloomBits))
+
+  /** shared body of every append: `df`, conformed and checked, laid out
+    * by `specs` (none: one plain shard) and committed as one `add` entry.
+    */
+  private def appendAs(op: String, df: DataFrame, specs: Seq[PartitionSpec], derive: Derive,
+      txnMarker: String = "", props: Map[String, String] = Map.empty): Long = {
+    requireNoReserved(df)
+    val in = conformToCurrent(df)
+    enforceConstraints(in)
+    writeAndCommit(op, "add", derive.copy(partDims = specs.size), Assign,
+      schemaJson = idSchemaJson(in.schema), partSpec = PartitionSpec.renderAll(specs),
+      txnMarker = txnMarker, props = props)(shard => writeLaidOut(in, specs, shard("data")))._1
+  }
+
+  /** `df` written into `dir` laid out by `specs`: repartitioned BY the
+    * partition tuple, so each tuple is written by exactly one task — one
+    * file per partition per write instead of (tasks × partitions) small
+    * files — under one nested `_p=`, `_p1=`, … directory per dimension.
+    * Without specs, written as is.
+    */
+  private def writeLaidOut(df: DataFrame, specs: Seq[PartitionSpec], dir: String): Unit =
+    if (specs.isEmpty) df.write.parquet(dir)
+    else {
+      val pcols = specs.indices.map(partColFor)
+      specs.zipWithIndex.foldLeft(df) { case (d, (sp, i)) =>
+          d.withColumn(partColFor(i), sp.transform.expr(col(sp.col)))
+        }
+        .repartition(pcols.map(col): _*)
+        .write.partitionBy(pcols: _*).parquet(dir)
+    }
 
   /** Register EXISTING parquet files into the table WITHOUT copying or
     * rewriting a byte — Iceberg's `add_files` procedure / Delta's
@@ -314,12 +424,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           s"files have ${newT.toSeq.sortBy(_._1)}")
     }
     enforceConstraints(df0)
-    val (fs, strCols) =
-      if (statsCols.isEmpty) (Seq.empty[Map[String, (String, String)]], Set.empty[String])
-      else perFileStatsIn(df0, files, statsCols)
-    log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
-      schemaJson = idSchemaJson(df0.schema), fileStats = fs,
-      fileRows = fileRowCounts(files), assignRowIds = true)
+    val m = derived(files, Derive(statsCols), Assign, Some(df0))
+    log.commit("add", dataFiles = files, stats = m.fold,
+      schemaJson = idSchemaJson(df0.schema), fileStats = m.fileStats,
+      fileRows = m.rows, assignRowIds = true)
   }
 
   /** fast_append STAGED under a multi-table transaction: identical to
@@ -329,28 +437,16 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * ALL of the transaction's staged entries across all tables at once
     * (GraftCatalog.transact). Row-id ranges are claimed at stage time,
     * so concurrent transactions never mint overlapping ids even before
-    * either publishes.
+    * either publishes. `props` (e.g. a txn.<appId> idempotence
+    * watermark) ride the staged entry: invisible like its rows until the
+    * marker publishes, then folded atomically WITH them — so a
+    * multi-table transaction can be made replay-safe (crash before
+    * publish → replay reprocesses; crash after → the visible watermark
+    * skips the whole transaction).
     */
   def appendInTxn(df: DataFrame, marker: Path, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, props: Map[String, String] = Map.empty): Long = {
-    requireNoReserved(df)
-    val in = conformToCurrent(df)
-    enforceConstraints(in)
-    val dir = newShardDir("data")
-    in.write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(files, statsCols)
-    // props (e.g. a txn.<appId> idempotence watermark) ride the staged
-    // entry: invisible like its rows until the marker publishes, then
-    // folded atomically WITH them — so a multi-table transaction can be
-    // made replay-safe (crash before publish → replay reprocesses; crash
-    // after → the visible watermark skips the whole transaction)
-    log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
-      schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = perFileBlooms(files, bloomCols),
-      fileRows = fileRowCounts(files), assignRowIds = true,
-      txnMarker = marker.toAbsolutePath.normalize.toString, props = props)
-  }
+      bloomCols: Seq[String] = Nil, props: Map[String, String] = Map.empty): Long =
+    appendAs("appendInTxn", df, Nil, Derive(statsCols, bloomCols), markerOf(marker), props)
 
   /** IDEMPOTENT append (Delta's txnAppId/txnVersion, Iceberg's WAP-id
     * dedup): the commit carries `txn.<appId> = version` as an entry
@@ -375,17 +471,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val last = properties().get(key).map(_.toLong).getOrElse(Long.MinValue)
     if (version <= last)
       return log.entries().lastOption.map(_.seq).getOrElse(-1L) // replayed batch: no-op
-    requireNoReserved(df)
-    val in = conformToCurrent(df)
-    enforceConstraints(in)
-    val dir = newShardDir("data")
-    in.write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(files, statsCols)
-    log.commit("add", dataFiles = files, stats = foldStats(fs, statsCols, strCols),
-      schemaJson = idSchemaJson(in.schema), fileStats = fs,
-      fileBlooms = perFileBlooms(files, bloomCols),
-      fileRows = fileRowCounts(files), assignRowIds = true,
+    appendAs("appendIdempotent", df, Nil, Derive(statsCols, bloomCols),
       props = Map(key -> version.toString))
   }
 
@@ -395,10 +481,9 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * partition column — so partition pruning IS file pruning, exactly how
     * Iceberg turns a manifest's partition tuple into scan pruning.
     *
-    * Write shape for scale: repartition BY the partition value first, so
-    * each partition value is written by exactly one task — one file per
-    * partition per epoch instead of (tasks × partitions) small files, the
-    * classic small-files explosion on a 1000-executor cluster. Readers
+    * Write shape for scale ([[writeLaidOut]]): one file per partition
+    * per epoch instead of (tasks × partitions) small files, the classic
+    * small-files explosion on a 1000-executor cluster. Readers
     * filter on the SOURCE column via planScan; the transform
     * never leaks into queries.
     */
@@ -417,8 +502,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * probe each open only their slice of the grid.
     */
   def appendPartitioned(df: DataFrame, specs: Seq[PartitionSpec],
-      statsCols: Seq[String], bloomCols: Seq[String]): Long =
-    appendPartitionedImpl(df, specs, statsCols, bloomCols, txnMarker = "")
+      statsCols: Seq[String], bloomCols: Seq[String]): Long = {
+    require(specs.nonEmpty, "at least one partition dimension")
+    require(specs.map(_.col).distinct.size == specs.size,
+      "one transform per source column")
+    appendAs("appendPartitioned", df, specs, Derive(statsCols, bloomCols))
+  }
 
   /** [[appendPartitioned]] STAGED under a multi-table transaction (the
     * partitioned analogue of [[appendInTxn]]): the entry carries the
@@ -429,42 +518,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     */
   def appendPartitionedInTxn(df: DataFrame, spec: PartitionSpec, marker: Path,
       statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long =
-    appendPartitionedImpl(df, Seq(spec), statsCols, bloomCols,
-      txnMarker = marker.toAbsolutePath.normalize.toString)
-
-  private def appendPartitionedImpl(df: DataFrame, specs: Seq[PartitionSpec],
-      statsCols: Seq[String], bloomCols: Seq[String], txnMarker: String): Long = {
-    require(specs.nonEmpty, "at least one partition dimension")
-    require(specs.map(_.col).distinct.size == specs.size,
-      "one transform per source column")
-    requireNoReserved(df)
-    val in = conformToCurrent(df)
-    enforceConstraints(in)
-    val dir = newShardDir("data")
-    val rootAtStart = rootKey()
-    val pcols = specs.indices.map(partColFor)
-    specs.zipWithIndex.foldLeft(in) { case (d, (sp, i)) =>
-        d.withColumn(partColFor(i), sp.transform.expr(col(sp.col)))
-      }
-      .repartition(pcols.map(col): _*)
-      .write.partitionBy(pcols: _*).parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    // the partition tuple is exact from the directory names — no scan
-    val partStat: Seq[Map[String, (String, String)]] = files.map { f =>
-      specs.indices.flatMap(i =>
-        partValueFromPath(f, i).map(v => partColFor(i) -> (v, v))).toMap
-    }
-    val (extra, strCols) = perFileStats(files, statsCols)
-    val merged =
-      if (extra.isEmpty) partStat
-      else partStat.zip(extra).map { case (a, b) => a ++ b }
-    requireSameRoot("appendPartitioned", rootAtStart)
-    log.commit("add", dataFiles = files, stats = foldStats(extra, statsCols, strCols),
-      schemaJson = idSchemaJson(in.schema), fileStats = merged,
-      partSpec = PartitionSpec.renderAll(specs),
-      fileBlooms = perFileBlooms(files, bloomCols),
-      fileRows = fileRowCounts(files), assignRowIds = true, txnMarker = txnMarker)
-  }
+    appendAs("appendPartitionedInTxn", df, Seq(spec), Derive(statsCols, bloomCols), markerOf(marker))
 
   /** Atomic partition overwrite (Iceberg's dynamic overwrite / INSERT
     * OVERWRITE PARTITION — the daily-backfill op): replace, in ONE
@@ -483,33 +537,19 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     requireNoReserved(df)
     val in = conformToCurrent(df)
     enforceConstraints(in)
-    val dir = newShardDir("data")
-    in.withColumn(PartCol, spec.transform.expr(col(spec.col)))
-      .repartition(col(PartCol))
-      .write.partitionBy(PartCol).parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val partStat: Seq[Map[String, (String, String)]] =
-      files.map(f => partValueFromPath(f, 0).map(v => PartCol -> (v, v)).toMap)
-    val (extra, strCols) = perFileStats(files, statsCols)
-    val merged =
-      if (extra.isEmpty) partStat
-      else partStat.zip(extra).map { case (a, b) => a ++ b }
-    val written = spark.read.schema(in.schema).parquet(dir.toString)
-    val pv = written.select(spec.transform.expr(col(spec.col)).as("_pv")).distinct()
-    // existing rows of the touched partitions -> distinct delete keys.
-    // The keys overlapping the new data are harmless: the delete scopes
-    // to seq strictly below this commit, so the replacement survives it.
-    val victims = read()
-      .join(pv, spec.transform.expr(col(spec.col)) === col("_pv"), "left_semi")
-      .select(col(spec.col)).distinct()
-    val delDir = newShardDir("deletes")
-    victims.write.parquet(delDir.toString)
-    log.commit("mixed", dataFiles = files, deleteFiles = parquetFilesIn(delDir),
-      equalityCols = Seq(spec.col), stats = foldStats(extra, statsCols, strCols),
-      schemaJson = idSchemaJson(in.schema), fileStats = merged,
-      partSpec = spec.render,
-      fileBlooms = perFileBlooms(files, bloomCols),
-      fileRows = fileRowCounts(files), assignRowIds = true)
+    writeAndCommit("overwritePartitions", "mixed", Derive(statsCols, bloomCols, partDims = 1),
+      Assign, equalityCols = Seq(spec.col), schemaJson = idSchemaJson(in.schema),
+      partSpec = spec.render) { shard =>
+      val dir = shard("data")
+      writeLaidOut(in, Seq(spec), dir)
+      val written = spark.read.schema(in.schema).parquet(dir)
+      val pv = written.select(spec.transform.expr(col(spec.col)).as("_pv")).distinct()
+      // existing rows of the touched partitions -> distinct delete keys.
+      // The keys overlapping the new data are harmless: the delete scopes
+      // to seq strictly below this commit, so the replacement survives it.
+      writeKeys(read().join(pv, spec.transform.expr(col(spec.col)) === col("_pv"), "left_semi"),
+        Seq(spec.col), shard("deletes"))
+    }._1
   }
 
   private val PartCol = "_p"
@@ -887,16 +927,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * `delete` entry scoped to the given equality columns
     * (deletes.rs:65-92).
     */
-  def delete(keys: DataFrame, equalityCols: Seq[String]): Long = {
-    require(equalityCols != CommitLog.DvCols,
-      s"equality columns ${CommitLog.DvCols.mkString(",")} are reserved for deletion vectors")
-    val dir = newShardDir("deletes")
-    val rootAtStart = rootKey()
-    keys.select(equalityCols.map(col): _*).distinct().write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    requireSameRoot("delete", rootAtStart)
-    log.commit("delete", deleteFiles = files, equalityCols = equalityCols)
-  }
+  def delete(keys: DataFrame, equalityCols: Seq[String]): Long =
+    deleteAs("delete", keys, equalityCols)
 
   /** equality delete STAGED under a multi-table transaction: identical to
     * [[delete]] except the entry carries the transaction's marker path —
@@ -907,17 +939,20 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * swallowing this entry). The delete-file write is batch-key-sized;
     * the commit is one metadata file like every delete.
     */
-  def deleteInTxn(keys: DataFrame, equalityCols: Seq[String], marker: Path): Long = {
+  def deleteInTxn(keys: DataFrame, equalityCols: Seq[String], marker: Path): Long =
+    deleteAs("deleteInTxn", keys, equalityCols, markerOf(marker))
+
+  private def deleteAs(op: String, keys: DataFrame, equalityCols: Seq[String],
+      txnMarker: String = ""): Long = {
     require(equalityCols != CommitLog.DvCols,
       s"equality columns ${CommitLog.DvCols.mkString(",")} are reserved for deletion vectors")
-    val dir = newShardDir("deletes")
-    val rootAtStart = rootKey()
-    keys.select(equalityCols.map(col): _*).distinct().write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    requireSameRoot("deleteInTxn", rootAtStart)
-    log.commit("delete", deleteFiles = files, equalityCols = equalityCols,
-      txnMarker = marker.toAbsolutePath.normalize.toString)
+    writeAndCommit(op, "delete", equalityCols = equalityCols, txnMarker = txnMarker)(shard =>
+      writeKeys(keys, equalityCols, shard("deletes")))._1
   }
+
+  /** an equality delete's key set: the distinct `cols` of `keys` */
+  private def writeKeys(keys: DataFrame, cols: Seq[String], dir: String): Unit =
+    keys.select(cols.map(col): _*).distinct().write.parquet(dir)
 
   /** physical row address columns exposed by readWithPos / consumed by
     * deleteAt: Spark's file-source _metadata struct.
@@ -968,15 +1003,19 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * a position uniquely identifies a row forever (until a replace
     * rewrites the file set, which folds prior deletes in).
     */
-  def deleteAt(positions: DataFrame): Long = {
-    val dir = newShardDir("deletes")
-    // store the CANONICAL key, not the write-time URI: the address must
-    // keep naming its row after the table directory moves
-    positions.select(fileKey(col(FileCol)).as(FileCol), col(PosCol))
-      .distinct().write.parquet(dir.toString)
+  def deleteAt(positions: DataFrame): Long =
     // empty equalityCols marks the positional flavor in the log entry
-    log.commit("posdelete", deleteFiles = parquetFilesIn(dir))
-  }
+    writeAndCommit("deleteAt", "posdelete")(shard =>
+      addressesOf(positions).write.parquet(shard("deletes")))._1
+
+  /** distinct (_file, _pos) row addresses under the CANONICAL file key,
+    * not the write-time URI: the address must keep naming its row after
+    * the table directory moves (also merges mixed-vintage renderings of
+    * the SAME file when a rewrite folds legacy URI-keyed positional files
+    * with fresh addresses)
+    */
+  private def addressesOf(addr: DataFrame): DataFrame =
+    addr.select(fileKey(col(FileCol)).as(FileCol), col(PosCol)).distinct()
 
   // ---- deletion vectors (Iceberg v3 DVs): the third delete flavor.
   // A DV file holds ONE ROW PER DATA FILE — (_file, _card, _words) where
@@ -1000,10 +1039,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * O(all deleted positions).
     */
   private def dvRowsOf(addr: DataFrame): DataFrame =
-    // canonical keys (see fileKey): also merges mixed-vintage renderings
-    // of the SAME file into one DV row when a rewrite folds legacy
-    // URI-keyed positional files with fresh addresses
-    addr.select(fileKey(col(FileCol)).as(FileCol), col(PosCol)).distinct()
+    addressesOf(addr)
       .select(col(FileCol), expr(s"int($PosCol div 64)").as("_wi"),
         expr(s"shiftleft(1L, int($PosCol % 64))").as("_bit"))
       .groupBy(col(FileCol), col("_wi")).agg(expr("bit_or(_bit)").as("_w"))
@@ -1025,20 +1061,18 @@ final class GraftTable(spark: SparkSession, val root: Path) {
           "b -> if(((_w >> b) & 1) = 1, cast(_wi as bigint) * 64 + b, " +
           "cast(null as bigint))), x -> x is not null)")).as(PosCol))
 
-  private def writeDvFiles(addr: DataFrame): Seq[String] = {
-    val dir = newShardDir("deletes")
-    dvRowsOf(addr).write.parquet(dir.toString)
-    parquetFilesIn(dir)
-  }
+  /** one deletion-vector commit of the addresses `addr` */
+  private def dvCommit(op: String, action: String, addr: DataFrame,
+      base: Option[Seq[LogEntry]] = None): Long =
+    writeAndCommit(op, action, equalityCols = CommitLog.DvCols, base = base)(shard =>
+      dvRowsOf(addr).write.parquet(shard("deletes")))._1
 
   /** POSITIONAL delete committed directly as a deletion vector:
     * semantically identical to [[deleteAt]] (drop exactly the addressed
     * rows), physically the bitmap encoding the read path applies without
     * an anti-join.
     */
-  def deleteVectors(positions: DataFrame): Long =
-    log.commit("dv", deleteFiles = writeDvFiles(positions),
-      equalityCols = CommitLog.DvCols)
+  def deleteVectors(positions: DataFrame): Long = dvCommit("deleteVectors", "dv", positions)
 
   /** Fold ALL live positional-flavor deletes — plain positional delete
     * files and existing vectors — into ONE deletion-vector commit
@@ -1070,29 +1104,21 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // validated like every state-dependent rewrite: a positional delete
     // committed after this fold's read would be superseded WITHOUT being
     // encoded — its rows would silently come back
-    log.commit("dvrewrite", deleteFiles = writeDvFiles(addr),
-      equalityCols = CommitLog.DvCols,
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+    dvCommit("rewritePositionDeletes", "dvrewrite", addr, base = Some(entries))
   }
 
-  /** shared tail of the mixed (append+delete-in-one-transaction) commits:
-    * write the key set as a delete file and commit both file sets atomically.
+  /** shared body of the mixed (append+delete-in-one-transaction)
+    * commits: `rows` staged as data, then the distinct `equalityCols` of
+    * `keys(dataShard)` as the delete, both committed in ONE entry.
     */
-  private def mixedCommit(dDir: Path, keys: DataFrame, equalityCols: Seq[String],
-      schemaJson: String, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, txnMarker: String = ""): Long = {
-    val delDir = newShardDir("deletes")
-    keys.select(equalityCols.map(col): _*).distinct().write.parquet(delDir.toString)
-    val files = parquetFilesIn(dDir)
-    val (fs, strCols) = perFileStats(files, statsCols)
-    log.commit("mixed", dataFiles = files,
-      deleteFiles = parquetFilesIn(delDir), equalityCols = equalityCols,
-      stats = foldStats(fs, statsCols, strCols),
-      schemaJson = schemaJson, fileStats = fs,
-      fileBlooms = perFileBlooms(files, bloomCols),
-      fileRows = fileRowCounts(files), assignRowIds = true,
-      txnMarker = txnMarker)
-  }
+  private def mixedCommit(op: String, rows: DataFrame, equalityCols: Seq[String],
+      derive: Derive = Derive(), txnMarker: String = "")(keys: String => DataFrame): Long =
+    writeAndCommit(op, "mixed", derive, Assign, equalityCols = equalityCols,
+      schemaJson = idSchemaJson(rows.schema), txnMarker = txnMarker) { shard =>
+      val dir = shard("data")
+      rows.write.parquet(dir)
+      writeKeys(keys(dir), equalityCols, shard("deletes"))
+    }._1
 
   /** MoR upsert STAGED under a multi-table transaction (the reference's
     * atomic mixed commit, deletes.rs:94-110, inside the multi-table
@@ -1103,16 +1129,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * own delete). Keys come from the written files, upsert's determinism
     * doctrine; constraints gate the replacement rows.
     */
-  def upsertInTxn(df: DataFrame, keyCols: Seq[String], marker: Path): Long = {
-    requireNoReserved(df)
-    val in = conformToCurrent(df)
-    val dDir = newShardDir("data")
-    in.write.parquet(dDir.toString)
-    val written = spark.read.schema(in.schema).parquet(dDir.toString)
-    enforceConstraints(written)
-    mixedCommit(dDir, written, keyCols, idSchemaJson(in.schema),
-      txnMarker = marker.toAbsolutePath.normalize.toString)
-  }
+  def upsertInTxn(df: DataFrame, keyCols: Seq[String], marker: Path): Long =
+    upsertAs("upsertInTxn", df, keyCols, Derive(), markerOf(marker))
 
   /** atomic mixed commit: new data files AND a delete in ONE log entry
     * (deletes.rs:94-110 — appends + deletes in a single transaction).
@@ -1121,9 +1139,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     requireNoReserved(df)
     val in = conformToCurrent(df)
     enforceConstraints(in)
-    val dDir = newShardDir("data")
-    in.write.parquet(dDir.toString)
-    mixedCommit(dDir, keys, equalityCols, idSchemaJson(in.schema))
+    mixedCommit("appendAndDelete", in, equalityCols)(_ => keys)
   }
 
   /** snapshot read; `asOf` = time travel to that committed seq. */
@@ -1604,24 +1620,27 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * generalized to "latest row wins".
     */
   def upsert(df: DataFrame, keyCols: Seq[String],
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
+      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long =
+    upsertAs("upsert", df, keyCols, Derive(statsCols, bloomCols))
+
+  private def upsertAs(op: String, df: DataFrame, keyCols: Seq[String], derive: Derive,
+      txnMarker: String = ""): Long = {
     requireNoReserved(df)
     val in = conformToCurrent(df)
-    val dDir = newShardDir("data")
-    in.write.parquet(dDir.toString)
-    // the delete-key set comes from the data ALREADY WRITTEN, not from a
-    // second evaluation of df's lineage: a non-deterministic source
-    // (sample(), mid-ingest re-read) would otherwise delete keys it never
-    // appended, or append rows whose old versions survive
-    val written = spark.read.schema(in.schema).parquet(dDir.toString)
-    // constraints gate the INSERTED/REPLACEMENT rows (ADVICE r6: every
-    // row-adding path, not just append) — checked over the written
-    // parquet, honoring the same determinism doctrine as the delete keys;
-    // a violation throws BEFORE the commit, leaving the table unchanged
-    // (the orphaned shard is reclaimed by removeOrphanFiles)
-    enforceConstraints(written)
-    mixedCommit(dDir, written, keyCols, idSchemaJson(in.schema),
-      statsCols, bloomCols)
+    mixedCommit(op, in, keyCols, derive, txnMarker) { dir =>
+      // the delete-key set comes from the data ALREADY WRITTEN, not from a
+      // second evaluation of df's lineage: a non-deterministic source
+      // (sample(), mid-ingest re-read) would otherwise delete keys it never
+      // appended, or append rows whose old versions survive
+      val written = spark.read.schema(in.schema).parquet(dir)
+      // constraints gate the INSERTED/REPLACEMENT rows (ADVICE r6: every
+      // row-adding path, not just append) — checked over the written
+      // parquet, honoring the same determinism doctrine as the delete keys;
+      // a violation throws BEFORE the commit, leaving the table unchanged
+      // (the orphaned shard is reclaimed by removeOrphanFiles)
+      enforceConstraints(written)
+      written
+    }
   }
 
   /** Full three-clause MERGE INTO (Iceberg/Delta's
@@ -1687,10 +1706,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       // constraints gate the UPDATE/INSERT rows (over the staged source —
       // deterministic re-read, so the checked rows ARE the written rows)
       enforceConstraints(appendRows)
-      val delKeys = matched.select(keyCols.map(col): _*).distinct()
-      val dDir = newShardDir("data")
-      appendRows.write.parquet(dDir.toString)
-      mixedCommit(dDir, delKeys, keyCols, idSchemaJson(appendRows.schema))
+      mixedCommit("merge", appendRows, keyCols)(_ => matched)
     } finally {
       walked(stage)(_.toSeq).reverse.foreach(p =>
         try Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
@@ -1732,17 +1748,13 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // the current head without burning a sequence number.
     if (entries.isEmpty) return log.headSeq()
     val state @ (dataFiles, deleteFiles) = CommitLog.stateFrom(entries)
-    val schemaJson =
-      entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
-    val liveSeqs = dataFiles.map(_._2).toSet
-    val uniformSchema = (entries.filter(e => liveSeqs(e.seq) && e.dataFiles.nonEmpty)
-      .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
+    val (schemaJson, uniformSchema) = liveSchema(entries, dataFiles)
     def applySet(df: DataFrame): DataFrame =
       set.foldLeft(df) { case (d, (c, e)) =>
         d.withColumn(c, when(col(keyCol) === lit(value), e).otherwise(col(c)))
       }
     // schema preservation is judged on the PLAN only (no data read)
-    val (fullView, fullMat) = rewriteSource(entries, state)
+    val fullView = rewriteSource(entries, state)
     // constraints gate the POST-ASSIGNMENT versions of the touched rows
     // (ADVICE r6): an UPDATE must not be the path that sneaks a violating
     // value into a CHECK-gated table. Only the updated rows are checked
@@ -1751,49 +1763,15 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     enforceConstraints(applySet(fullView).filter(col(keyCol) === lit(value)))
     val schemaChanged =
       logicalSchemaOf(applySet(fullView)).json != logicalSchemaOf(fullView).json
-    val dir = newShardDir("data")
-    if (deleteFiles.nonEmpty || !uniformSchema || schemaChanged) {
-      applySet(fullView).write.parquet(dir.toString)
-      val files = parquetFilesIn(dir)
-      val (fs, strCols) = perFileStats(files, statsCols)
-      val (mrows, mids) = physMarkers(files, fullMat)
-      return log.commit("replace", dataFiles = files,
-        stats = foldStats(fs, statsCols, strCols),
-        schemaJson = materializedSchemaJson(applySet(fullView)),
-        fileStats = fs,
-        fileBlooms = perFileBlooms(files, bloomCols),
-        fileRows = mrows, fileRowIds = mids,
-        rowIdHigh = CommitLog.nextRowId(entries),
-        expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
-    }
+    val derive = Derive(statsCols, bloomCols)
+    if (deleteFiles.nonEmpty || !uniformSchema || schemaChanged)
+      return rewriteCommit("updateWhereEq", entries, Some(applySet(fullView)), derive,
+        materializedSchemaJson(applySet(fullView)))._1
     val affected = CommitLog.stateFrom(entries, eqPrunes(entries, keyCol, value))._1
     if (affected.isEmpty) return entries.last.seq // key provably absent: no-op
     val affectedPaths = affected.map(_._1).toSet
-    val kept = dataFiles.filterNot(f => affectedPaths(f._1))
-    val (src, mat) = rewriteSource(entries, (affected, Nil))
-    applySet(src).write.parquet(dir.toString)
-    val newFiles = parquetFilesIn(dir)
-    val (newStats, _) = perFileStats(newFiles, statsCols)
-    val newBlooms = perFileBlooms(newFiles, bloomCols)
-    val (keptStats, keptBlooms) = adoptedMeta(entries, kept)
-    val (keptRows, keptIds) = adoptedLineage(entries, kept)
-    val padStats =
-      if (newStats.isEmpty) newFiles.map(_ => Map.empty[String, (String, String)])
-      else newStats
-    val padBlooms =
-      if (newBlooms.isEmpty) newFiles.map(_ => Map.empty[String, String])
-      else newBlooms
-    // no commit-level stats fold, same rationale as compactSmall: the
-    // adopted files' recorded columns may differ from statsCols
-    log.commit("replace",
-      dataFiles = kept.map(_._1) ++ newFiles,
-      schemaJson = schemaJson,
-      fileStats = keptStats ++ padStats,
-      fileBlooms = keptBlooms ++ padBlooms,
-      fileRows = keptRows ++ newFiles.map(_ => 0L),
-      fileRowIds = keptIds ++ newFiles.map(_ => if (mat) -2L else -1L),
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+    rewriteCommit("updateWhereEq", entries, Some(applySet(rewriteSource(entries, (affected, Nil)))),
+      derive, schemaJson, adopt = Some(dataFiles.filterNot(f => affectedPaths(f._1))))._1
   }
 
   /** DELETE WHERE col BETWEEN lo AND hi, metadata-only when the layout
@@ -1829,28 +1807,13 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // report carries the unchanged head and zero file classifications.
     if (entries.isEmpty) return DeleteWhereReport(log.headSeq(), 0, 0, 0)
     val state @ (dataFiles, deleteFiles) = CommitLog.stateFrom(entries)
-    val schemaJson =
-      entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
-    val liveSeqs = dataFiles.map(_._2).toSet
-    val uniformSchema = (entries.filter(e => liveSeqs(e.seq) && e.dataFiles.nonEmpty)
-      .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
+    val (schemaJson, uniformSchema) = liveSchema(entries, dataFiles)
     // predicate-NULL rows survive: not(coalesce(cond, false))
     val retain = !coalesce(col(colName) >= lit(loV) && col(colName) <= lit(hiV), lit(false))
-    val dir = newShardDir("data")
+    val derive = Derive(statsCols, bloomCols)
     if (deleteFiles.nonEmpty || !uniformSchema) {
-      val (fullView, fullMat) = rewriteSource(entries, state)
-      fullView.filter(retain).write.parquet(dir.toString)
-      val files = parquetFilesIn(dir)
-      val (fs, strCols) = perFileStats(files, statsCols)
-      val (mrows, mids) = physMarkers(files, fullMat)
-      val seq = log.commit("replace", dataFiles = files,
-        stats = foldStats(fs, statsCols, strCols),
-        schemaJson = schemaJson,
-        fileStats = fs,
-        fileBlooms = perFileBlooms(files, bloomCols),
-        fileRows = mrows, fileRowIds = mids,
-        rowIdHigh = CommitLog.nextRowId(entries),
-        expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+      val (seq, files) = rewriteCommit("deleteWhereRange", entries,
+        Some(rewriteSource(entries, state).filter(retain)), derive, schemaJson)
       return DeleteWhereReport(seq, dropped = dataFiles.size, kept = 0,
         rewritten = files.size)
     }
@@ -1874,23 +1837,6 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val straddling = classed.collect { case (f, 2) => f }
     if (dropped.isEmpty && straddling.isEmpty)
       return DeleteWhereReport(entries.last.seq, 0, kept.size, 0) // provably no match
-    val (newFiles, mat) =
-      if (straddling.isEmpty) (Nil, false)
-      else {
-        val (src, m) = rewriteSource(entries, (straddling, Nil))
-        src.filter(retain).write.parquet(dir.toString)
-        (parquetFilesIn(dir), m)
-      }
-    val (newStats0, _) = perFileStats(newFiles, statsCols)
-    val newBlooms0 = perFileBlooms(newFiles, bloomCols)
-    val (keptStats, keptBlooms) = adoptedMeta(entries, kept)
-    val (keptRows, keptIds) = adoptedLineage(entries, kept)
-    val padStats =
-      if (newStats0.isEmpty) newFiles.map(_ => Map.empty[String, (String, String)])
-      else newStats0
-    val padBlooms =
-      if (newBlooms0.isEmpty) newFiles.map(_ => Map.empty[String, String])
-      else newBlooms0
     // spec-scoped pruning survives a metadata-only range delete (ADVICE
     // r6): when no straddler was rewritten and every adopted file was
     // written under ONE partition spec, the replace records that spec —
@@ -1901,19 +1847,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val specBySeq = entries.map(e => e.seq -> e.partSpec).toMap
     val keptSpecs = kept.map(f => specBySeq.getOrElse(f._2, "")).distinct
     val outSpec =
-      if (newFiles.isEmpty && keptSpecs.size == 1) keptSpecs.head else ""
-    // no commit-level stats fold: adopted files' recorded columns may
-    // differ from statsCols (same rationale as compactSmall)
-    val seq = log.commit("replace",
-      dataFiles = kept.map(_._1) ++ newFiles,
-      schemaJson = schemaJson,
-      fileStats = keptStats ++ padStats,
-      partSpec = outSpec,
-      fileBlooms = keptBlooms ++ padBlooms,
-      fileRows = keptRows ++ newFiles.map(_ => 0L),
-      fileRowIds = keptIds ++ newFiles.map(_ => if (mat) -2L else -1L),
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+      if (straddling.isEmpty && keptSpecs.size == 1) keptSpecs.head else ""
+    val (seq, newFiles) = rewriteCommit("deleteWhereRange", entries,
+      Option.when(straddling.nonEmpty)(rewriteSource(entries, (straddling, Nil)).filter(retain)),
+      derive, schemaJson, partSpec = outSpec, adopt = Some(kept))
     DeleteWhereReport(seq, dropped.size, kept.size, newFiles.size)
   }
 
@@ -2263,7 +2200,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   }
 
   /** range predicates on one column, one rule keyed on its recorded type.
-    * A STRING column records native lexicographic stats, so it takes its
+    * A STRING column records code-point-ordered stats, so it takes its
     * tightest string bounds, plus the prefix range on every string-valued
     * order-preserving dimension over it (truncstr: a prefix sorts ≤
     * everything it prefixes). Any other column takes its tightest decimal
@@ -2286,7 +2223,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       sp.col == colName && sp.transform.orderPreserving }
     if (colType == StringType) {
       def strs(vs: Seq[Any]) = vs.collect { case s: String => s }
-      (for (lo <- strs(los).maxOption; hi <- strs(his).minOption) yield
+      (for (lo <- strs(los).maxOption(Prune.StrOrder); hi <- strs(his).minOption(Prune.StrOrder)) yield
         Prune.str(colName, lo, hi) +: dims.collect {
           case (sp, i) if sp.transform.stringValued =>
             for (plo <- partitionValueStrOf(sp, lo); phi <- partitionValueStrOf(sp, hi))
@@ -2569,13 +2506,50 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * survives even after expiration drops the entries that advanced it.
     */
   private def rewriteSource(entries: Seq[LogEntry],
-      state: (Seq[(String, Long)], Seq[(String, Long, Seq[String])]))
-      : (DataFrame, Boolean) = {
-    val hasLineage = entries.exists(_.rowIdHigh >= 0)
-    if (!hasLineage) (readPrunedState(state, entries), false)
-    else (readPrunedState(state, entries, rowLineage = true)
+      state: (Seq[(String, Long)], Seq[(String, Long, Seq[String])])): DataFrame =
+    if (!materializes(entries)) readPrunedState(state, entries)
+    else readPrunedState(state, entries, rowLineage = true)
       .withColumnRenamed(RowIdCol, RowIdPhys)
-      .withColumnRenamed(LastSeqCol, LastSeqPhys), true)
+      .withColumnRenamed(LastSeqCol, LastSeqPhys)
+
+  /** whether a rewrite of `entries`' state materializes row lineage: the
+    * table carries it
+    */
+  private def materializes(entries: Seq[LogEntry]): Boolean = entries.exists(_.rowIdHigh >= 0)
+
+  /** The schema a flat replace entry records (the latest in `entries`)
+    * and whether every live file of `live` was written under it: a
+    * replace entry holds one schema and reads its files in ONE scan, so
+    * it can adopt them by path, or scan them together, only then. A
+    * metadata-only rename or widen after the last data commit changes the
+    * recorded schema without touching any file.
+    */
+  private def liveSchema(entries: Seq[LogEntry], live: Seq[(String, Long)]): (String, Boolean) = {
+    val schemaJson =
+      entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
+    val liveSeqs = live.map(_._2).toSet
+    (schemaJson, (entries.filter(e => liveSeqs(e.seq) && e.dataFiles.nonEmpty)
+      .map(_.schemaJson) :+ schemaJson).distinct.size <= 1)
+  }
+
+  /** Every `replace` that stages files, through [[writeAndCommit]]: `out`
+    * (None: nothing staged) is written as the data shard, laid out by
+    * `layout`, and replaces the live set of `entries` — all of it, or all
+    * but the files `adopt` keeps by path. Row lineage materializes when
+    * `entries` carry it; the commit validates against `base` (default
+    * `entries`) and carries its id counter forward. Returns the entry's
+    * seq and the fresh files.
+    */
+  private def rewriteCommit(op: String, entries: Seq[LogEntry], out: Option[DataFrame],
+      derive: Derive, schemaJson: => String, layout: Seq[PartitionSpec] = Nil,
+      partSpec: String = "", base: Option[Seq[LogEntry]] = None,
+      adopt: Option[Seq[(String, Long)]] = None): (Long, Seq[String]) = {
+    val b = base.getOrElse(entries)
+    writeAndCommit(op, "replace", derive.copy(partDims = layout.size),
+      Rewritten(materializes(entries), CommitLog.nextRowId(b)), schemaJson = schemaJson,
+      partSpec = if (layout.isEmpty) partSpec else PartitionSpec.renderAll(layout),
+      base = Some(b), adopt = adopt.map(entries -> _))(shard =>
+      out.foreach(writeLaidOut(_, layout, shard("data"))))
   }
 
   /** PhysLineage marker for every file of a fresh lineage-materializing
@@ -2653,22 +2627,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     rewriteRetry(compactOnce(statsCols, bloomCols))
 
   private def compactOnce(statsCols: Seq[String], bloomCols: Seq[String]): Long = {
-    val dir = newShardDir("data")
-    val rootAtStart = rootKey()
     val entries = log.entries()
-    val (view, mat) = rewriteSource(entries, CommitLog.stateFrom(entries))
-    view.write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(files, statsCols)
-    val (mrows, mids) = physMarkers(files, mat)
-    requireSameRoot("compact", rootAtStart)
-    log.commit("replace", dataFiles = files,
-      stats = foldStats(fs, statsCols, strCols),
-      schemaJson = materializedSchemaJson(view), fileStats = fs,
-      fileBlooms = perFileBlooms(files, bloomCols),
-      fileRows = mrows, fileRowIds = mids,
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+    val view = rewriteSource(entries, CommitLog.stateFrom(entries))
+    rewriteCommit("compact", entries, Some(view), Derive(statsCols, bloomCols),
+      materializedSchemaJson(view))._1
   }
 
   /** Partition-layout-PRESERVING compaction: the MoR view rewrites under
@@ -2686,32 +2648,11 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     rewriteRetry(compactPartitionedOnce(spec, statsCols))
 
   private def compactPartitionedOnce(spec: PartitionSpec, statsCols: Seq[String]): Long = {
-    val dir = newShardDir("data")
     val entries = log.entries()
     require(entries.nonEmpty, "compact on an empty table")
-    val (view, mat) = rewriteSource(entries, CommitLog.stateFrom(entries))
-    val pcol = partColFor(0)
-    view.withColumn(pcol, spec.transform.expr(col(spec.col)))
-      .repartition(col(pcol))
-      .write.partitionBy(pcol).parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    // exact partition tuple from the directory names — no data scan
-    val partStat: Seq[Map[String, (String, String)]] = files.map { f =>
-      partValueFromPath(f, 0).map(v => pcol -> (v, v)).toMap
-    }
-    val (extra, strCols) = perFileStats(files, statsCols)
-    val merged =
-      if (extra.isEmpty) partStat
-      else partStat.zip(extra).map { case (a, b) => a ++ b }
-    val (mrows, mids) = physMarkers(files, mat)
-    log.commit("replace", dataFiles = files,
-      stats = foldStats(extra, statsCols, strCols),
-      schemaJson = materializedSchemaJson(view.drop(pcol)),
-      fileStats = merged,
-      partSpec = PartitionSpec.renderAll(Seq(spec)),
-      fileRows = mrows, fileRowIds = mids,
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+    val view = rewriteSource(entries, CommitLog.stateFrom(entries))
+    rewriteCommit("compactPartitioned", entries, Some(view), Derive(statsCols),
+      materializedSchemaJson(view), layout = Seq(spec))._1
   }
 
   /** Bin-packing small-file compaction (Iceberg's rewrite_data_files
@@ -2753,13 +2694,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       bloomCols: Seq[String]): Long = {
     val entries = log.entries()
     require(entries.nonEmpty, "compactSmall on an empty table")
-    val rootAtStart = rootKey()
     val (dataFiles, deleteFiles) = CommitLog.stateFrom(entries)
-    val schemaJson =
-      entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
-    val liveSeqs = dataFiles.map(_._2).toSet
-    val uniformSchema = (entries.filter(e => liveSeqs(e.seq) && e.dataFiles.nonEmpty)
-      .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
+    val (schemaJson, uniformSchema) = liveSchema(entries, dataFiles)
     // the full-rewrite fallback records the SAME skipping metadata the
     // caller asked for — a maintenance op must never erase pruning
     if (deleteFiles.exists(d => CommitLog.isPositionalFlavor(d._3)) || !uniformSchema)
@@ -2775,7 +2711,6 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val touched = sized.filter(x => !packedPaths(x._1) && reach.exists(_((x._1, x._2))))
     val rewritten = packedPaths ++ touched.map(_._1)
     val kept = sized.filterNot(x => rewritten(x._1))
-    val dir = newShardDir("data")
     val outFiles =
       math.max(1, math.ceil(packed.map(_._3).sum.toDouble / targetBytes).toInt)
     // all read through the lineage-aware MoR view, deletes applied: the
@@ -2786,38 +2721,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // clustering and its pruning.
     val views = (Seq(packed -> true).filter(_._1.nonEmpty) ++ touched.map(f => Seq(f) -> false))
       .map { case (fs, pack) =>
-        val (v, mat) = rewriteSource(entries, (fs.map(x => (x._1, x._2)), deleteFiles))
-        (if (pack) v.repartition(outFiles) else v, mat)
+        val v = rewriteSource(entries, (fs.map(x => (x._1, x._2)), deleteFiles))
+        if (pack) v.repartition(outFiles) else v
       }
-    views.map(_._1).reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .foreach(_.write.parquet(dir.toString))
-    val newFiles = if (views.isEmpty) Nil else parquetFilesIn(dir)
-    val newMat = views.exists(_._2)
-    val (newStats, _) = perFileStats(newFiles, statsCols)
-    val newBlooms = perFileBlooms(newFiles, bloomCols)
-    val (keptStats, keptBlooms) = adoptedMeta(entries, kept.map(x => (x._1, x._2)))
-    val (keptRows, keptIds) = adoptedLineage(entries, kept.map(x => (x._1, x._2)))
-    val padStats =
-      if (newStats.isEmpty) newFiles.map(_ => Map.empty[String, (String, String)])
-      else newStats
-    val padBlooms =
-      if (newBlooms.isEmpty) newFiles.map(_ => Map.empty[String, String])
-      else newBlooms
-    requireSameRoot("compactSmall", rootAtStart)
-    // no commit-level stats fold: the adopted files' recorded columns may
-    // differ from statsCols, and absent commit stats just mean pruning
-    // consults the per-file bounds directly (never-prune-blind fallback)
-    log.commit("replace",
-      dataFiles = kept.map(_._1) ++ newFiles,
-      schemaJson = schemaJson,
-      fileStats = keptStats ++ padStats,
-      fileBlooms = keptBlooms ++ padBlooms,
-      // kept files adopt their lineage; rewritten files carry it
-      // physically (marker -2 — the read path uses their materialized column)
-      fileRows = keptRows ++ newFiles.map(_ => 0L),
-      fileRowIds = keptIds ++ newFiles.map(_ => if (newMat) -2L else -1L),
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+    rewriteCommit("compactSmall", entries,
+      views.reduceOption(_.unionByName(_, allowMissingColumns = true)),
+      Derive(statsCols, bloomCols), schemaJson, adopt = Some(kept.map(x => (x._1, x._2))))._1
   }
 
   /** Backfill per-file column stats (Iceberg's compute-stats
@@ -2843,19 +2752,15 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val entries = log.entries()
     require(entries.nonEmpty, "recomputeStats on an empty table")
     val (dataFiles, deleteFiles) = CommitLog.stateFrom(entries)
-    val schemaJson =
-      entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
-    val liveSeqs = dataFiles.map(_._2).toSet
-    val uniformSchema = (entries.filter(e => liveSeqs(e.seq) && e.dataFiles.nonEmpty)
-      .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
+    val (schemaJson, uniformSchema) = liveSchema(entries, dataFiles)
     if (deleteFiles.nonEmpty || !uniformSchema) return compact(statsCols)
     val files = dataFiles.map(_._1)
-    val (fresh, strCols) = perFileStats(files, statsCols)
+    val fresh = derived(files, Derive(statsCols), NoLineage)
     val (oldStats, oldBlooms) = adoptedMeta(entries, dataFiles)
     val (rows, ids) = adoptedLineage(entries, dataFiles)
-    val merged = oldStats.zip(fresh).map { case (o, f) => o ++ f }
+    val merged = oldStats.zip(fresh.fileStats).map { case (o, f) => o ++ f }
     log.commit("replace", dataFiles = files,
-      stats = foldStats(merged, statsCols, strCols),
+      stats = foldStats(merged, statsCols, fresh.strCols),
       schemaJson = schemaJson, fileStats = merged, fileBlooms = oldBlooms,
       fileRows = rows, fileRowIds = ids,
       rowIdHigh = CommitLog.nextRowId(entries),
@@ -2890,42 +2795,22 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val entries = log.entries(seq)
     require(entries.nonEmpty, s"no committed snapshot at or before $seq")
     val (dataFiles, deleteFiles) = CommitLog.stateFrom(entries)
-    val schemaJson =
-      entries.filter(_.schemaJson.nonEmpty).lastOption.map(_.schemaJson).getOrElse("")
-    val liveSeqs = dataFiles.map(_._2).toSet
-    // uniform ACROSS the live files AND equal to the schema the replace
-    // entry will record — a metadata-only rename/widen after the last
-    // data commit changes the latter without touching any file
-    val uniformSchema = (entries.filter(e => liveSeqs(e.seq) && e.dataFiles.nonEmpty)
-      .map(_.schemaJson) :+ schemaJson).distinct.size <= 1
+    val (schemaJson, uniformSchema) = liveSchema(entries, dataFiles)
     // the id counter must NEVER regress — derive it from the FULL log,
     // not the rollback target: ids assigned after `seq` stay burned.
     // The full committed set is also the rewrite's conflict base: a
     // commit landing ANYWHERE (even above the target) while the rollback
     // builds would be silently superseded by the replace.
-    val allEntries = log.entries()
-    val base = Some(allEntries.map(_.seq).toSet)
-    val high = CommitLog.nextRowId(allEntries)
-    if (deleteFiles.isEmpty && uniformSchema) {
+    val base = Some(log.entries())
+    if (deleteFiles.isEmpty && uniformSchema)
       // metadata-only: adopt the live files by path, keep their stats
       // AND blooms (a rollback must not reopen the point-read pruning
       // gap the filters were recorded to close) and their row lineage
-      val (fs, fb) = adoptedMeta(entries, dataFiles)
-      val (rows, ids) = adoptedLineage(entries, dataFiles)
-      log.commit("replace", dataFiles = dataFiles.map(_._1),
-        schemaJson = schemaJson, fileStats = fs, fileBlooms = fb,
-        fileRows = rows, fileRowIds = ids, rowIdHigh = high,
-        expectedCommittedSeqs = base)
-    } else {
-      val dir = newShardDir("data")
-      val (view, mat) = rewriteSource(entries, (dataFiles, deleteFiles))
-      view.write.parquet(dir.toString)
-      val files = parquetFilesIn(dir)
-      val (mrows, mids) = physMarkers(files, mat)
-      log.commit("replace", dataFiles = files, schemaJson = schemaJson,
-        fileRows = mrows, fileRowIds = mids, rowIdHigh = high,
-        expectedCommittedSeqs = base)
-    }
+      rewriteCommit("rollbackTo", entries, None, Derive(), schemaJson, base = base,
+        adopt = Some(dataFiles))._1
+    else rewriteCommit("rollbackTo", entries,
+      Some(rewriteSource(entries, (dataFiles, deleteFiles))), Derive(), schemaJson,
+      base = base)._1
   }
 
   /** Sort-clustered compaction (Iceberg's rewrite_data_files with a sort
@@ -2941,22 +2826,11 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     rewriteRetry(compactSortedOnce(sortCol, numFiles))
 
   private def compactSortedOnce(sortCol: String, numFiles: Int): Long = {
-    val dir = newShardDir("data")
     val entries = log.entries()
-    val (view, mat) = rewriteSource(entries, CommitLog.stateFrom(entries))
-    view.repartitionByRange(numFiles, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(files, Seq(sortCol))
-    val (mrows, mids) = physMarkers(files, mat)
-    log.commit("replace", dataFiles = files,
-      stats = foldStats(fs, Seq(sortCol), strCols),
-      schemaJson = materializedSchemaJson(view),
-      fileStats = fs,
-      fileRows = mrows, fileRowIds = mids,
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = Some(entries.map(_.seq).toSet))
+    val view = rewriteSource(entries, CommitLog.stateFrom(entries))
+    rewriteCommit("compactSorted", entries,
+      Some(view.repartitionByRange(numFiles, col(sortCol)).sortWithinPartitions(sortCol)),
+      Derive(Seq(sortCol)), materializedSchemaJson(view))._1
   }
 
   /** Z-order compaction (Iceberg's rewrite_data_files with zorder(a, b)):
@@ -2980,9 +2854,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   private def compactZOrderOnce(cols: Seq[String], numFiles: Int): Long = {
     require(cols.size == 2, "z-order is implemented for two dimensions")
     require(Set(4, 16, 64, 256)(numFiles), s"numFiles must be a power of 4, got $numFiles")
-    val dir = newShardDir("data")
     val entries = log.entries()
-    val (view, mat) = rewriteSource(entries, CommitLog.stateFrom(entries))
+    val view = rewriteSource(entries, CommitLog.stateFrom(entries))
     val Seq(a, b) = cols
     val bounds = view.agg(
       min(col(a)).cast("double"), max(col(a)).cast("double"),
@@ -3002,29 +2875,19 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     def spreadBits(c: Column): Column =
       (0 until 16).map(i => shiftleft(shiftright(c, i).bitwiseAND(lit(1L)), 2 * i))
         .reduce(_ bitwiseOR _)
-    val zOrderBase = Some(entries.map(_.seq).toSet)
     val z = spreadBits(norm(a, bd(0), bd(1)))
       .bitwiseOR(shiftleft(spreadBits(norm(b, bd(2), bd(3))), 1))
     // explicit equal z-range bucket per file: top log2(numFiles) bits
     val shift = 32 - (math.log(numFiles) / math.log(2)).round.toInt
     val zq = shiftright(z, shift)
     val outCols = view.columns.map(col).toIndexedSeq
-    view
-      .withColumn("_zval", z).withColumn("_zq", zq)
-      .repartitionByRange(numFiles, col("_zq"))
-      .sortWithinPartitions("_zval")
-      .select(outCols: _*)
-      .write.parquet(dir.toString)
-    val files = parquetFilesIn(dir)
-    val (fs, strCols) = perFileStats(files, cols)
-    val (mrows, mids) = physMarkers(files, mat)
-    log.commit("replace", dataFiles = files,
-      stats = foldStats(fs, cols, strCols),
-      schemaJson = materializedSchemaJson(view),
-      fileStats = fs,
-      fileRows = mrows, fileRowIds = mids,
-      rowIdHigh = CommitLog.nextRowId(entries),
-      expectedCommittedSeqs = zOrderBase)
+    rewriteCommit("compactZOrder", entries,
+      Some(view
+        .withColumn("_zval", z).withColumn("_zq", zq)
+        .repartitionByRange(numFiles, col("_zq"))
+        .sortWithinPartitions("_zval")
+        .select(outCols: _*)),
+      Derive(cols), materializedSchemaJson(view))._1
   }
 
   /** Orphan-file removal WITHOUT expiration (Iceberg's standalone
@@ -3231,6 +3094,31 @@ final case class DeleteWhereReport(seq: Long, dropped: Int, kept: Int, rewritten
 object GraftTable {
   /** field-metadata key holding a column's stable field id */
   private[table] val FidKey = "graft_fid"
+
+  /** What a staged write derives from its fresh data files: per-file
+    * bounds for `statsCols` and their commit-level fold, blooms for
+    * `bloomCols` at `bloomBits`, and the exact [v, v] values of the first
+    * `partDims` partition dimensions, read from the directory names.
+    */
+  private final case class Derive(statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      bloomBits: Int = Bloom.DefaultM, partDims: Int = 0)
+
+  /** How a commit records its fresh data files' row lineage. */
+  private sealed trait Lineage
+  /** none: the commit stages delete files only */
+  private case object NoLineage extends Lineage
+  /** footer row counts; the commit assigns the files fresh row ids */
+  private case object Assign extends Lineage
+  /** a rewrite's output, carrying its rows' ids physically when
+    * `materialized` ([[physMarkers]]); the entry carries the id counter
+    * `rowIdHigh` forward
+    */
+  private final case class Rewritten(materialized: Boolean, rowIdHigh: Long) extends Lineage
+
+  /** Metadata derived from fresh data files by [[derived]]. */
+  private final case class Derived(files: Seq[String], strCols: Set[String],
+      fold: Seq[(String, String, String)], fileStats: Seq[Map[String, (String, String)]],
+      blooms: Seq[Map[String, String]], rows: Seq[Long], ids: Seq[Long])
 
   /** idempotent create: drop-if-exists then create — the reference's
     * init() shape (lib.rs:44-78: exists → drop → create).

@@ -180,4 +180,31 @@ class NativeFnSpec extends AnyFunSuite {
     assert(rows(0).getSeq[Any](0).head == 3L)
     assert(rows(2).getSeq[Any](0).forall(_ == null))
   }
+
+  test("the extensions and register paths expose exactly the one function table") {
+    import org.apache.spark.sql.SparkSession
+    import graft.functions.{GraftExtensions, GraftFunctions}
+    val names = GraftFunctions.table.map(_._1.funcName).toSet
+    assert(names.size == GraftFunctions.table.size)
+    def graftFns(s: SparkSession): Set[String] = s.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    val shared = spark // the fixture's context, which the new session reuses
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).create()
+      finally { SparkSession.setActiveSession(shared); SparkSession.setDefaultSession(shared) }
+    // every session of this context also gets the extensions from its
+    // conf, so the register path starts from a session stripped of them
+    val reg = ext.newSession()
+    GraftFunctions.table.foreach(f => reg.sessionState.functionRegistry.dropFunction(f._1))
+    assert(graftFns(reg).isEmpty)
+    GraftFunctions.register(reg)
+    Seq("extensions" -> ext, "register" -> reg).foreach { case (path, s) =>
+      assert(graftFns(s) == names, path)
+      GraftFunctions.table.foreach { case (id, info, _) =>
+        assert(s.sessionState.catalog.lookupFunctionInfo(id).getClassName == info.getClassName,
+          s"$path: ${id.funcName}")
+      }
+      assert(s.sql("SELECT graft_vecdot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+        .head().getDouble(0) == 11.0, path)
+    }
+  }
 }

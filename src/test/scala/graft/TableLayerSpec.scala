@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import graft.sql.GraftSql
 import graft.table.{CommitLog, GraftCatalog, GraftTable, PartitionSpec, Transform}
@@ -3004,23 +3004,122 @@ class TableLayerSpec extends AnyFunSuite {
     assert(t4.read().count() == 2000)
   }
 
-  test("a delete whose table directory is swapped mid-write commits nothing") {
-    val t = freshTable("rootswap")
-    t.append(items)
-    val root = t.root
-    val aside = root.resolveSibling(s"${root.getFileName}_aside")
-    // the REPLACE TABLE shape: while the delete's keys are computed, the
-    // live directory moves aside and a fresh one takes its place
-    val swap = udf { (n: String) =>
-      if (!Files.exists(aside)) {
-        Files.move(root, aside)
-        Files.createDirectories(root)
-      }
-      n
-    }.asNondeterministic()
-    intercept[java.util.ConcurrentModificationException](
-      t.delete(Seq("A").toDF("name").select(swap(col("name")).as("name")), Seq("name")))
-    assert(GraftTable.open(spark, aside.toString).headSeq == 0)
-    assert(GraftTable.open(spark, root.toString).headSeq == -1)
+  test("every staging write whose table directory is swapped mid-write commits nothing") {
+    val spec = PartitionSpec("count", Transform.Truncate(10))
+    val keys = Seq("A").toDF("name")
+    val rows = items.withColumn("n", col("count") * 3)
+    def addrs(t: GraftTable) = t.readWithPos().filter(col("name") === "A").select("_file", "_pos")
+    def marker(t: GraftTable) = t.root.resolveSibling(s"${t.root.getFileName}.commit")
+    // (kind, extra setup, the write under test)
+    val kinds: Seq[(String, GraftTable => Any, GraftTable => Any)] = Seq(
+      ("append", _ => (), _.append(rows)),
+      ("appendInTxn", _ => (), t => t.appendInTxn(rows, marker(t))),
+      ("appendIdempotent", _ => (), _.appendIdempotent(rows, "app", 1L)),
+      ("appendPartitioned", _ => (), _.appendPartitioned(rows, spec)),
+      ("appendPartitionedInTxn", _ => (), t => t.appendPartitionedInTxn(rows, spec, marker(t))),
+      ("overwritePartitions", _ => (), _.overwritePartitions(rows, spec)),
+      ("appendAndDelete", _ => (), _.appendAndDelete(rows, keys, Seq("name"))),
+      ("upsert", _ => (), _.upsert(rows, Seq("name"))),
+      ("upsertInTxn", _ => (), t => t.upsertInTxn(rows, Seq("name"), marker(t))),
+      ("merge", _ => (), _.merge(rows, Seq("name"))),
+      ("delete", _ => (), _.delete(keys, Seq("name"))),
+      ("deleteInTxn", _ => (), t => t.deleteInTxn(keys, Seq("name"), marker(t))),
+      ("deleteAt", _ => (), t => t.deleteAt(addrs(t))),
+      ("deleteVectors", _ => (), t => t.deleteVectors(addrs(t))),
+      ("rewritePositionDeletes", t => t.deleteAt(addrs(t)), _.rewritePositionDeletes()),
+      ("updateWhereEq", _ => (), _.updateWhereEq("name", "A", Map("size" -> lit("x")))),
+      ("updateWhereEq fallback", _.delete(Seq("B").toDF("name"), Seq("name")),
+        _.updateWhereEq("name", "A", Map("size" -> lit("x")))),
+      ("deleteWhereRange", _ => (), _.deleteWhereRange("count", 0, 12)),
+      ("deleteWhereRange fallback", _.delete(Seq("B").toDF("name"), Seq("name")),
+        _.deleteWhereRange("count", 0, 12)),
+      ("compact", _ => (), _.compact()),
+      ("compactPartitioned", _ => (), _.compactPartitioned(spec)),
+      ("compactSmall", _ => (), _.compactSmall(1L << 20)),
+      ("compactSorted", _ => (), _.compactSorted("count", 2)),
+      ("compactZOrder", _ => (), _.compactZOrder(Seq("count", "n"), 4)),
+      ("rollbackTo", _.delete(Seq("B").toDF("name"), Seq("name")), t => t.rollbackTo(t.headSeq)))
+    val key = "spark.sql.sources.commitProtocolClass"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, classOf[SwapRootCommitProtocol].getName)
+    val failed = try kinds.flatMap { case (kind, setup, write) =>
+      val t = freshTable("rootswap")
+      (0 until 2).foreach(_ => t.append(rows.repartition(1), statsCols = Seq("count")))
+      setup(t)
+      val head = t.headSeq
+      val aside = t.root.resolveSibling(s"${t.root.getFileName}_aside")
+      SwapRootCommitProtocol.arm(t.root, aside)
+      val outcome = try { write(t); "no refusal" } catch {
+        case _: java.util.ConcurrentModificationException => ""
+        case e: Exception => s"threw $e"
+      } finally SwapRootCommitProtocol.disarm()
+      val problems = Seq(
+        Option.when(!Files.exists(aside))("no swap"),
+        Option.when(outcome.nonEmpty)(outcome),
+        Option.when(Files.exists(aside) && GraftTable.open(spark, aside.toString).headSeq != head)(
+          "committed to the moved-aside table"),
+        Option.when(GraftTable.open(spark, t.root.toString).headSeq != -1)(
+          "committed to the replacement")).flatten
+      Option.when(problems.nonEmpty)(s"$kind: ${problems.mkString("; ")}")
+    } finally spark.conf.set(key, before)
+    assert(failed.isEmpty, failed.mkString("\n"))
+  }
+
+  test("string bounds compare in code-point order, the order Spark and parquet record them in") {
+    // U+F000 sorts below U+1F600 by code point and by UTF-8 bytes, above
+    // it by UTF-16 units (Java's compareTo)
+    val (bmp, supp) = ("\uF000", "\uD83D\uDE00")
+    val cat = GraftCatalog(spark, Files.createTempDirectory("spec_strorder").toString)
+    cat.createNamespace("ns")
+    val t = cat.createTable("ns", "t")
+    t.append(Seq((bmp, 1L), (supp, 2L)).toDF("name", "k").repartition(1),
+      statsCols = Seq("name", "k"))
+    assert(t.snapshots.head.fileStats.head("name") == ((bmp, supp)))
+    assert(t.readEq("name", bmp).count() == 1)
+    assert(t.planScan(s"name = '$bmp'").filesOpened == 1)
+    assert(t.planScan(s"name >= '$bmp' AND name <= '$bmp'").read.count() == 1)
+    assert(GraftSql.sql(spark, cat, s"SELECT count(*) FROM graft.ns.t WHERE name = '$bmp'")
+      .head().getLong(0) == 1)
+    // a delete keyed on the supplementary character is scoped by its
+    // footer bounds: out of reach of a file whose names all sort below
+    // it, applied to the file that can hold it
+    t.append(Seq(("a", 3L), ("b", 4L)).toDF("name", "k").repartition(1),
+      statsCols = Seq("name", "k"))
+    t.delete(Seq(supp).toDF("name"), Seq("name"))
+    val low = t.planScan("k = 3")
+    assert(low.filesOpened == 1 && low.deleteFiles.isEmpty && low.read.count() == 1)
+    val high = t.planScan(s"name = '$bmp'")
+    assert(high.deleteFiles.nonEmpty && high.read.count() == 1)
+    assert(t.read().count() == 3)
+  }
+}
+
+/** A commit protocol that, once armed, moves the table directory `root`
+  * aside and creates a fresh empty table (an empty `_log`) in its place
+  * as the first write job under `root` sets up: GraftSql's REPLACE TABLE
+  * landing mid-write.
+  */
+class SwapRootCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def setupJob(jobContext: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    SwapRootCommitProtocol.swapIfUnder(new org.apache.hadoop.fs.Path(path).toUri.getPath)
+    super.setupJob(jobContext)
+  }
+}
+
+object SwapRootCommitProtocol {
+  private val armed = new java.util.concurrent.atomic.AtomicReference[(Path, Path)]()
+
+  def arm(root: Path, aside: Path): Unit = armed.set((root, aside))
+
+  def disarm(): Unit = armed.set(null)
+
+  def swapIfUnder(dir: String): Unit = {
+    val a = armed.get
+    if (a != null && Paths.get(dir).startsWith(a._1) && armed.compareAndSet(a, null)) {
+      Files.move(a._1, a._2)
+      Files.createDirectories(a._1.resolve("_log"))
+    }
   }
 }
