@@ -32,23 +32,13 @@ object SparkEntry {
     queryMap("q_agg_group")(spark, "/root/testdata/sf0.001")
 
   /** Every query's semantics (timestamp literals, date_trunc, casts) assume
-    * UTC; pin it at plan-build time so a driver session created in another
-    * timezone can't shift date boundaries vs the timezone-less DuckDB oracle.
+    * UTC, and events.parquet reads only under the TIMESTAMP(NANOS) flag;
+    * the driver may hand us a session built without either, so
+    * [[GraftSession.attach]] pins them, and registers the native
+    * functions, before the plan is built.
     */
   private def utcPinned(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      // events.parquet has shipped as TIMESTAMP(NANOS) (reads as a raw ns
-      // LONG only under this flag — without it the scan throws
-      // PARQUET_TYPE_ILLEGAL) and as timestamp[us] NTZ in later testdata
-      // drops; Tables.events normalizes both to a UTC TimestampType. The
-      // driver may hand us a session built without the flag, so pin it
-      // before the plan is built, exactly like the timezone.
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // native function registration is per-session and idempotent
-      _root_.graft.functions.GraftFunctions.register(s)
-      fn(s, dir)
-    }
+    (s, dir) => fn(GraftSession.attach(s), dir)
 
   private lazy val queryMap: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> utcPinned(q.fn)).toMap

@@ -1617,8 +1617,8 @@ object TableQueries extends QueryPack {
 
     // Stats backfill (compute-stats maintenance): two stat-less ingest
     // epochs leave files a bounded probe must open blind (never-prune
-    // without bounds); recomputeStats scans ONLY the named column once
-    // and re-commits the same files metadata-only with per-file bounds —
+    // without bounds); recomputeStats reads the named column's footer
+    // bounds and re-commits the same files metadata-only with them —
     // after which the probe opens just the intersecting file. Golden
     // pins data unchanged, the before/after open counts, and that the
     // backfill added exactly one (replace) snapshot.

@@ -699,16 +699,16 @@ final class CommitLog(val root: Path) {
               (fileRows.scanLeft(base)(_ + _).init, base + fileRows.sum)
             }
           Files.createFile(p) // atomic O_EXCL claim — the CAS
-        val e = relativized(LogEntry(seq, action, dataFiles, deleteFiles,
-          equalityCols, System.currentTimeMillis(),
-          stats.map(_._1), stats.map(_._2), stats.map(_._3), schemaJson,
-          fileStats, partSpec, fileBlooms, fileRows, ids, high, txnMarker, props,
-          bloomsRef))
-        // content becomes visible atomically: write a temp file, then
-        // rename over the claimed (empty) entry. Readers see either an
-        // empty claim (skipped by entries()) or the full entry — never a
-        // partial write.
-        val tmp = Files.createTempFile(logDir, s".$seq-", ".tmp")
+          val e = relativized(LogEntry(seq, action, dataFiles, deleteFiles,
+            equalityCols, System.currentTimeMillis(),
+            stats.map(_._1), stats.map(_._2), stats.map(_._3), schemaJson,
+            fileStats, partSpec, fileBlooms, fileRows, ids, high, txnMarker, props,
+            bloomsRef))
+          // content becomes visible atomically: write a temp file, then
+          // rename over the claimed (empty) entry. Readers see either an
+          // empty claim (skipped by entries()) or the full entry — never a
+          // partial write.
+          val tmp = Files.createTempFile(logDir, s".$seq-", ".tmp")
           Files.write(tmp, Json.renderEntry(e).getBytes(StandardCharsets.UTF_8))
           Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -716,6 +716,11 @@ final class CommitLog(val root: Path) {
         }
       } catch {
         case _: FileAlreadyExistsException => attempt += 1 // lost the race; re-read head
+        case _: java.nio.file.NoSuchFileException if !Files.isDirectory(logDir) =>
+          // the table's log itself is gone (its directory was replaced or
+          // removed): no retry can land, and this is no lost race
+          throw new java.util.ConcurrentModificationException(
+            s"commit: table log directory $logDir no longer exists")
         case _: java.nio.file.NoSuchFileException => attempt += 1
           // a concurrent checkpoint() folded entry files away between our
           // listing and read — everything above ran BEFORE our claim, so

@@ -4,17 +4,13 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkShims
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, MetadataBuilder, NumericType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, MetadataBuilder, StringType, StructField, StructType}
 
 /** A Spark-managed table over the CommitLog: the capability port of the
   * reference's Iceberg table (create/append/equality+positional deletes/
@@ -43,7 +39,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * Write path: every write that stages files goes through one
   * primitive, [[writeAndCommit]]. Executors write parquet shards in
   * parallel (df.write); the Spark driver lists them, derives the metadata
-  * the write records (per-file stats, blooms, row counts or lineage
+  * the write records (per-file stats and row counts from the footers the
+  * write left ([[Footers]]), blooms from one aggregate job, lineage
   * markers, partition values), checks that the table directory is still
   * the one the write began in, and makes exactly ONE O(1) commit — the
   * decoupled many-writers/one-committer architecture of
@@ -69,65 +66,35 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     walked(dir)(_.filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map(_.toString).toSeq.sorted)
 
-  /** PER-FILE (Iceberg-manifest-granularity) column bounds for `files`
-    * (plain paths: a fresh write, or live files spanning shard dirs).
-    * One column-pruned aggregate scan grouped by input_file_name(), so
-    * cost is O(statsCols), not O(files). `src` is the read of `files`
-    * when the caller already has it.
+  /** PER-FILE (Iceberg-manifest-granularity) bounds of `statsCols` from
+    * the files' [[Footers]]: STRING raw, in code-point order
+    * (Prune.StrOrder); numerics at six decimals rounded OUTWARD, so a
+    * bound never excludes a value its file holds. The kind is fixed by
+    * column TYPE at write time, and fold + prune reuse it. A column the
+    * footer does not bound gets NO entry: pruning never prunes blind.
     */
-  private def perFileStats(files: Seq[String], statsCols: Seq[String],
-      src: Option[DataFrame]): (Seq[Map[String, (String, String)]], Set[String]) =
-    if (statsCols.isEmpty || files.isEmpty) (Nil, Set.empty)
+  private def perFileStats(footers: => Seq[Footers.Footer], statsCols: Seq[String])
+      : (Seq[Map[String, (String, String)]], Set[String]) =
+    if (statsCols.isEmpty || footers.isEmpty) (Nil, Set.empty)
     else {
-      val df0 = src.getOrElse(readParquet(files))
-      // STRING columns keep their native min/max, in code-point order
-      // (Prune.StrOrder), which string prunes compare with at read time;
-      // everything else normalizes through decimal so renderings parse
-      // numerically. The ordering is fixed by column TYPE at write time,
-      // and fold + prune reuse it, so the two can never disagree.
-      def typeOf(c: String) = df0.schema.find(_.name == c).map(_.dataType)
-      val strCols = statsCols.filter(c => typeOf(c).contains(StringType)).toSet
-      // numeric bounds render on the driver at six decimals, rounded
-      // OUTWARD (min toward -inf, max toward +inf) so a bound never
-      // excludes a value its file holds; other types keep the decimal cast
-      val numCols = statsCols.filter(c => typeOf(c).exists(_.isInstanceOf[NumericType])).toSet
-      val aggs = statsCols.flatMap { c =>
-        if (strCols(c) || numCols(c)) Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"))
-        else Seq(min(col(c)).cast("decimal(38,6)").as(s"mn_$c"),
-          max(col(c)).cast("decimal(38,6)").as(s"mx_$c"))
+      val strCols = statsCols.filter(c =>
+        footers.head.schema.find(_.name == c).exists(_.dataType == StringType)).toSet
+      def dec(lo: java.math.BigDecimal, hi: java.math.BigDecimal) =
+        (lo.setScale(6, java.math.RoundingMode.FLOOR).toPlainString,
+          hi.setScale(6, java.math.RoundingMode.CEILING).toPlainString)
+      val render: Footers.Bound => (String, String) = {
+        case Footers.StrBound(lo, hi) => (lo, hi)
+        case Footers.IntBound(lo, hi) =>
+          dec(java.math.BigDecimal.valueOf(lo), java.math.BigDecimal.valueOf(hi))
+        case Footers.DecBound(lo, hi) => dec(lo, hi)
       }
-      def render(c: String, v: Any, mode: java.math.RoundingMode): Option[String] =
-        if (!numCols(c)) Some(v.toString)
-        else (v match {
-          case d: java.math.BigDecimal => Some(d)
-          case d: Double => Option.when(!d.isNaN && !d.isInfinite)(new java.math.BigDecimal(d))
-          case f: Float => Option.when(!f.isNaN && !f.isInfinite)(new java.math.BigDecimal(f.toDouble))
-          case n: Number => Some(java.math.BigDecimal.valueOf(n.longValue))
-        }).map(_.setScale(6, mode).toPlainString)
-      val byFile = df0
-        .groupBy(input_file_name().as("_f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map { r =>
-          // input_file_name yields a file URI; normalize to the plain path
-          val path = Paths.get(new java.net.URI(r.getString(0)).getPath).toString
-          // a column that is all-null in a file (or non-numeric, nulled by
-          // the decimal cast) gets NO entry, so pruning falls back to
-          // never-prune-blind instead of choking on "null" (ADVICE r2)
-          path -> statsCols.zipWithIndex.flatMap { case (c, i) =>
-            if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) None
-            else for {
-              mn <- render(c, r.get(1 + 2 * i), java.math.RoundingMode.FLOOR)
-              mx <- render(c, r.get(2 + 2 * i), java.math.RoundingMode.CEILING)
-            } yield c -> (mn, mx)
-          }.toMap
-        }.toMap
-      (files.map(f => byFile.getOrElse(f, Map.empty)), strCols)
+      (footers.map(f => statsCols.flatMap(c => f.bounds.get(c).map(b => c -> render(b))).toMap),
+        strCols)
     }
 
   /** commit-level bounds folded FROM the per-file bounds (min of mins,
-    * max of maxes over files carrying the column) — the same one scan
-    * serves both granularities. Keeps the already-rendered strings, so
+    * max of maxes over files carrying the column) — the same footers
+    * serve both granularities. Keeps the already-rendered strings, so
     * the fold can't change a value's representation.
     */
   private def foldStats(
@@ -223,13 +190,13 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     }
   }
 
-  /** The one place a write's file metadata is derived. Spark jobs run in
-    * a fixed order: the stats aggregate, then the bloom aggregate; row
-    * counts come from footers and partition values from paths.
+  /** The one place a write's file metadata is derived. One footer read
+    * per file gives the stats and the row counts, the bloom aggregate is
+    * the one Spark job, and partition values come from paths.
     */
-  private def derived(files: Seq[String], d: Derive, lineage: Lineage,
-      src: Option[DataFrame] = None): Derived = {
-    val (stats, strCols) = perFileStats(files, d.statsCols, src)
+  private def derived(files: Seq[String], d: Derive, lineage: Lineage): Derived = {
+    lazy val footers = files.map(Footers.reader(spark))
+    val (stats, strCols) = perFileStats(footers, d.statsCols)
     val fileStats =
       if (d.partDims == 0) stats
       else {
@@ -239,7 +206,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       }
     val blooms = perFileBlooms(files, d.bloomCols, d.bloomBits)
     val (rows, ids) = lineage match {
-      case Assign => (fileRowCounts(files), Nil)
+      case Assign => (footers.map(_.rows), Nil)
       case Rewritten(mat, _) => physMarkers(files, mat)
       case NoLineage => (Nil, Nil)
     }
@@ -332,7 +299,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   /** fast_append: write data files, commit one `add` entry. With
     * `statsCols`, the commit records min/max of those columns at BOTH
     * commit and per-file granularity — the manifest statistics Iceberg
-    * uses for scan pruning — from a single aggregate scan. With
+    * uses for scan pruning — read from the new files' parquet footers. With
     * `bloomCols`, each file additionally records a bloom filter (default
     * 16 KiB, see [[Bloom.DefaultM]]) per column so POINT reads skip files
     * whose bounds intersect but which definitely lack the key (see
@@ -380,12 +347,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * rewriting the lake. The log stores the files' ABSOLUTE paths (the
     * same out-of-root adoption shallow clones use, so reads, time travel
     * and vacuum's is-it-referenced logic all already understand them);
-    * per-file stats + footer row counts are computed at adoption so data
-    * skipping and row-id lineage work immediately; later compaction
-    * rewrites adopted files INTO the table root exactly as it does
-    * native ones. Schema contract: the files' merged parquet schema must
-    * match the table's current logical schema by (name, type) — widening
-    * belongs to widenColumn, not to an import.
+    * per-file stats and row counts are read from the footers at adoption
+    * so data skipping and row-id lineage work immediately; later
+    * compaction rewrites adopted files INTO the table root exactly as it
+    * does native ones. Schema contract: EVERY file's footer schema must
+    * match the first file's, and that the table's current logical schema,
+    * by (name, type) — widening belongs to widenColumn, not to an import.
     */
   def addFiles(extFiles: Seq[String], statsCols: Seq[String] = Nil): Long = {
     require(extFiles.nonEmpty, "addFiles: empty file list")
@@ -414,20 +381,24 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     require(dupes.isEmpty,
       s"addFiles: ${dupes.size} file(s) already referenced by this table " +
         s"(re-run import?): ${dupes.take(3).mkString(", ")}")
-    val df0 = readParquet(files)
+    // one footer per file gives its schema, row count and stats
+    val footers = files.map(Footers.reader(spark))
+    def typed(s: StructType) = s.fields.map(f => f.name -> f.dataType).toSeq.sortBy(_._1)
+    files.zip(footers).foreach { case (f, ft) =>
+      require(typed(ft.schema) == typed(footers.head.schema), s"addFiles: schema mismatch — " +
+        s"${files.head} has ${typed(footers.head.schema)}, $f has ${typed(ft.schema)}")
+    }
+    val df0 = spark.read.schema(footers.head.schema).parquet(files: _*)
     requireNoReserved(df0)
     schemaFrom(log.entries()).foreach { cur =>
-      val curT = cur.fields.map(f => f.name -> f.dataType).toMap
-      val newT = df0.schema.fields.map(f => f.name -> f.dataType).toMap
-      require(curT == newT,
-        s"addFiles: schema mismatch — table has ${curT.toSeq.sortBy(_._1)}, " +
-          s"files have ${newT.toSeq.sortBy(_._1)}")
+      require(typed(cur) == typed(df0.schema),
+        s"addFiles: schema mismatch — table has ${typed(cur)}, files have ${typed(df0.schema)}")
     }
     enforceConstraints(df0)
-    val m = derived(files, Derive(statsCols), Assign, Some(df0))
-    log.commit("add", dataFiles = files, stats = m.fold,
-      schemaJson = idSchemaJson(df0.schema), fileStats = m.fileStats,
-      fileRows = m.rows, assignRowIds = true)
+    val (stats, strCols) = perFileStats(footers, statsCols)
+    log.commit("add", dataFiles = files, stats = foldStats(stats, statsCols, strCols),
+      schemaJson = idSchemaJson(df0.schema), fileStats = stats,
+      fileRows = footers.map(_.rows), assignRowIds = true)
   }
 
   /** fast_append STAGED under a multi-table transaction: identical to
@@ -623,23 +594,6 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   private val RowIdPhys = "_g_rowid"
   private val LastSeqPhys = "_g_lastseq"
 
-  /** per-file row counts from the parquet FOOTERS — O(files) driver-side
-    * metadata reads (the same scale as the stats fold), no data scan.
-    * These are Iceberg's manifest record_count fields.
-    */
-  private def fileRowCounts(files: Seq[String]): Seq[Long] = {
-    // explicit options on the session's conf: the one-argument
-    // ParquetFileReader.open builds a fresh Hadoop Configuration (default
-    // resources parsed again) on every call
-    val conf = spark.sessionState.newHadoopConf()
-    val opts = HadoopReadOptions.builder(conf).build()
-    files.map { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf), opts)
-      try r.getRecordCount finally r.close()
-    }
-  }
-
   /** `spark.read.parquet(files)` with the scan schema read from the
     * footer of `files.head` on the driver, converted exactly as Spark's
     * own inference converts it. Without a schema, Spark runs a job per
@@ -650,16 +604,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * the recorded schema leaves out (lineage, dropped-column
     * pass-through).
     */
-  private def readParquet(files: Seq[String]): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(files.head)
-    val conf = spark.sessionState.newHadoopConf()
-    val r = ParquetFileReader.open(
-      HadoopInputFile.fromPath(path, conf), HadoopReadOptions.builder(conf).build())
-    val footer = try new org.apache.parquet.hadoop.Footer(path, r.getFooter) finally r.close()
-    val schema = ParquetFileFormat.readSchemaFromFooter(
-      footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    spark.read.schema(schema).parquet(files: _*)
-  }
+  private def readParquet(files: Seq[String]): DataFrame =
+    spark.read.schema(Footers.reader(spark)(files.head).schema).parquet(files: _*)
 
   private def partValueFromPath(f: String, dim: Int): Option[String] = {
     val prefix = s"${partColFor(dim)}="
@@ -2166,7 +2112,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val applied = DeleteScope.reachable(entries, data, dels, deleteKeys)
     new ScanPlan(where, entries, data, applied,
       (eqs.map(_._1) ++ in.map(_._1) ++ ranges.map(_._1)).distinct,
-      () => readPrunedState((data, applied), entries))
+      () => readPrunedState((data, applied), entries, scoped = true))
   }
 
   /** [[planScan]] of a predicate in SQL text, parsed by the session's
@@ -2300,15 +2246,19 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * the driver (and cached)
     */
   private def deleteKeys: String => DeleteScope.FileKeys = {
-    lazy val conf = spark.sessionState.newHadoopConf()
-    DeleteScope.footerKeys(_, conf)
+    val footer = Footers.reader(spark)
+    DeleteScope.footerKeys(_, footer)
   }
 
+  /** the merge-on-read view of `state`; `scoped`: [[planScan]] has
+    * scoped its deletes to its data files already
+    */
   private def readPrunedState(
       state: (Seq[(String, Long)], Seq[(String, Long, Seq[String])]),
       entries: Seq[LogEntry],
       keepLineage: Boolean = false,
-      rowLineage: Boolean = false): DataFrame = {
+      rowLineage: Boolean = false,
+      scoped: Boolean = false): DataFrame = {
     val (dataFiles, liveDeletes) = state
     // schema as of any point of this read's history — drives field-id
     // alignment of old epochs onto the CURRENT schema (renames/widenings)
@@ -2330,7 +2280,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val needsPos = keepLineage || rowLineage ||
       liveDeletes.exists(d => CommitLog.isPositionalFlavor(d._3))
     // an equality delete no scanned file can hold is never read or joined
-    val deleteFiles = DeleteScope.reachable(entries, dataFiles, liveDeletes, deleteKeys)
+    val deleteFiles =
+      if (scoped) liveDeletes else DeleteScope.reachable(entries, dataFiles, liveDeletes, deleteKeys)
     val byEntrySeq = entries.map(e => e.seq -> e).toMap
     // allowMissingColumns = add-column evolution on read: snapshots written
     // before a column was added contribute nulls for it; alignByFieldId
@@ -2731,13 +2682,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
 
   /** Backfill per-file column stats (Iceberg's compute-stats
     * maintenance): a METADATA-ONLY replace adopting every live file by
-    * path, attaching min/max bounds for `statsCols` computed from one
-    * bounded scan of ONLY those columns — no data rewritten, blooms and
-    * row lineage carried over, existing bounds merged under the fresh
-    * ones. The op that turns a table ingested WITHOUT stats into a
-    * skipping-capable one, paying one column-pruned scan instead of a
-    * full rewrite (at 100 TB the scan reads just the named columns'
-    * pages; a rewrite copies the table). Preconditions mirror the other
+    * path, attaching min/max bounds for `statsCols` read from the files'
+    * parquet footers — no data read or rewritten, blooms and row lineage
+    * carried over, existing bounds merged under the fresh ones. The op
+    * that turns a table ingested WITHOUT stats into a skipping-capable
+    * one, paying one footer read per file instead of a full rewrite.
+    * Preconditions mirror the other
     * metadata-only replaces — pending deletes or a schema straddle fall
     * back to compact(statsCols), which records the same bounds on its
     * rewritten output. Like rollbackTo's adoption, the replace records

@@ -106,6 +106,19 @@ class TableLayerSpec extends AnyFunSuite {
       (1 to n).map(i => s"f$i").sorted)
   }
 
+  test("a commit into a table whose _log directory is gone fails at once") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("spec_nolog")
+    val log = CommitLog(dir.toString)
+    log.commit("add", dataFiles = Seq("f0"))
+    val s = Files.walk(dir.resolve("_log"))
+    try s.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally s.close()
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      log.commit("add", dataFiles = Seq("f1"))
+    }
+    assert(ex.getMessage == s"commit: table log directory ${dir.resolve("_log")} no longer exists")
+  }
+
   test("range reads skip commits via recorded min/max stats") {
     val t = freshTable("skip")
     // three ingest epochs with disjoint count ranges
@@ -2501,6 +2514,25 @@ class TableLayerSpec extends AnyFunSuite {
     assert(report(("lake", "good"))("compacted_small") == 3,
       "a failing table must not stop the rest of the sweep")
     assert(bad.read().count() == 6 && good.read().count() == 18)
+  }
+
+  test("addFiles checks every file's schema, not only the first's") {
+    import scala.jdk.CollectionConverters._
+    val t = freshTable("addfiles_mixed")
+    t.append(items)
+    def written(df: DataFrame, tag: String): String = {
+      val dir = Files.createTempDirectory(s"spec_mixed_$tag").resolve("part")
+      df.coalesce(1).write.parquet(dir.toString)
+      val s = Files.walk(dir)
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList.head
+      finally s.close()
+    }
+    val good = written(items, "good")
+    val bad = written(items.withColumn("count", col("count").cast("string")), "bad")
+    val before = t.headSeq
+    val ex = intercept[IllegalArgumentException](t.addFiles(Seq(good, bad)))
+    assert(ex.getMessage.contains("schema mismatch") && ex.getMessage.contains(bad))
+    assert(t.headSeq == before && t.read().count() == 6)
   }
 
   test("addFiles rejects files the table already references (re-run import)") {

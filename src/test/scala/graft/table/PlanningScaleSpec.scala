@@ -147,7 +147,7 @@ class PlanningScaleSpec extends AnyFunSuite {
       log.commit("delete", deleteFiles = Seq(file), equalityCols = Seq("k"))
       val key = if (g % 2 == 0) (g * 5L) * 100000 + 500 else 1000000000L + g
       log.root.resolve(file).toString ->
-        DeleteScope.FileKeys(empty = false, Map("k" -> DeleteScope.IntRange(key, key)))
+        DeleteScope.FileKeys(empty = false, Map("k" -> Footers.IntBound(key, key)))
     }.toMap
     log.checkpoint()
     val es = log.entries()
