@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, QueryPack, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -147,7 +147,7 @@ object DedupQueries extends QueryPack {
     * where duplicating a payload 8× costs nothing and saves a join.
     */
   private[graft] def minhashBandKeys(docRel: DataFrame, idCol: String,
-      carry: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame =
+      carry: Map[String, Column] = Map.empty): DataFrame =
     docRel
       .select((col(idCol) +: carry.toSeq.map { case (n, c) => c.as(n) } :+
         call_function("graft_minhash_sig", col("hs")).as("sig")): _*)
@@ -157,31 +157,18 @@ object DedupQueries extends QueryPack {
           .as("bb")): _*)
 
   /** Attach per-doc payload columns to BOTH sides of a candidate pair set
-    * with ONE evaluation of `payload` (guide §8: the payload rejoin must
-    * not sneak the heavy subtree back in — twin per-side joins re-derive
-    * the corpus-sized scan→md5 relation once per side, because the two
-    * sides' pruned projections defeat exchange reuse). Each pair explodes
-    * to its two member ids, ONE keyed join attaches the payload, and a
-    * pair-keyed rollup pivots the two rows back to `<c>_a` / `<c>_b`
-    * columns — pair-sized, like everything after the band bucket stage.
-    * The payload side carries NO exchange of its own: at bounded pair
-    * counts AQE broadcasts the exploded pair side, so the payload is
-    * computed and consumed in place (zero payload shuffle); if the pair
-    * set ever outgrows broadcast, the planner degrades to shuffling the
-    * narrow payload ONCE by id — §8's "move the heavy bytes exactly
-    * once". `payload` must carry exactly one row per id
-    * (first(ignoreNulls) is deterministic under that contract).
+    * as `<c>_a` / `<c>_b`: one join of `cand` to `payload` on `da`, one on
+    * `db`. Both sides read the same payload relation (only the output
+    * names differ), so the final plan broadcasts the payload ONCE and the
+    * second join reads it through a ReusedExchange — the scan→md5 subtree
+    * runs once and the pair set never shuffles for it. No aggregate
+    * touches the payload arrays. `payload` must carry at most one row
+    * per id.
     */
   private def pairPayload(cand: DataFrame, payload: DataFrame, idCol: String): DataFrame = {
-    val pcols = payload.columns.filter(_ != idCol).toSeq
-    val sides = cand.select(col("da"), col("db"),
-      explode(array(col("da"), col("db"))).as(idCol))
-    val aggs = pcols.flatMap { c => Seq(
-      first(when(col(idCol) === col("da"), col(c)), ignoreNulls = true).as(s"${c}_a"),
-      first(when(col(idCol) === col("db"), col(c)), ignoreNulls = true).as(s"${c}_b")) }
-    sides.join(payload, idCol)
-      .groupBy(col("da"), col("db"))
-      .agg(aggs.head, aggs.tail: _*)
+    def side(s: String) = payload.select(payload.columns.toSeq.map { c =>
+      col(c).as(if (c == idCol) s"d$s" else s"${c}_$s") }: _*)
+    cand.join(side("a"), "da").join(side("b"), "db")
   }
 
   /** The minhash verify payload — one NARROW row per doc (id, shingle-h1
@@ -243,14 +230,15 @@ object DedupQueries extends QueryPack {
   private[graft] val MaxBucketDf = 1000
 
   /** Drop rows of `ex` whose bucket key `keyCol` occurs more than `cap`
-    * times: repartition by the key ONCE, count per key (no further
-    * exchange — co-partitioned), then a BROADCAST anti-join of the few
-    * over-cap keys. The shared repartition is the same shuffle the
-    * downstream bucket-collect needs anyway (callers group by `keyCol`,
-    * and the broadcast join preserves partitioning), and ReuseExchange
-    * dedupes it across the count and collect branches — so the guard
-    * costs one small aggregate, not a second pass over the exploded
-    * relation.
+    * times: repartition by the key, count per key (no further exchange —
+    * co-partitioned), then a BROADCAST anti-join of the few over-cap
+    * keys. The repartition is the same shuffle the downstream
+    * bucket-collect needs anyway (callers group by `keyCol`, and the
+    * broadcast join preserves partitioning). The count branch does NOT
+    * share it: column pruning narrows that branch to the key, so its
+    * subtree differs from the collect's and the final plan re-derives
+    * `ex` into a second, key-only exchange — one extra pass over the
+    * exploded relation's keys.
     *
     * INVARIANT: `keyCol` (and every field of it, when it is a struct) must
     * be non-null. Spark's struct equality treats null fields as equal
@@ -290,9 +278,17 @@ object DedupQueries extends QueryPack {
     * 0..N-1. Correctness: labels only ever DECREASE and only ever to an
     * id inside the same component (a neighbor's label, or the label's
     * own label), so the unique fixpoint is the component minimum — the
-    * jump changes the round count, never the answer. Convergence check
-    * collects ONE scalar per round; the loop fails loudly past
-    * `maxRounds` rather than returning a half-propagated labeling.
+    * jump changes the round count, never the answer.
+    *
+    * Each round costs its checkpoint jobs and nothing else: round 1's
+    * relaxation comes straight from the edge list (every node's label
+    * starts as itself), and each relaxation counts the labels it lowered
+    * through `Dataset.observe` inside its own checkpoint job. A round
+    * that lowers none is the fixpoint; the jump is not observed. A retried
+    * task can only add to a count that is already nonzero, and the loop
+    * tests only zero against nonzero, so a retry cannot end it early. The
+    * loop fails loudly past `maxRounds` rather than returning a
+    * half-propagated labeling.
     * DEPLOYMENT CAVEAT (unchanged from r5): localCheckpoint is
     * lineage-destroying and executor-loss-unsafe — a cluster deployment
     * swaps it for reliable checkpoint() on HDFS/object store.
@@ -306,59 +302,45 @@ object DedupQueries extends QueryPack {
     // one cut up front: the edge list feeds every round (and a caller's
     // un-materialized edge plan would otherwise replay per round)
     val e = edges.localCheckpoint(true)
-    var labels = e.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint(true)
-    // convergence via the MONOTONE label sum: labels only ever decrease
-    // (least over self + neighbors + jump target), so "no sum change"
-    // IS "no label change" — one node-scale aggregate per round instead
-    // of a join + filter + count. DECIMAL(38,0): node ids can be 1e12+
-    // at corpus scale and a billion-node sum overflows int64.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("lbl")).cast("decimal(38,0)")).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var changed = true
-    var rounds = 0
-    while (changed && rounds < maxRounds) {
+    // checkpoint (id, lbl, nlbl) → (id, least(lbl, nlbl)); returns the
+    // new labels and how many of them fell below lbl
+    def relaxed(df: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
+      val out = df.observe(obs, count(when(col("nlbl") < col("lbl"), 1)).as("dropped"))
+        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
+        .localCheckpoint(true)
+      (out, obs.get("dropped").asInstanceOf[Long])
+    }
+    // round 1's relaxation: with every label still its own id, a node's
+    // neighbor minimum is its own least dst
+    var (labels, dropped) = relaxed(e.groupBy(col("src").as("id"))
+      .agg(min(col("dst")).as("nlbl")).withColumn("lbl", col("id")))
+    var rounds = 1
+    while (dropped > 0 && rounds < maxRounds) {
+      // pointer jump: follow the label one hop and keep the smaller.
+      // Every lbl is itself a node id, so the left join misses only
+      // when the labeled node has no row yet — coalesce keeps the
+      // unjumped label in that (never-expected) case
+      val jumped = labels.as("a")
+        .join(labels.select(col("id").as("jid"), col("lbl").as("jlbl")).as("b"),
+          col("a.lbl") === col("b.jid"), "left")
+        .select(col("a.id").as("id"),
+          least(col("a.lbl"), coalesce(col("jlbl"), col("a.lbl"))).as("lbl"))
+        .localCheckpoint(true)
       // relaxation as aggregate-BEFORE-join (no self-union: the shuffle
       // into the left join carries one row per node, not one per edge —
       // and a Union over a checkpointed LogicalRDD trips Catalyst's
       // union-constraint rewrite on its preserved constraints, a
       // missing-attribute crash this shape sidesteps entirely)
-      val nbrMin = e.join(labels, e("src") === labels("id"))
+      val nbrMin = e.join(jumped, e("src") === jumped("id"))
         .groupBy(col("dst")).agg(min(col("lbl")).as("nlbl"))
-      val prop = labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
-        .select(labels("id").as("id"),
-          least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true) // read twice by the jump's self-join
-      // ADAPTIVE jump (r8, VERDICT #3): if relaxation alone left the
-      // monotone sum unchanged we are at relaxation's fixpoint — which
-      // IS the component minimum — so the jump self-join (plus its
-      // checkpoint) is pure overhead and the round count would be
-      // identical either way. Shallow graphs (the common corpus case:
-      // diameter 1-2 near-dup clusters) hit this on their confirming
-      // round and skip one self-join; deep chains keep jumping every
-      // moving round, preserving the O(log d) bound the spec pins.
-      val propSum = labelSum(prop)
-      if (propSum.compareTo(prevSum) == 0) {
-        changed = false
-        labels = prop
-      } else {
-        // pointer jump: follow the label one hop and keep the smaller.
-        // Every lbl is itself a node id, so the left join misses only
-        // when the labeled node has no row yet — coalesce keeps the
-        // unjumped label in that (never-expected) case
-        val jumped = prop.as("a")
-          .join(prop.select(col("id").as("jid"), col("lbl").as("jlbl")).as("b"),
-            col("a.lbl") === col("b.jid"), "left")
-          .select(col("a.id").as("id"),
-            least(col("a.lbl"), coalesce(col("jlbl"), col("a.lbl"))).as("lbl"))
-          .localCheckpoint(true)
-        prevSum = labelSum(jumped)
-        labels = jumped
-      }
+      val (next, d) = relaxed(jumped.join(nbrMin, jumped("id") === nbrMin("dst"), "left")
+        .select(jumped("id"), jumped("lbl"), col("nlbl")))
+      labels = next
+      dropped = d
       rounds += 1
     }
-    require(!changed, s"label propagation did not converge in $rounds rounds")
+    require(dropped == 0, s"label propagation did not converge in $rounds rounds")
     (labels, rounds)
   }
 
@@ -401,8 +383,9 @@ object DedupQueries extends QueryPack {
     // the outer variant is semantically identical and skips the guard.
     //
     // dropHotBuckets is inlined here because the rescue needs the SAME
-    // ex0/hot relations: every term below rides ex0's one sg-keyed
-    // exchange and the one broadcast of the (tiny) hot key set.
+    // ex0/hot relations. ns, the buckets and the rescue read ex0's one
+    // sg-keyed exchange; the hot count writes its own key-only copy (see
+    // dropHotBuckets).
     val ex0 = sh.select(col("doc_id"),
         explode_outer(col("shingles")).as("sg"))
       // explode_outer emits one NULL row for an empty shingle set (a <3-token
@@ -418,11 +401,16 @@ object DedupQueries extends QueryPack {
     val ns = ex.groupBy("doc_id").agg(count(lit(1)).as("ns"))
     val buckets = ex.groupBy("sg")
       .agg(collect_list(struct(col("doc_id"))).as("members"))
+    // null-safe joins: da/db are never null (they come from a < b), and a
+    // plain `=` would infer isnotnull(doc_id) down into ns's side only,
+    // making its subtree differ from the buckets' and re-scanning the corpus
+    def sizes(side: String) = ns.select(col("doc_id").as(s"i$side"), col("ns").as(s"n$side"))
     val counts = expandPairs(buckets)
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .agg(count(lit(1)).as("inter"))
-      .join(ns.select(col("doc_id").as("da"), col("ns").as("na")), "da")
-      .join(ns.select(col("doc_id").as("db"), col("ns").as("nb")), "db")
+      .join(sizes("a"), col("da") <=> col("ia"))
+      .join(sizes("b"), col("db") <=> col("ib"))
+      .drop("ia", "ib")
     // fully-hot rescue: a doc with zero retained keys (absent from ns)
     // is fully hot, and its HOT rows in ex0 are exactly its whole
     // shingle set — so the set-identity key comes from the semi-join,
@@ -746,11 +734,13 @@ object DedupQueries extends QueryPack {
         |       (MIN(lbl) = id) AS is_keeper
         |FROM r GROUP BY id ORDER BY doc_id""",
     ) { (s, dir) =>
-      val pairs = jaccardPairs(shingled(s, dir)).select(col("da"), col("db"))
-      // the helper checkpoints the edge list itself (the expensive
-      // shingle pipeline above runs once, not once per round)
-      val edges = pairs.select(col("da").as("src"), col("db").as("dst"))
-        .union(pairs.select(col("db").as("src"), col("da").as("dst")))
+      // both edge directions from ONE projection of the pair set (a union
+      // of two projections aggregates the pair exchange once per branch);
+      // the helper checkpoints the edge list itself, so the shingle
+      // pipeline above runs once, not once per round
+      val edges = jaccardPairs(shingled(s, dir)).select(inline(array(
+        struct(col("da").as("src"), col("db").as("dst")),
+        struct(col("db").as("src"), col("da").as("dst")))))
       val (labels, _) = minLabelComponents(edges)
       labels.select(col("id").as("doc_id"), col("lbl").as("cluster_id"),
         (col("lbl") === col("id")).as("is_keeper"))

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Deep checks for the LLM-pipeline operators whose scores are not
@@ -12,6 +16,33 @@ class LlmOpsSpec extends AnyFunSuite {
   import SparkSessionFixture.{spark, sf}
 
   private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+
+  /** Every SQL execution `body` runs, in order. A sentinel execution
+    * afterwards flushes the listener bus (events arrive in order), so all
+    * of body's executions have been seen when the sentinel's arrives.
+    */
+  private def executionsDuring[A](body: => A): (A, Seq[QueryExecution]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      val sentinel = spark.range(1).toDF()
+      sentinel.collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(sentinel.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val all = seen.toArray(Array.empty[QueryExecution]).toSeq
+      assert(all.contains(sentinel.queryExecution), "listener never saw the sentinel")
+      (out, all.takeWhile(_ ne sentinel.queryExecution))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Walks final adaptive plans, query stages included. */
+  private object plans extends AdaptiveSparkPlanHelper
 
   // --- ground truth: shingle sets + jaccard computed in plain Scala ---
 
@@ -717,9 +748,16 @@ class LlmOpsSpec extends AnyFunSuite {
     val und = (0 until n - 1).map(i => (i.toLong, i + 1L))
     val edges = und.toDF("src", "dst")
       .union(und.map(_.swap).toDF("src", "dst"))
-    val (labels, rounds) = queries.DedupQueries.minLabelComponents(edges)
+    val ((rounds, got), execs) = executionsDuring {
+      val (labels, rounds) = queries.DedupQueries.minLabelComponents(edges)
+      (rounds, labels.orderBy("id").as[(Long, Long)].collect())
+    }
     assert(rounds <= 12, s"expected O(log n) rounds on the chain, got $rounds")
-    val got = labels.orderBy("id").as[(Long, Long)].collect()
+    // each round costs its checkpoint jobs only: the edge checkpoint, one
+    // relaxation per round, one jump per round but the last, and the
+    // final collect — no separate convergence job
+    assert(execs.size <= 2 * rounds + 1,
+      s"${execs.size} SQL executions for $rounds rounds")
     assert(got.sameElements((0 until n).map(i => (i.toLong, 0L))))
     // components never merge across a gap
     val twoRaw = Seq((10L, 11L), (11L, 12L), (20L, 21L))
@@ -727,6 +765,44 @@ class LlmOpsSpec extends AnyFunSuite {
     val (l2, _) = queries.DedupQueries.minLabelComponents(two)
     assert(l2.orderBy("id").as[(Long, Long)].collect().toSeq ==
       Seq((10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L)))
+  }
+
+  test("minLabelComponents: an empty edge list converges at once to no labels") {
+    import spark.implicits._
+    val (labels, rounds) =
+      queries.DedupQueries.minLabelComponents(Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(rounds == 1)
+    assert(labels.count() == 0)
+  }
+
+  test("q_dedup_cluster: a corpus with no near-duplicate pair has no clusters") {
+    import spark.implicits._
+    // every document draws its words from its own vocabulary: no shingle
+    // is shared, so the edge list is empty
+    val dir = java.nio.file.Files.createTempDirectory("graft_distinct_docs").toString
+    (1L to 20L).map(i => (i, (0 until 12).map(k => s"w${i}_$k").mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    assert(SparkEntry.queries("q_dedup_cluster")(spark, dir).collect().isEmpty)
+  }
+
+  test("near-dup plans: one corpus scan for the edge list, no sort aggregate for payloads") {
+    import plans.collect
+    // the edge-list checkpoint is the one execution that reads the
+    // corpus: the pair sizes (ns) share the bucket exchange instead of
+    // re-scanning, and both edge directions come from one projection
+    val (_, execs) = executionsDuring(q("q_dedup_cluster").collect())
+    val scanning = execs.filter(qe =>
+      collect(qe.executedPlan) { case s: FileSourceScanExec => s }.nonEmpty)
+    assert(scanning.size == 1, s"${scanning.size} executions scan the corpus")
+    val edgeList = scanning.head.executedPlan
+    assert(collect(edgeList) { case s: FileSourceScanExec => s }.size == 1, edgeList.toString)
+    assert(collect(edgeList) { case u: UnionExec => u }.isEmpty, edgeList.toString)
+    // the pair payload is attached by two joins, not pivoted back with
+    // first() over arrays (a SortAggregate)
+    val minhash = q("q_dedup_minhash")
+    minhash.collect()
+    val plan = minhash.queryExecution.executedPlan
+    assert(collect(plan) { case a: SortAggregateExec => a }.isEmpty, plan.toString)
   }
 
   test("q_embed_drift equals an exact two-sample replay in BigInt") {
