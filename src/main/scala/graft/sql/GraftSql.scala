@@ -744,8 +744,8 @@ object GraftSql {
 
   /** DELETE WHERE routing onto the table layer's native delete shapes:
     * equality conjunction → one MoR equality-delete commit (zero data
-    * I/O); single-column IN → multi-key equality delete; closed numeric
-    * range → stats-pruned deleteWhereRange (aligned files drop
+    * I/O); single-column IN → multi-key equality delete; closed range,
+    * numeric or STRING → stats-pruned deleteWhereRange (aligned files drop
     * metadata-only). Anything else fails loudly — a silent full-table
     * rewrite is never the right surprise at 100 TB. The shapes come from
     * the scan planner's conjunct split ([[ScanPlan.conjuncts]]); a

@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths, FileAlreadyExistsException}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
+import graft.table.Bounds.Recorded
+
 /** One committed log entry (≈ an Iceberg snapshot).
   *
   * Actions mirror the reference's commit surface:
@@ -28,11 +30,10 @@ final case class LogEntry(
     tsMs: Long,
     // per-commit column statistics for scan pruning (Iceberg keeps these
     // in manifest entries; one granularity coarser here — per commit):
-    // parallel arrays of column name, rendered min, rendered max. Numeric
-    // semantics (compared as BigDecimal).
-    statsCols: Seq[String] = Nil,
-    statsMin: Seq[String] = Nil,
-    statsMax: Seq[String] = Nil,
+    // column name and recorded bounds, read in the probe's kind
+    // ([[Bounds.Recorded]]). On disk: parallel arrays statsCols,
+    // statsMin, statsMax.
+    stats: Seq[(String, Recorded)] = Nil,
     // Spark StructType JSON of the data committed by this entry — the
     // schema-per-snapshot record that makes evolution trackable
     // (reference: explicit stable field ids, lib.rs:58-62).
@@ -42,7 +43,7 @@ final case class LogEntry(
     // Commit-level stats above remain as the coarse fallback; a file with
     // an entry here is pruned individually, which is what makes sorted
     // compaction and partitioned writes pay off at read time.
-    fileStats: Seq[Map[String, (String, String)]] = Nil,
+    fileStats: Seq[Map[String, Recorded]] = Nil,
     // partition spec under which this entry's data was written, rendered
     // as "transform(args,col)" (e.g. "truncate(10,count)"), "" = none.
     // Iceberg's hidden partitioning: readers filter on the SOURCE column
@@ -92,37 +93,13 @@ final case class LogEntry(
     // legacy INLINE fileBlooms above, which still read fine.
     bloomsRef: String = "") {
 
-  /** bounds-intersection under the PRUNE's ordering: string prunes
-    * compare in code-point order ([[Prune.StrOrder]], the order string
-    * columns record their min/max in); numeric prunes parse the decimal
-    * rendering. A probe mistyped against the column's recorded kind may
-    * fail to parse — never prune blind on it.
-    */
-  private def intersects(mn: String, mx: String, p: Prune): Boolean =
-    p.strBounds match {
-      case Some((lo, hi)) => Prune.StrOrder.gteq(mx, lo) && Prune.StrOrder.lteq(mn, hi)
-      case None =>
-        try BigDecimal(mx) >= p.lo && BigDecimal(mn) <= p.hi
-        catch { case _: NumberFormatException => true }
-    }
-
-  /** Can this commit's data possibly contain rows matching `p`? True
-    * when no stats were recorded for the column (never prune blind).
-    */
-  def mayContain(p: Prune): Boolean = {
-    val i = statsCols.indexOf(p.col)
-    i < 0 || intersects(statsMin(i), statsMax(i), p)
-  }
-
   /** Can data file `i` possibly contain rows matching `p`? File-level
-    * bounds win when recorded; otherwise falls back to the commit-level
-    * answer (never prune blind).
+    * bounds win when recorded; otherwise the commit-level ones answer,
+    * and a column with neither is never pruned (never prune blind).
     */
   def fileMayContain(i: Int, p: Prune): Boolean = {
-    val statsOk = fileStats.lift(i).flatMap(_.get(p.col)) match {
-      case Some((mn, mx)) => intersects(mn, mx, p)
-      case None => mayContain(p)
-    }
+    val statsOk = fileStats.lift(i).flatMap(_.get(p.col))
+      .orElse(stats.find(_._1 == p.col).map(_._2)).forall(_.intersects(p.range))
     // bloom filters answer the point question stats cannot: a file whose
     // bounds intersect may still definitely lack the probe value. The
     // probe carries the RENDERED value, not positions — each file's
@@ -134,49 +111,16 @@ final case class LogEntry(
 }
 
 /** One scan-pruning predicate: keep files whose recorded bounds for `col`
-  * can intersect [lo, hi]. With `requireSpec` set, the predicate applies
-  * ONLY to entries committed under exactly that partition spec — partition
-  * values computed under one transform must never prune data written under
-  * another (Iceberg scopes partition predicates by manifest spec-id the
-  * same way); non-matching entries simply aren't pruned by it. With
-  * `strBounds` set the predicate is LEXICOGRAPHIC (string-column stats;
-  * lo/hi are unused) — Iceberg prunes string manifests the same way.
+  * can intersect `range`, read in its kind ([[Bounds]]). With `requireSpec`
+  * set, it prunes ONLY entries committed under exactly that partition
+  * spec: partition values computed under one transform must never prune
+  * data written under another (Iceberg scopes them by manifest spec-id).
   */
 final case class Prune(
-    col: String, lo: BigDecimal, hi: BigDecimal, requireSpec: String = "",
-    strBounds: Option[(String, String)] = None,
+    col: String, range: Bounds.Interval, requireSpec: String = "",
     // rendered bloom probe value (see [[Bloom]]); set only for point
     // probes whose rendering provably matches the write side's
     bloom: Option[String] = None)
-
-object Prune {
-  /** lexicographic range predicate for a STRING column. */
-  def str(col: String, lo: String, hi: String, requireSpec: String = ""): Prune =
-    Prune(col, 0, 0, requireSpec, strBounds = Some((lo, hi)))
-
-  /** Code-point order, which is unsigned UTF-8 byte order: the order
-    * Spark's min/max and parquet footers record string bounds in, and so
-    * the one every string bound is compared and folded with. Java's
-    * `compareTo` orders UTF-16 units instead, and disagrees once a
-    * character at or above U+E000 meets a supplementary one (U+F000 sorts
-    * before U+1F600 here, after it there). At the first differing unit,
-    * surrogates move above U+E000-U+FFFF, the ICU fix-up.
-    */
-  val StrOrder: Ordering[String] = new Ordering[String] {
-    private def fix(c: Char): Int =
-      if (c < '\uD800') c else if (c >= '\uE000') c - 0x800 else c + 0x2000
-    def compare(a: String, b: String): Int = {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val (x, y) = (a.charAt(i), b.charAt(i))
-        if (x != y) return fix(x) - fix(y)
-        i += 1
-      }
-      a.length - b.length
-    }
-  }
-}
 
 /** File-based commit log with CAS concurrency control — the Spark-native
   * stand-in for the reference's Iceberg REST-catalog commit path
@@ -561,9 +505,9 @@ final class CommitLog(val root: Path) {
       dataFiles: Seq[String] = Nil,
       deleteFiles: Seq[String] = Nil,
       equalityCols: Seq[String] = Nil,
-      stats: Seq[(String, String, String)] = Nil, // (col, min, max)
+      stats: Seq[(String, Recorded)] = Nil,
       schemaJson: String = "",
-      fileStats: Seq[Map[String, (String, String)]] = Nil,
+      fileStats: Seq[Map[String, Recorded]] = Nil,
       partSpec: String = "",
       fileBlooms: Seq[Map[String, String]] = Nil,
       fileRows: Seq[Long] = Nil,
@@ -611,36 +555,19 @@ final class CommitLog(val root: Path) {
         Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         (Nil, p.toAbsolutePath.normalize.toString)
       }
+    // the entry as committed, but for what the claim decides: its seq,
+    // time and (with assignRowIds) its row ids
+    val draft = LogEntry(-1L, action, dataFiles, deleteFiles, equalityCols, 0L, stats,
+      schemaJson, fileStats, partSpec, blooms2, fileRows, fileRowIds, rowIdHigh, txnMarker,
+      props, bloomsRef)
     if (CommitLog.isRewriting(action, equalityCols))
-      MaintLock.withLocks(Seq(CommitLog.maintLockPath(root)))(casLoop(
-        action, dataFiles, deleteFiles, equalityCols, stats, schemaJson,
-        fileStats, partSpec, blooms2, bloomsRef, fileRows, fileRowIds, rowIdHigh,
-        assignRowIds, txnMarker, props, expectedCommittedSeqs, maxAttempts))
-    else casLoop(
-      action, dataFiles, deleteFiles, equalityCols, stats, schemaJson,
-      fileStats, partSpec, blooms2, bloomsRef, fileRows, fileRowIds, rowIdHigh,
-      assignRowIds, txnMarker, props, expectedCommittedSeqs, maxAttempts)
+      MaintLock.withLocks(Seq(CommitLog.maintLockPath(root)))(
+        casLoop(draft, assignRowIds, expectedCommittedSeqs, maxAttempts))
+    else casLoop(draft, assignRowIds, expectedCommittedSeqs, maxAttempts)
   }
 
-  private def casLoop(
-      action: String,
-      dataFiles: Seq[String],
-      deleteFiles: Seq[String],
-      equalityCols: Seq[String],
-      stats: Seq[(String, String, String)],
-      schemaJson: String,
-      fileStats: Seq[Map[String, (String, String)]],
-      partSpec: String,
-      fileBlooms: Seq[Map[String, String]],
-      bloomsRef: String,
-      fileRows: Seq[Long],
-      fileRowIds: Seq[Long],
-      rowIdHigh: Long,
-      assignRowIds: Boolean,
-      txnMarker: String,
-      props: Map[String, String],
-      expectedCommittedSeqs: Option[Set[Long]],
-      maxAttempts: Int): Long = {
+  private def casLoop(draft: LogEntry, assignRowIds: Boolean,
+      expectedCommittedSeqs: Option[Set[Long]], maxAttempts: Int): Long = {
     var attempt = 0
     var waits = 0
     while (attempt < maxAttempts) {
@@ -690,20 +617,17 @@ final class CommitLog(val root: Path) {
           // [base, base + rows): two racing appends can never interleave
           // id ranges.
           val (ids, high) =
-            if (!assignRowIds) (fileRowIds, rowIdHigh)
+            if (!assignRowIds) (draft.fileRowIds, draft.rowIdHigh)
             else {
               // pending txn entries included: their staged appends own
               // their id ranges even before (or without) publishing
               val base = CommitLog.nextRowId(
                 entriesOnce(Long.MaxValue, includePending = true))
-              (fileRows.scanLeft(base)(_ + _).init, base + fileRows.sum)
+              (draft.fileRows.scanLeft(base)(_ + _).init, base + draft.fileRows.sum)
             }
           Files.createFile(p) // atomic O_EXCL claim — the CAS
-          val e = relativized(LogEntry(seq, action, dataFiles, deleteFiles,
-            equalityCols, System.currentTimeMillis(),
-            stats.map(_._1), stats.map(_._2), stats.map(_._3), schemaJson,
-            fileStats, partSpec, fileBlooms, fileRows, ids, high, txnMarker, props,
-            bloomsRef))
+          val e = relativized(draft.copy(seq = seq, tsMs = System.currentTimeMillis(),
+            fileRowIds = ids, rowIdHigh = high))
           // content becomes visible atomically: write a temp file, then
           // rename over the claimed (empty) entry. Readers see either an
           // empty claim (skipped by entries()) or the full entry — never a
@@ -1099,16 +1023,16 @@ private[table] object Json {
     arr("deleteFiles", e.deleteFiles)
     arr("equalityCols", e.equalityCols)
     o.put("tsMs", e.tsMs)
-    arr("statsCols", e.statsCols)
-    arr("statsMin", e.statsMin)
-    arr("statsMax", e.statsMax)
+    arr("statsCols", e.stats.map(_._1))
+    arr("statsMin", e.stats.map(_._2.lo))
+    arr("statsMax", e.stats.map(_._2.hi))
     o.put("schemaJson", e.schemaJson)
     if (e.fileStats.nonEmpty) {
       val fs = o.putArray("fileStats")
       e.fileStats.foreach { m =>
         val fo = fs.addObject()
-        m.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
-          val a = fo.putArray(c); a.add(mn); a.add(mx)
+        m.toSeq.sortBy(_._1).foreach { case (c, r) =>
+          val a = fo.putArray(c); a.add(r.lo); a.add(r.hi)
         }
       }
     }
@@ -1176,13 +1100,13 @@ private[table] object Json {
       val a = n.get(key)
       if (a == null) Nil else (0 until a.size).map(a.get(_).asText())
     }
-    val fileStats: Seq[Map[String, (String, String)]] = {
+    val fileStats: Seq[Map[String, Recorded]] = {
       val a = n.get("fileStats")
       if (a == null) Nil
       else (0 until a.size).map { i =>
         val fo = a.get(i)
         fo.fieldNames().asScala.map { c =>
-          c -> (fo.get(c).get(0).asText, fo.get(c).get(1).asText)
+          c -> Recorded(fo.get(c).get(0).asText, fo.get(c).get(1).asText)
         }.toMap
       }
     }
@@ -1200,7 +1124,8 @@ private[table] object Json {
     }
     LogEntry(req("seq").asLong, req("action").asText, arr("dataFiles"),
       arr("deleteFiles"), arr("equalityCols"), req("tsMs").asLong,
-      arr("statsCols"), arr("statsMin"), arr("statsMax"),
+      arr("statsCols").lazyZip(arr("statsMin")).lazyZip(arr("statsMax"))
+        .map((c, lo, hi) => c -> Recorded(lo, hi)),
       if (n.has("schemaJson")) n.get("schemaJson").asText else "",
       fileStats,
       if (n.has("partSpec")) n.get("partSpec").asText else "",

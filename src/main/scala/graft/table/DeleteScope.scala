@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   * nothing.
   *
   * A key column proves nothing, so the delete still applies, when:
-  *  - its footer bounds are not integral or STRING ([[Footers.IntBound]],
-  *    [[Footers.StrBound]]), or it has none;
+  *  - its column in the delete file's footer schema is not integral or
+  *    STRING, or it has no footer bounds;
   *  - it holds a null, or a chunk's null count is unknown (the read's
   *    null-safe join matches null to null, which bounds do not describe);
   *  - by field id, it resolves to no column of the schema the data file
@@ -38,14 +38,14 @@ import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, Sh
   */
 private[table] object DeleteScope {
 
-  import Footers.{Bound, IntBound, StrBound, unionAll}
+  import Bounds.{Interval, Str}
 
   type DeleteFile = (String, Long, Seq[String])
 
   /** what a delete file's footer says about its keys: whether it holds no
     * rows, and the bounds of each column it can bound
     */
-  final case class FileKeys(empty: Boolean, ranges: Map[String, Bound])
+  final case class FileKeys(empty: Boolean, ranges: Map[String, Interval])
 
   /** a footer that cannot be read bounds nothing */
   private val Unknown = FileKeys(empty = false, Map.empty)
@@ -70,7 +70,7 @@ private[table] object DeleteScope {
       .groupBy(d => (d._2, d._3)).toSeq
     if (groups.isEmpty) return Nil
     val bySeq = entries.map(e => e.seq -> e).toMap
-    val fileIndex = mutable.HashMap.empty[Long, Map[String, Int]]
+    val fileIndex = mutable.LongMap.empty[Map[String, Int]]
     val schemaJsons = TreeMap.from(entries.collect {
       case e if e.schemaJson.nonEmpty => e.seq -> e.schemaJson })
     val schemas = mutable.HashMap.empty[Long, Option[StructType]]
@@ -78,11 +78,11 @@ private[table] object DeleteScope {
       schemaJsons.maxBefore(seq + 1).map(j => DataType.fromJson(j._2).asInstanceOf[StructType]))
     groups.map { case ((dseq, cols), files) =>
       val keys = files.map(f => keysOf(f._1)).filterNot(_.empty)
-      val ranges = cols.map(c => unionAll(keys.map(_.ranges.get(c))))
+      val ranges = cols.map(c => Footers.unionAll(keys.map(_.ranges.get(c))))
       val ids = cols.map(c => schemaAt(dseq).flatMap(_.fields.find(_.name == c)).flatMap(fieldId))
       // the prunes that can rule a file at seq s out: one per key column
       // that resolves to a column of the same kind in the file's schema
-      val prunesAt = mutable.HashMap.empty[Long, Seq[Prune]]
+      val prunesAt = mutable.LongMap.empty[Seq[Prune]]
       def prunes(s: Long): Seq[Prune] = prunesAt.getOrElseUpdate(s, {
         val fields = schemaAt(s).map(_.fields.toSeq).getOrElse(Nil)
         cols.indices.flatMap { j =>
@@ -90,13 +90,8 @@ private[table] object DeleteScope {
             id <- ids(j)
             r <- ranges(j)
             f <- fields.find(fieldId(_).contains(id))
-            p <- (r, f.dataType) match {
-              case (IntBound(lo, hi), ByteType | ShortType | IntegerType | LongType) =>
-                Some(Prune(f.name, lo, hi))
-              case (StrBound(lo, hi), StringType) => Some(Prune.str(f.name, lo, hi))
-              case _ => None
-            }
-          } yield p
+            if keyKind.get(f.dataType).contains(r.isStr)
+          } yield Prune(f.name, r)
         }
       })
       val touches: ((String, Long)) => Boolean = { case (f, s) =>
@@ -111,6 +106,10 @@ private[table] object DeleteScope {
       (files, touches)
     }
   }
+
+  /** the column types that can bound keys, to whether they are STRING */
+  private val keyKind: Map[DataType, Boolean] = Map(ByteType -> false, ShortType -> false,
+    IntegerType -> false, LongType -> false, StringType -> true)
 
   private def fieldId(f: StructField): Option[Long] =
     if (f.metadata.contains(GraftTable.FidKey)) Some(f.metadata.getLong(GraftTable.FidKey))
@@ -140,19 +139,17 @@ private[table] object DeleteScope {
           cache.clear(); cacheBytes.set(0)
         }
         if (cache.putIfAbsent(file, keys) == null)
-          cacheBytes.addAndGet(file.length + keys.ranges.map {
-            case (c, StrBound(lo, hi)) => c.length + lo.length + hi.length
-            case (c, _) => c.length + 16
+          cacheBytes.addAndGet(file.length + keys.ranges.map { case (c, r) =>
+            c.length + Seq(r.lo, r.hi).flatten.map { case Str(v) => v.length; case _ => 8 }.sum
           }.sum.toLong)
       }
       keys
     }
   }
 
-  /** a delete file's integral and STRING key bounds, of columns with no null */
+  /** a delete file's bounds of its integral and STRING columns with no null */
   private def keysOf(f: Footers.Footer): FileKeys =
-    FileKeys(empty = f.rows == 0, f.bounds.filter {
-      case (c, _: IntBound | _: StrBound) => f.nullFree(c)
-      case _ => false
+    FileKeys(empty = f.rows == 0, f.bounds.filter { case (c, _) =>
+      f.nullFree(c) && f.schema.find(_.name == c).exists(x => keyKind.contains(x.dataType))
     })
 }

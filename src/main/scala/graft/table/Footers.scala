@@ -26,22 +26,21 @@ import org.apache.spark.sql.types.StructType
   * drops them for a float chunk holding NaN, and all statistics of a
   * chunk holding a value over 4 KiB) leaves the column unbounded in the
   * file: skipping it would exclude rows the file holds. Only these kinds
-  * have bounds: INT32/INT64 unannotated or signed ([[IntBound]]);
-  * FLOAT/DOUBLE when finite, and DECIMAL as unscaled value and scale
-  * ([[DecBound]]); STRING, in code-point order, which is parquet's
-  * unsigned byte order over UTF-8 ([[StrBound]]). TIMESTAMP, written as
-  * INT96, has none.
+  * have bounds, as a closed [[Bounds.Interval]]: INT32/INT64 unannotated or
+  * signed, FLOAT/DOUBLE when finite, and DECIMAL as unscaled value and
+  * scale, as numbers; STRING as strings, in code-point order, which is
+  * parquet's unsigned byte order over UTF-8. TIMESTAMP, written as INT96,
+  * has none.
   */
 private[table] object Footers {
 
-  sealed trait Bound
-  final case class IntBound(lo: Long, hi: Long) extends Bound
-  final case class DecBound(lo: JBigDecimal, hi: JBigDecimal) extends Bound
-  final case class StrBound(lo: String, hi: String) extends Bound
+  import Bounds.{Interval, Num, Str}
 
-  /** `nullFree`: the columns whose every chunk records zero nulls */
-  final case class Footer(rows: Long, schema: StructType, bounds: Map[String, Bound],
-      nullFree: Set[String])
+  /** `nullFree`: the columns whose every chunk records zero nulls;
+    * `nullOnly`: the columns that hold no value but null, and so no bound
+    */
+  final case class Footer(rows: Long, schema: StructType, bounds: Map[String, Interval],
+      nullFree: Set[String], nullOnly: Set[String])
 
   /** a footer reader whose Hadoop conf is built at first use and shared
     * by every file it reads (`files.map(reader(spark))`). The options are
@@ -65,50 +64,45 @@ private[table] object Footers {
       def nulls(st: Option[Statistics[_]]) = st.filter(_.isNumNullsSet).map(_.getNumNulls)
       val cols = meta.getFileMetaData.getSchema.getFields.asScala.toSeq
         .collect { case f if f.isPrimitive => f.asPrimitiveType }
+      // each column's chunk statistics over the row groups holding a non-null
+      val held = cols.map(t => t -> groups.collect {
+        case (n, st) if !nulls(st.get(t.getName)).contains(n) => st.get(t.getName)
+      })
       Footer(meta.getBlocks.asScala.map(_.getRowCount).sum,
         // converted exactly as Spark's own schema inference converts it
         ParquetFileFormat.readSchemaFromFooter(
           new org.apache.parquet.hadoop.Footer(path, meta), toSpark),
-        cols.flatMap { t =>
-          val held = groups.filterNot { case (n, st) => nulls(st.get(t.getName)).contains(n) }
-          unionAll(held.map(g => boundOf(t, g._2.get(t.getName)))).map(t.getName -> _)
-        }.toMap,
-        cols.map(_.getName).filter(c => groups.forall(g => nulls(g._2.get(c)).contains(0L))).toSet)
+        held.flatMap { case (t, sts) => unionAll(sts.map(boundOf(t, _))).map(t.getName -> _) }.toMap,
+        cols.map(_.getName).filter(c => groups.forall(g => nulls(g._2.get(c)).contains(0L))).toSet,
+        held.collect { case (t, sts) if sts.isEmpty => t.getName }.toSet)
     }
   }
 
   /** one chunk's bounds: None when it records none or its kind has none */
-  private def boundOf(t: PrimitiveType, chunk: Option[Statistics[_]]): Option[Bound] =
+  private def boundOf(t: PrimitiveType, chunk: Option[Statistics[_]]): Option[Interval] =
     chunk.filter(_.hasNonNullValue).flatMap { st =>
       val (mn, mx) = (st.genericGetMin: Any, st.genericGetMax: Any)
-      def long(v: Any) = v.asInstanceOf[Number].longValue
-      def dec(v: Any, scale: Int) = v match {
+      def num(v: Any, scale: Int = 0) = Num(BigDecimal(v match {
         case b: Binary => new JBigDecimal(new BigInteger(b.getBytes), scale)
-        case n => JBigDecimal.valueOf(long(n), scale)
-      }
+        case n => JBigDecimal.valueOf(n.asInstanceOf[Number].longValue, scale)
+      }))
       (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
-        case (INT32 | INT64, null) => Some(IntBound(long(mn), long(mx)))
+        case (INT32 | INT64, null) => Some(Interval(num(mn), num(mx)))
         case (INT32 | INT64, a: IntLogicalTypeAnnotation) if a.isSigned =>
-          Some(IntBound(long(mn), long(mx)))
+          Some(Interval(num(mn), num(mx)))
         case (INT32 | INT64 | FIXED_LEN_BYTE_ARRAY | BINARY, d: DecimalLogicalTypeAnnotation) =>
-          Some(DecBound(dec(mn, d.getScale), dec(mx, d.getScale)))
+          Some(Interval(num(mn, d.getScale), num(mx, d.getScale)))
         case (FLOAT | DOUBLE, null) =>
           val (lo, hi) = (mn.asInstanceOf[Number].doubleValue, mx.asInstanceOf[Number].doubleValue)
-          Option.when(lo.isFinite && hi.isFinite)(DecBound(new JBigDecimal(lo), new JBigDecimal(hi)))
-        case (BINARY, _: StringLogicalTypeAnnotation) => Some(StrBound(
-          mn.asInstanceOf[Binary].toStringUsingUTF8, mx.asInstanceOf[Binary].toStringUsingUTF8))
+          Option.when(lo.isFinite && hi.isFinite)(
+            Interval(Num(BigDecimal(new JBigDecimal(lo))), Num(BigDecimal(new JBigDecimal(hi)))))
+        case (BINARY, _: StringLogicalTypeAnnotation) => Some(Interval(
+          Str(mn.asInstanceOf[Binary].toStringUsingUTF8), Str(mx.asInstanceOf[Binary].toStringUsingUTF8)))
         case _ => None
       }
     }
 
   /** the bounds covering every bound: None if there is none or one is missing */
-  def unionAll(bs: Seq[Option[Bound]]): Option[Bound] =
-    if (bs.isEmpty || bs.exists(_.isEmpty)) None
-    else bs.tail.foldLeft(bs.head)((acc, b) => acc.flatMap(a => (a, b.get) match {
-      case (IntBound(l1, h1), IntBound(l2, h2)) => Some(IntBound(l1 min l2, h1 max h2))
-      case (DecBound(l1, h1), DecBound(l2, h2)) => Some(DecBound(l1.min(l2), h1.max(h2)))
-      case (StrBound(l1, h1), StrBound(l2, h2)) =>
-        Some(StrBound(Prune.StrOrder.min(l1, l2), Prune.StrOrder.max(h1, h2)))
-      case _ => None
-    }))
+  def unionAll(bs: Seq[Option[Interval]]): Option[Interval] =
+    if (bs.exists(_.isEmpty)) None else bs.flatten.reduceOption(_ union _)
 }

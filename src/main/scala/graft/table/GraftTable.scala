@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 
+import graft.table.Bounds.{Interval, Num, Recorded, Str}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -66,50 +68,19 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     walked(dir)(_.filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map(_.toString).toSeq.sorted)
 
-  /** PER-FILE (Iceberg-manifest-granularity) bounds of `statsCols` from
-    * the files' [[Footers]]: STRING raw, in code-point order
-    * (Prune.StrOrder); numerics at six decimals rounded OUTWARD, so a
-    * bound never excludes a value its file holds. The kind is fixed by
-    * column TYPE at write time, and fold + prune reuse it. A column the
-    * footer does not bound gets NO entry: pruning never prunes blind.
+  /** Bounds of `statsCols` from the files' [[Footers]], as recorded
+    * ([[Bounds.Recorded]]): PER FILE (Iceberg-manifest granularity), and
+    * per commit, the fallback of a file with no bound of its own. So a
+    * commit bounds a column only when every file holding a non-null of it
+    * does (a DOUBLE file with Inf must not fall back to its siblings').
     */
   private def perFileStats(footers: => Seq[Footers.Footer], statsCols: Seq[String])
-      : (Seq[Map[String, (String, String)]], Set[String]) =
-    if (statsCols.isEmpty || footers.isEmpty) (Nil, Set.empty)
-    else {
-      val strCols = statsCols.filter(c =>
-        footers.head.schema.find(_.name == c).exists(_.dataType == StringType)).toSet
-      def dec(lo: java.math.BigDecimal, hi: java.math.BigDecimal) =
-        (lo.setScale(6, java.math.RoundingMode.FLOOR).toPlainString,
-          hi.setScale(6, java.math.RoundingMode.CEILING).toPlainString)
-      val render: Footers.Bound => (String, String) = {
-        case Footers.StrBound(lo, hi) => (lo, hi)
-        case Footers.IntBound(lo, hi) =>
-          dec(java.math.BigDecimal.valueOf(lo), java.math.BigDecimal.valueOf(hi))
-        case Footers.DecBound(lo, hi) => dec(lo, hi)
-      }
-      (footers.map(f => statsCols.flatMap(c => f.bounds.get(c).map(b => c -> render(b))).toMap),
-        strCols)
-    }
-
-  /** commit-level bounds folded FROM the per-file bounds (min of mins,
-    * max of maxes over files carrying the column) — the same footers
-    * serve both granularities. Keeps the already-rendered strings, so
-    * the fold can't change a value's representation.
-    */
-  private def foldStats(
-      fileStats: Seq[Map[String, (String, String)]],
-      statsCols: Seq[String],
-      strCols: Set[String] = Set.empty): Seq[(String, String, String)] =
-    statsCols.flatMap { c =>
-      val bounds = fileStats.flatMap(_.get(c))
-      if (bounds.isEmpty) None
-      else if (strCols(c)) // code-point fold, matching string prunes
-        Some((c, bounds.map(_._1).min(Prune.StrOrder), bounds.map(_._2).max(Prune.StrOrder)))
-      else Some((c,
-        bounds.minBy(b => BigDecimal(b._1))._1,
-        bounds.maxBy(b => BigDecimal(b._2))._2))
-    }
+      : (Seq[Map[String, Recorded]], Seq[(String, Recorded)]) =
+    if (statsCols.isEmpty || footers.isEmpty) (Nil, Nil)
+    else (footers.map(f => statsCols.flatMap(c =>
+        f.bounds.get(c).flatMap(Recorded.of).map(c -> _)).toMap),
+      statsCols.flatMap(c => Footers.unionAll(footers.filterNot(_.nullOnly(c)).map(_.bounds.get(c)))
+        .flatMap(Recorded.of).map(c -> _)))
 
   /** Per-file bloom filters for `bloomCols` over `files` (a fresh
     * write) — one aggregate scan per column: each value contributes its
@@ -196,12 +167,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     */
   private def derived(files: Seq[String], d: Derive, lineage: Lineage): Derived = {
     lazy val footers = files.map(Footers.reader(spark))
-    val (stats, strCols) = perFileStats(footers, d.statsCols)
+    val (stats, fold) = perFileStats(footers, d.statsCols)
     val fileStats =
       if (d.partDims == 0) stats
       else {
         val parts = files.map(f => (0 until d.partDims).flatMap(i =>
-          partValueFromPath(f, i).map(v => partColFor(i) -> (v, v))).toMap)
+          partValueFromPath(f, i).map(v => partColFor(i) -> Recorded(v, v))).toMap)
         if (stats.isEmpty) parts else parts.zip(stats).map { case (a, b) => a ++ b }
       }
     val blooms = perFileBlooms(files, d.bloomCols, d.bloomBits)
@@ -210,7 +181,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       case Rewritten(mat, _) => physMarkers(files, mat)
       case NoLineage => (Nil, Nil)
     }
-    Derived(files, strCols, foldStats(stats, d.statsCols, strCols), fileStats, blooms, rows, ids)
+    Derived(files, fold, fileStats, blooms, rows, ids)
   }
 
   /** The one write-and-commit path of every table write that stages
@@ -261,7 +232,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         val (keptStats, keptBlooms) = adoptedMeta(entries, kept)
         val (keptRows, keptIds) = adoptedLineage(entries, kept)
         def pad[A](xs: Seq[A], empty: A): Seq[A] = if (xs.isEmpty) m.files.map(_ => empty) else xs
-        (kept.map(_._1) ++ m.files, Nil, keptStats ++ pad(m.fileStats, Map.empty[String, (String, String)]),
+        (kept.map(_._1) ++ m.files, Nil, keptStats ++ pad(m.fileStats, Map.empty[String, Recorded]),
           keptBlooms ++ pad(m.blooms, Map.empty[String, String]),
           keptRows ++ pad(m.rows, 0L), keptIds ++ pad(m.ids, -1L))
     }
@@ -395,8 +366,8 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         s"addFiles: schema mismatch — table has ${typed(cur)}, files have ${typed(df0.schema)}")
     }
     enforceConstraints(df0)
-    val (stats, strCols) = perFileStats(footers, statsCols)
-    log.commit("add", dataFiles = files, stats = foldStats(stats, statsCols, strCols),
+    val (stats, fold) = perFileStats(footers, statsCols)
+    log.commit("add", dataFiles = files, stats = fold,
       schemaJson = idSchemaJson(df0.schema), fileStats = stats,
       fileRows = footers.map(_.rows), assignRowIds = true)
   }
@@ -1243,8 +1214,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       // audit branch must be enforced on main after the fast-forward —
       // dropping them would silently serve unmasked data and re-admit
       // replayed batches (r8 fix; the pre-r8 replay lost e.props)
-      log.commit(e.action, e.dataFiles, e.deleteFiles, e.equalityCols,
-        e.statsCols.lazyZip(e.statsMin).lazyZip(e.statsMax).toSeq,
+      log.commit(e.action, e.dataFiles, e.deleteFiles, e.equalityCols, e.stats,
         e.schemaJson, e.fileStats, e.partSpec, CommitLog.bloomsOf(e),
         fileRows = e.fileRows, fileRowIds = e.fileRowIds, rowIdHigh = e.rowIdHigh,
         txnMarker = e.txnMarker, props = e.props)
@@ -1332,8 +1302,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     // main may have advanced past the branch base and claimed the very
     // range the branch assigned — ids are manifest metadata here, so a
     // fresh assignment is free and collision-proof
-    log.commit(e.action, e.dataFiles, Nil, Nil,
-      e.statsCols.lazyZip(e.statsMin).lazyZip(e.statsMax).toSeq,
+    log.commit(e.action, e.dataFiles, Nil, Nil, e.stats,
       if (e.schemaJson.nonEmpty) currentJson else "",
       e.fileStats, e.partSpec, CommitLog.bloomsOf(e),
       fileRows = e.fileRows, assignRowIds = e.fileRows.nonEmpty)
@@ -1722,7 +1691,9 @@ final class GraftTable(spark: SparkSession, val root: Path) {
 
   /** DELETE WHERE col BETWEEN lo AND hi, metadata-only when the layout
     * allows (Iceberg's metadata delete / Delta's partition delete): each
-    * live data file is classified by its RECORDED per-file bounds —
+    * live data file is classified by its RECORDED per-file bounds, read
+    * in the column's kind ([[Bounds]]: numbers, or STRING in code-point
+    * order; a bound of a kind with none, such as a DATE, straddles) —
     * fully inside the range is dropped from the file list without being
     * read, fully outside is adopted verbatim with its stats/blooms/
     * lineage, and only files whose bounds STRADDLE the range (or carry
@@ -1745,8 +1716,6 @@ final class GraftTable(spark: SparkSession, val root: Path) {
 
   private def deleteWhereRangeOnce(colName: String, loV: Any, hiV: Any,
       statsCols: Seq[String], bloomCols: Seq[String]): DeleteWhereReport = {
-    val lo = BigDecimal(loV.toString)
-    val hi = BigDecimal(hiV.toString)
     val entries = log.entries()
     // SQL DELETE on an empty table = 0 rows affected, not an error (same
     // contract as updateWhereEq's empty/absent no-ops): no commit, the
@@ -1764,19 +1733,18 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         rewritten = files.size)
     }
     val (allStats, _) = adoptedMeta(entries, dataFiles)
-    // 0 = bounds ⊆ [lo, hi] (drop), 1 = disjoint (keep), 2 = straddle/unknown
+    // lo and hi in the column's kind ([[Bounds.probe]]; a DATE has none, so
+    // every file straddles). 0 = bounds ⊆ [lo, hi] between the probes'
+    // inner ends (drop), 1 = disjoint beyond their outer ends (keep), 2 = straddle
+    val str = schemaFrom(entries).flatMap(_.find(_.name == colName)).exists(_.dataType == StringType)
+    val (lo, hi) = (Bounds.probe(loV, str), Bounds.probe(hiV, str))
     val classed = dataFiles.zip(allStats).map { case (f, st) =>
-      val cls = st.get(colName) match {
-        case Some((mn, mx)) =>
-          try {
-            val (bmn, bmx) = (BigDecimal(mn), BigDecimal(mx))
-            if (bmn >= lo && bmx <= hi) 0
-            else if (bmx < lo || bmn > hi) 1
-            else 2
-          } catch { case _: NumberFormatException => 2 }
-        case None => 2
-      }
-      (f, cls)
+      val b = st.get(colName).map(_.in(str))
+      (f, (lo, hi) match {
+        case (Some(l), Some(h)) if b.exists(_.within(Interval(l.hi, h.lo))) => 0
+        case (Some(l), Some(h)) if b.exists(_.disjoint(Interval(l.lo, h.hi))) => 1
+        case _ => 2
+      })
     }
     val dropped = classed.collect { case (f, 0) => f }
     val kept = classed.collect { case (f, 1) => f }
@@ -2012,9 +1980,9 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     live.map { case (f, seq) =>
       val e = bySeq(seq)
       val i = idxBySeq(seq)(f)
-      val stats = e.fileStats.lift(i).getOrElse(Map.empty[String, (String, String)])
+      val stats = e.fileStats.lift(i).getOrElse(Map.empty[String, Recorded])
       val tuple = stats.toSeq.filter(x => isPartKey(x._1)).sortBy(_._1)
-        .map { case (c, (mn, _)) => s"$c=$mn" }.mkString(",")
+        .map { case (c, r) => s"$c=${r.lo}" }.mkString(",")
       (if (e.partSpec.isEmpty || tuple.isEmpty) null else tuple,
         e.fileRows.lift(i).getOrElse(0L))
     }.toDF("partition", "rows")
@@ -2047,7 +2015,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     live._1.map { case (f, seq) =>
       val e = entriesBySeq(seq)
       val stats = indexBySeq(seq).get(f).flatMap(e.fileStats.lift).getOrElse(Map.empty)
-        .toSeq.sortBy(_._1).map { case (c, (mn, mx)) => s"$c:[$mn,$mx]" }
+        .toSeq.sortBy(_._1).map { case (c, r) => s"$c:[${r.lo},${r.hi}]" }
         .mkString(";")
       (f, seq, e.action, stats)
     }.toDF("path", "added_seq", "action", "file_stats")
@@ -2060,9 +2028,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * prunes files:
     *  - `=`: per-file stats, every partition dimension on the column
     *    (bucket included) and the bloom probe ([[eqPrunes]]);
-    *  - `>=`, `>`, `<=`, `<`, `BETWEEN`: once the column has a lower and
-    *    an upper bound, one range rule keyed on its type
-    *    ([[rangePrunes]]); a strict bound prunes by its closed superset;
+    *  - `>=`, `>`, `<=`, `<`, `BETWEEN`: the tightest lower and upper
+    *    bound on the column, either one alone, as one interval in the
+    *    column's kind ([[rangePrunes]]); a strict bound prunes by its
+    *    closed superset;
     *  - the first `IN`: the union, over its values, of the files that
     *    value's equality prune keeps under all the other prunes — one
     *    plan that opens each surviving file once, where one read per
@@ -2091,15 +2060,15 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       case ScanPlan.InList(a, ls) => colOf(a).map(_ -> ls.flatMap(valueOf))
       case _ => None
     }.nextOption()
-    val bounds = conj.flatMap {
-      case ScanPlan.Range(bs) =>
-        bs.flatMap(b => for (c <- colOf(b.col); v <- valueOf(b.value)) yield (c, b.lower, v))
+    // each range side in its column's kind; the residual filter keeps every one
+    val sides = conj.flatMap {
+      case ScanPlan.Range(bs) => bs.flatMap(b => for {
+        c <- colOf(b.col); v <- valueOf(b.value); s <- Bounds.rangeSide(v, types(c) == StringType, b.lower)
+      } yield c -> s)
       case _ => Nil
     }
-    val ranges = bounds.map(_._1).distinct.map { c =>
-      val (los, his) = bounds.filter(_._1 == c).partition(_._2)
-      c -> rangePrunes(entries, c, types(c), los.map(_._3), his.map(_._3))
-    }.filter(_._2.nonEmpty)
+    val ranges = sides.map(_._1).distinct.map(c =>
+      c -> rangePrunes(entries, c, sides.collect { case (`c`, r) => r }.reduce(_ intersect _)))
     val prunes = eqs.flatMap { case (c, v) => eqPrunes(entries, c, v) } ++ ranges.flatMap(_._2)
     val (data, dels) = in match {
       case None => CommitLog.stateFrom(entries, prunes)
@@ -2136,52 +2105,25 @@ final class GraftTable(spark: SparkSession, val root: Path) {
   def prunedFileCount(colName: String, lo: BigDecimal, hi: BigDecimal): Int =
     planScan(ScanPlan.closed(colName, lo, hi)).filesOpened
 
-  private def numericBound(value: Any): Option[BigDecimal] = value match {
-    case n: Int => Some(BigDecimal(n))
-    case n: Long => Some(BigDecimal(n))
-    case n: Double => Some(BigDecimal(n))
-    case n: BigDecimal => Some(n)
-    case n: java.math.BigDecimal => Some(BigDecimal(n))
-    case _ => None // string/other keys: partition (bucket) pruning only
-  }
-
-  /** range predicates on one column, one rule keyed on its recorded type.
-    * A STRING column records code-point-ordered stats, so it takes its
-    * tightest string bounds, plus the prefix range on every string-valued
-    * order-preserving dimension over it (truncstr: a prefix sorts ≤
-    * everything it prefixes). Any other column takes its tightest decimal
-    * bounds, plus the transformed range on every numeric order-preserving
-    * dimension. Bounds of the other kind never prune: compared against
-    * the other kind's renderings they false-prune ("2.000000" > "150"),
-    * and the residual filter keeps the read exact anyway. Partition
-    * predicates carry `requireSpec`, so they only prune entries written
-    * under THIS spec — epochs written under an older transform keep
-    * their source-column pruning but are never pruned by a foreign
-    * partition value (Iceberg's per-manifest spec-id scoping). A range
-    * never carries a bloom probe, even when lo = hi. Nil until both
-    * sides are bounded.
+  /** range predicates on one column for `range`, its conjuncts' tightest
+    * sides in the column's kind, either one optional. Each order-preserving
+    * partition dimension of that kind over the column maps each side
+    * through its monotone transform (truncstr: a prefix sorts ≤ all it
+    * prefixes), scoped by `requireSpec` to entries written under THIS
+    * spec (Iceberg's per-manifest spec-id scoping). A range never carries
+    * a bloom probe, even when lo = hi.
     */
-  private def rangePrunes(entries: Seq[LogEntry], colName: String, colType: DataType,
-      los: Seq[Any], his: Seq[Any]): Seq[Prune] = {
+  private def rangePrunes(entries: Seq[LogEntry], colName: String, range: Interval): Seq[Prune] = {
     val specs = specsFrom(entries)
     val render = PartitionSpec.renderAll(specs)
-    val dims = specs.zipWithIndex.filter { case (sp, _) =>
-      sp.col == colName && sp.transform.orderPreserving }
-    if (colType == StringType) {
-      def strs(vs: Seq[Any]) = vs.collect { case s: String => s }
-      (for (lo <- strs(los).maxOption(Prune.StrOrder); hi <- strs(his).minOption(Prune.StrOrder)) yield
-        Prune.str(colName, lo, hi) +: dims.collect {
-          case (sp, i) if sp.transform.stringValued =>
-            for (plo <- partitionValueStrOf(sp, lo); phi <- partitionValueStrOf(sp, hi))
-              yield Prune.str(partColFor(i), plo, phi, requireSpec = render)
-        }.flatten).getOrElse(Nil)
-    } else {
-      (for (lo <- los.flatMap(numericBound).maxOption; hi <- his.flatMap(numericBound).minOption)
-        yield Prune(colName, lo, hi) +: dims.collect {
-          case (sp, i) if !sp.transform.stringValued =>
-            Prune(partColFor(i), sp.transform.eval(lo), sp.transform.eval(hi), requireSpec = render)
-        }).getOrElse(Nil)
-    }
+    Prune(colName, range) +: specs.zipWithIndex.collect {
+      case (sp, i) if sp.col == colName && sp.transform.orderPreserving &&
+          sp.transform.stringValued == range.isStr =>
+        Prune(partColFor(i), range.map {
+          case Str(v) => partitionValueStrOf(sp, v).map(Str)
+          case Num(v) => Some(Num(sp.transform.eval(v)))
+        }, requireSpec = render)
+    }.filter(_.range != Interval.Full)
   }
 
   /** equality predicates for one `col = value` conjunct of [[planScan]]
@@ -2198,12 +2140,11 @@ final class GraftTable(spark: SparkSession, val root: Path) {
       // truncstr is string-valued
       case (sp, i) if sp.col == colName && sp.transform.stringValued =>
         partitionValueStrOf(sp, value)
-          .map(pv => Prune.str(partColFor(i), pv, pv, requireSpec = render))
+          .map(pv => Prune(partColFor(i), Interval.point(Str(pv)), requireSpec = render))
       case (sp, i) if sp.col == colName =>
         partitionValueOf(sp, value, colType)
-          .map(pv => Prune(partColFor(i), pv, pv, requireSpec = render))
+          .map(pv => Prune(partColFor(i), Interval.point(Num(pv)), requireSpec = render))
     }.flatten
-    val isStrCol = colType.contains(org.apache.spark.sql.types.StringType)
     // the bloom probe attaches only when its rendering provably equals
     // the write side's cast-to-string (exact-type matches; a DOUBLE
     // renders "150.0" vs an INT's "150", so near-matches get stats-only
@@ -2214,26 +2155,10 @@ final class GraftTable(spark: SparkSession, val root: Path) {
         Some(v.toString)
       case _ => None
     }
-    partPrunes ++ (value match {
-      // the prune KIND must follow the column's recorded stats kind
-      // (fixed by column type at write time): string columns record
-      // native lexicographic bounds, everything else decimal renderings.
-      // A String probe against a numeric column therefore parses
-      // numerically (no prune when it can't) — comparing it
-      // lexicographically against decimal renderings would false-prune
-      // ("2.000000" > "150"). A probe of the wrong kind for the column
-      // never prunes the source column; partition prunes above (typed by
-      // the partition VALUE) still apply, and the residual filter keeps
-      // the read correct.
-      case s: String if isStrCol =>
-        Seq(Prune.str(colName, s, s).copy(bloom = bloomVal))
-      case s: String =>
-        try Seq(Prune(colName, BigDecimal(s), BigDecimal(s)))
-        catch { case _: NumberFormatException => Nil }
-      case _ if isStrCol => Nil
-      case v =>
-        numericBound(v).map(n => Prune(colName, n, n, bloom = bloomVal)).toSeq
-    })
+    // the prune KIND follows the column's type; a probe of the other kind
+    // prunes by partition values only, and the residual filter keeps the rows
+    partPrunes ++ Bounds.probe(value, colType.contains(StringType))
+      .map(Prune(colName, _, bloom = bloomVal))
   }
 
   private def readPruned(asOf: Long, prune: Seq[Prune],
@@ -2415,12 +2340,12 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     * that never reads it also never degrades its pruning.
     */
   private def adoptedMeta(entries: Seq[LogEntry], files: Seq[(String, Long)])
-      : (Seq[Map[String, (String, String)]], Seq[Map[String, String]]) = {
+      : (Seq[Map[String, Recorded]], Seq[Map[String, String]]) = {
     val byEntry = entries.map(e => e.seq -> e).toMap
     val metas = files.map { case (f, s) =>
       val e = byEntry(s)
       val i = e.dataFiles.indexOf(f)
-      (e.fileStats.lift(i).getOrElse(Map.empty[String, (String, String)]),
+      (e.fileStats.lift(i).getOrElse(Map.empty[String, Recorded]),
         CommitLog.bloomsOf(e).lift(i).getOrElse(Map.empty[String, String]))
     }
     (metas.map(_._1), metas.map(_._2))
@@ -2710,7 +2635,7 @@ final class GraftTable(spark: SparkSession, val root: Path) {
     val (rows, ids) = adoptedLineage(entries, dataFiles)
     val merged = oldStats.zip(fresh.fileStats).map { case (o, f) => o ++ f }
     log.commit("replace", dataFiles = files,
-      stats = foldStats(merged, statsCols, fresh.strCols),
+      stats = fresh.fold,
       schemaJson = schemaJson, fileStats = merged, fileBlooms = oldBlooms,
       fileRows = rows, fileRowIds = ids,
       rowIdHigh = CommitLog.nextRowId(entries),
@@ -3066,8 +2991,8 @@ object GraftTable {
   private final case class Rewritten(materialized: Boolean, rowIdHigh: Long) extends Lineage
 
   /** Metadata derived from fresh data files by [[derived]]. */
-  private final case class Derived(files: Seq[String], strCols: Set[String],
-      fold: Seq[(String, String, String)], fileStats: Seq[Map[String, (String, String)]],
+  private final case class Derived(files: Seq[String],
+      fold: Seq[(String, Recorded)], fileStats: Seq[Map[String, Recorded]],
       blooms: Seq[Map[String, String]], rows: Seq[Long], ids: Seq[Long])
 
   /** idempotent create: drop-if-exists then create — the reference's

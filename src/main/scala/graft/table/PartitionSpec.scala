@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *  - non-order-preserving (bucket) ⇒ only EQUALITY predicates prune
   *    (Iceberg applies the same rule).
   *
-  * Partition values are rendered as BigDecimal-parsable strings so file
-  * pruning reuses the numeric fileStats machinery in [[LogEntry]].
+  * Partition values are recorded as per-file [v, v] bounds, so file
+  * pruning compares them like any other recorded bound ([[Bounds]]).
   */
 sealed trait Transform {
   /** partition value as a Spark expression over the source column. */

@@ -67,9 +67,9 @@ object ScanPlan {
   /** any other shape: it filters, it never prunes. */
   final case class Residual(e: Expression) extends Conjunct
 
-  /** One side of a range. A scan prunes a strict bound by its closed
-    * superset (the residual filter keeps the strict comparison); DELETE
-    * refuses strict bounds.
+  /** One side of a range. A scan prunes on each side alone, a strict
+    * bound by its closed superset (the residual filter keeps the strict
+    * comparison); DELETE takes a closed pair and refuses strict bounds.
     */
   final case class Bound(col: UnresolvedAttribute, value: Literal,
       lower: Boolean, strict: Boolean)

@@ -182,6 +182,12 @@ class GraftSqlSpec extends AnyFunSuite {
     // numeric BETWEEN → stats-pruned range delete
     GraftSql.sql(spark, cat, "DELETE FROM graft.ns.t WHERE count BETWEEN 15 AND 25")
     assert(GraftSql.sql(spark, cat, "SELECT * FROM graft.ns.t").count() == 0)
+    // a STRING BETWEEN takes the same range delete, in code-point order
+    t.append(Seq(("c5", "x", 1), ("d0", "x", 2), ("d5", "x", 3), ("d9", "x", 4), ("e0", "x", 5))
+      .toDF("name", "size", "count"), statsCols = Seq("name"))
+    GraftSql.sql(spark, cat, "DELETE FROM graft.ns.t WHERE name BETWEEN 'd0' AND 'd9'")
+    assert(GraftSql.sql(spark, cat, "SELECT name FROM graft.ns.t")
+      .collect().map(_.getString(0)).sorted.toSeq == Seq("c5", "e0"))
     // anything else fails loudly instead of rewriting the table
     intercept[IllegalArgumentException] {
       GraftSql.sql(spark, cat, "DELETE FROM graft.ns.t WHERE name = 'A' OR count = 2")
@@ -644,13 +650,13 @@ class GraftSqlSpec extends AnyFunSuite {
     * as three partition-separated batches (counts +0, +100, +200), so
     * probes have files to prune.
     */
-  private def partitionedCat(): GraftCatalog = {
+  private def partitionedCat(shifts: Seq[Int] = Seq(0, 100, 200)): GraftCatalog = {
     val cat = freshCat()
     GraftSql.sql(spark, cat, "CREATE NAMESPACE graft.ns")
     GraftSql.sql(spark, cat,
       """CREATE TABLE graft.ns.t (name STRING, size STRING, count INT)
         |PARTITIONED BY (truncate(10, count))""".stripMargin)
-    for (shift <- Seq(0, 100, 200)) {
+    for (shift <- shifts) {
       val src = s"gsql_ex_${java.util.UUID.randomUUID().toString.replace("-", "")}"
       items.withColumn("count", col("count") + shift).createOrReplaceTempView(src)
       try GraftSql.sql(spark, cat, s"INSERT INTO graft.ns.t SELECT * FROM $src")
@@ -683,6 +689,19 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(GraftSql.sql(spark, cat,
       "SELECT name FROM graft.ns.t WHERE count = 115").collect()
       .map(_.getString(0)).toSeq == Seq("B"))
+  }
+
+  test("EXPLAIN of a one-sided range reports its prune") {
+    val cat = partitionedCat(Seq(0, 100, 200, 300))
+    val plan = GraftSql.sql(spark, cat,
+      "EXPLAIN SELECT name FROM graft.ns.t WHERE count >= 300").collect().head.getString(0)
+    val m = "prunes to (\\d+) of (\\d+)".r.findFirstMatchIn(plan)
+    assert(m.exists(c => c.group(1).toInt > 0 && c.group(1).toInt < c.group(2).toInt),
+      s"a lower bound alone must prune:\n$plan")
+    def names(where: String) = GraftSql.sql(spark, cat,
+      s"SELECT name, count FROM graft.ns.t WHERE $where").collect().map(_.toString).sorted.toSeq
+    assert(names("count >= 300") == names("count BETWEEN 300 AND 1000"))
+    assert(names("count >= 300").size == items.count())
   }
 
   test("SQL pruning takes every conjunct: IN prunes, and an AND opens no " +

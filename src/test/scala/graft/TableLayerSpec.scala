@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.sql.GraftSql
 import graft.table.{CommitLog, GraftCatalog, GraftTable, PartitionSpec, Transform}
+import graft.table.Bounds.Recorded
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -144,6 +145,132 @@ class TableLayerSpec extends AnyFunSuite {
     assert(t.readRange("count", BigDecimal(300), BigDecimal(305)).count() == 6)
   }
 
+  test("one-sided ranges prune on either side: INT, DOUBLE at the six-decimal edge, " +
+      "STRING in code-point order, and an order-preserving partition dimension") {
+    // U+F000 sorts below U+1F600 by code point, above it by UTF-16 units
+    val (bmp, supp) = ("\uF000", "\uD83D\uDE00")
+    val prefixes = Seq("a", "b", "c", "d", "e", "f", bmp, supp)
+    // file k holds count k*100 .. k*100+9, x = count + 0.0000005 (recorded
+    // rounded outward to six decimals) and names prefixed prefixes(k)
+    val rows = prefixes.zipWithIndex.map { case (p, k) =>
+      (0 until 10).map(i => (s"$p$i", k * 100 + i, k * 100 + i + 0.0000005))
+    }
+    val t = freshTable("onesided")
+    rows.foreach(r => t.append(r.toDF("name", "count", "x").coalesce(1),
+      statsCols = Seq("name", "count", "x")))
+    def check(tbl: GraftTable, where: String, opened: Int): Unit = {
+      val plan = tbl.planScan(where)
+      assert(plan.filesOpened == opened && opened < plan.filesLive,
+        s"`$where` opened ${plan.filesOpened} of ${plan.filesLive}, expected $opened")
+      def sorted(df: DataFrame) = df.select("name", "count").collect().map(_.toString).sorted.toSeq
+      assert(sorted(plan.read) == sorted(tbl.read().filter(expr(where))), where)
+    }
+    check(t, "count >= 300", 5)
+    check(t, "count > 309", 5) // strict: pruned by its closed superset, keeps 309's file
+    check(t, "count > 310", 4)
+    check(t, "300 <= count", 5)
+    check(t, "count <= 9", 1)
+    check(t, "count <= 99", 1)
+    check(t, "count < 100", 2)
+    check(t, "count < -1", 0)
+    // file 0 records x in [0.000000, 9.000001], file 7 in [700.000000, 709.000001]
+    check(t, "x <= 9.0000005", 1)
+    check(t, "x < 0.0000005", 1)
+    check(t, "x > 709.0000005", 1)
+    check(t, "x >= 709.000002", 0)
+    check(t, s"name >= '$bmp'", 2)
+    check(t, s"name > '$bmp'", 2)
+    check(t, s"name >= '$supp'", 1)
+    check(t, s"name < '$supp'", 7)
+    check(t, "name <= 'b'", 1)
+    // no stats: only the partition values prune, each side mapped alone
+    val p = freshTable("onesided_part")
+    p.appendPartitioned(rows.flatten.toDF("name", "count", "x"),
+      PartitionSpec("count", Transform.Truncate(100)))
+    check(p, "count >= 300", p.planScan("count BETWEEN 300 AND 799").filesOpened)
+    check(p, "count < 150", p.planScan("count BETWEEN 0 AND 149").filesOpened)
+    assert(p.planScan("count < 150").filesOpened > 0)
+  }
+
+  test("deleteWhereRange on a STRING column drops, adopts and rewrites by its bounds") {
+    val t = freshTable("strdelete")
+    // one file each: inside ['c0', 'c9'], disjoint from it, straddling it
+    Seq(Seq("c0", "c5", "c9"), Seq("d0", "d9"), Seq("b5", "c5")).foreach(ns =>
+      t.append(ns.map(n => (n, 1)).toDF("name", "count").coalesce(1), statsCols = Seq("name")))
+    val r = t.deleteWhereRange("name", "c0", "c9", statsCols = Seq("name"))
+    assert(r.dropped == 1 && r.kept == 1 && r.rewritten == 1, s"$r")
+    assert(t.read().select("name").as[String].collect().sorted.toSeq == Seq("b5", "d0", "d9"))
+    // a DATE has no bounds: every file straddles, and the rewrite filters
+    val d = freshTable("datedelete")
+    Seq("2024-01-01", "2024-02-01").foreach(day =>
+      d.append(Seq((1, java.sql.Date.valueOf(day))).toDF("k", "day").coalesce(1),
+        statsCols = Seq("day")))
+    val rd = d.deleteWhereRange("day", java.sql.Date.valueOf("2024-01-15"),
+      java.sql.Date.valueOf("2024-03-01"))
+    assert(rd.dropped == 0 && rd.kept == 0 && rd.rewritten >= 1, s"$rd")
+    assert(d.read().select("day").as[java.sql.Date].collect().map(_.toString).toSeq ==
+      Seq("2024-01-01"))
+  }
+
+  test("a file its footer does not bound is not pruned by its commit's other files") {
+    val t = freshTable("unbounded_sibling")
+    // one commit of two files: A holds +Inf, so its footer bounds nothing
+    // and it falls back to the commit's bounds; B bounds x to [1, 2]
+    t.append(Seq(("a", 5.0), ("a", Double.PositiveInfinity), ("b", 1.0), ("b", 2.0))
+      .toDF("k", "x").repartitionByRange(2, col("k")), statsCols = Seq("x"))
+    // a file of nulls only still adds no bound and stays prunable
+    t.append(Seq(("c", None), ("d", Some(1.5))).toDF("k", "x")
+      .repartitionByRange(2, col("k")), statsCols = Seq("x"))
+    assert(t.snapshots.map(_.dataFiles.size) == Seq(2, 2))
+    assert(t.snapshots.map(_.stats.map(_._1)) == Seq(Nil, Seq("x")))
+    for ((where, opened) <- Seq("x >= 3" -> 1, "x = 5.0" -> 1, "x > 1e300" -> 1,
+        "x BETWEEN 1 AND 2" -> 4)) {
+      val plan = t.planScan(where)
+      assert(plan.filesOpened == opened, s"`$where` opened ${plan.filesOpened}")
+      assert(plan.read.count() == t.read().filter(expr(where)).count(), where)
+    }
+    assert(t.read().filter("x >= 3").count() == 2)
+  }
+
+  test("float and double probes prune by the values that round to them") {
+    val t = freshTable("floatexact")
+    // toString gives a decimal that names the float or double (3.4028235E38
+    // for Float.MaxValue), not its exact value, which the footer records
+    val big = 1.2345678901234567e30
+    t.append(Seq(("m", Float.MaxValue, big), ("n", 123456792f, big))
+      .toDF("k", "f", "d").coalesce(1), statsCols = Seq("f", "d"))
+    for (where <- Seq("d = 1.2345678901234567E30", "d >= 1.2345678901234567E30",
+        "d <= 1.2345678901234567E30", "f = 123456792F", "f <= 123456792F", "f > 123456792F")) {
+      val want = t.read().filter(where).count()
+      assert(want > 0 && t.planScan(where).read.count() == want, where)
+    }
+    // SQL cannot spell Float.MaxValue as a FLOAT literal, so its probes are built
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val (f, fmax) = (UnresolvedAttribute("f"), Literal(Float.MaxValue))
+    for ((where, want) <- Seq(EqualTo(f, fmax) -> 1, LessThanOrEqual(f, fmax) -> 2,
+        GreaterThanOrEqual(f, fmax) -> 1))
+      assert(t.planScan(where).read.count() == want, where.toString)
+    assert(t.readEq("f", Float.MaxValue).count() == 1)
+    assert(t.readEq("f", 123456792f).count() == 1)
+    assert(t.readEq("d", big).count() == 2)
+    // Spark casts a DECIMAL column to double to compare it with one: 1.10
+    // equals 1.1D (exact value 1.1000000000000000888...), and
+    // 12345678901234567890 equals 1.2345678901234567E19D (...67168)
+    val p = freshTable("decdouble")
+    p.append(Seq(("a", "1.10", "12345678901234567890")).toDF("k", "p", "q")
+      .select(col("k"), col("p").cast("decimal(10,2)").as("p"), col("q").cast("decimal(38,0)").as("q"))
+      .coalesce(1), statsCols = Seq("p", "q"))
+    for (where <- Seq("p = 1.1D", "p >= 1.1D", "p <= 1.1D", "q = 1.2345678901234567E19D",
+        "q >= 1.2345678901234567E19D", "q <= 1.2345678901234567E19D")) {
+      assert(p.read().filter(where).count() == 1, where)
+      assert(p.planScan(where).read.count() == 1, where)
+    }
+    assert(p.readEq("p", 1.1).count() == 1)
+    val r = p.deleteWhereRange("p", 1.1, 1.1)
+    assert(r.rewritten == 1 && p.read().count() == 0, s"$r")
+  }
+
   test("all-null stats column does not poison later range reads") {
     val t = freshTable("nullstats")
     // the batch's stats column is entirely null: min/max are null, so NO
@@ -153,7 +280,7 @@ class TableLayerSpec extends AnyFunSuite {
       .toDF("name", "size")
       .withColumn("count", lit(null).cast("int"))
     t.append(nullBatch, statsCols = Seq("count"))
-    assert(t.commitLog.entries().last.statsCols.isEmpty)
+    assert(t.commitLog.entries().last.stats.isEmpty)
     t.append(Seq(("C", "z", 5)).toDF("name", "size", "count"), statsCols = Seq("count"))
     // range read survives the stat-less commit and never prunes it blind
     val got = t.readRange("count", BigDecimal(0), BigDecimal(10))
@@ -2906,7 +3033,7 @@ class TableLayerSpec extends AnyFunSuite {
     val xs = Seq(1.2345675, 2.2345674)
     xs.foreach(x => t.append(Seq(("v", x)).toDF("k", "x").repartition(1), statsCols = Seq("x")))
     assert(t.snapshots.map(_.fileStats.head("x")) ==
-      Seq(("1.234567", "1.234568"), ("2.234567", "2.234568")))
+      Seq(Recorded("1.234567", "1.234568"), Recorded("2.234567", "2.234568")))
     xs.foreach { x =>
       assert(t.read().filter(col("x") === x).count() == 1)
       assert(t.prunedFileCountEq("x", x) == 1, s"x = $x")
@@ -3106,7 +3233,7 @@ class TableLayerSpec extends AnyFunSuite {
     val t = cat.createTable("ns", "t")
     t.append(Seq((bmp, 1L), (supp, 2L)).toDF("name", "k").repartition(1),
       statsCols = Seq("name", "k"))
-    assert(t.snapshots.head.fileStats.head("name") == ((bmp, supp)))
+    assert(t.snapshots.head.fileStats.head("name") == Recorded(bmp, supp))
     assert(t.readEq("name", bmp).count() == 1)
     assert(t.planScan(s"name = '$bmp'").filesOpened == 1)
     assert(t.planScan(s"name >= '$bmp' AND name <= '$bmp'").read.count() == 1)

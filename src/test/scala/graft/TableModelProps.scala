@@ -1216,20 +1216,22 @@ object TableModelProps extends Properties("graft-table-model") {
       import spark.implicits._
       val (lo, hi) = (math.min(a, b), math.max(a, b))
       val t = run("prop_range", ops)
-      val pruned = sortedRows(t.readRange("count", BigDecimal(lo), BigDecimal(hi))
+      def rows(df: org.apache.spark.sql.DataFrame) = sortedRows(df
         .select(org.apache.spark.sql.functions.col(keyColAt(ops, ops.size - 1)).as("name"),
           org.apache.spark.sql.functions.col("count").cast("int").as("count"))
         .as[Row].collect().toSeq)
+      val pruned = rows(t.readRange("count", BigDecimal(lo), BigDecimal(hi)))
       val want = sortedRows(model(ops, ops.size - 1).filter(r => r._2 >= lo && r._2 <= hi))
       // the point probe additionally runs bloom pruning (plain appends
       // record blooms on count): a false negative surfaces as a lost row
-      val eqGot = sortedRows(t.readEq("count", lo)
-        .select(org.apache.spark.sql.functions.col(keyColAt(ops, ops.size - 1)).as("name"),
-          org.apache.spark.sql.functions.col("count").cast("int").as("count"))
-        .as[Row].collect().toSeq)
+      val eqGot = rows(t.readEq("count", lo))
       val eqWant = sortedRows(model(ops, ops.size - 1).filter(_._2 == lo))
-      val ok = pruned == want && eqGot == eqWant
-      if (!ok) println(s"BOUNDED MISMATCH lo=$lo hi=$hi ops=$ops\n got=$pruned want=$want\n eqGot=$eqGot eqWant=$eqWant")
+      // one-sided: each side prunes alone, a strict one by its closed superset
+      val oneGot = rows(t.planScan(s"count >= $lo AND $hi > count").read)
+      val oneWant = sortedRows(model(ops, ops.size - 1).filter(r => r._2 >= lo && r._2 < hi))
+      val ok = pruned == want && eqGot == eqWant && oneGot == oneWant
+      if (!ok) println(s"BOUNDED MISMATCH lo=$lo hi=$hi ops=$ops\n got=$pruned want=$want\n " +
+        s"eqGot=$eqGot eqWant=$eqWant\n oneGot=$oneGot oneWant=$oneWant")
       ok
     }
 

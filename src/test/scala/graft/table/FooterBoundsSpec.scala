@@ -94,7 +94,7 @@ class FooterBoundsSpec extends AnyFunSuite {
   /** the per-file bounds the newest entry of `t` recorded, by file */
   private def recorded(t: GraftTable): Map[String, Map[String, (String, String)]] = {
     val e = t.commitLog.entries().last
-    e.dataFiles.zip(e.fileStats).toMap
+    e.dataFiles.zip(e.fileStats.map(_.map { case (c, r) => c -> (r.lo, r.hi) })).toMap
   }
 
   private def fresh(tag: String): GraftTable =

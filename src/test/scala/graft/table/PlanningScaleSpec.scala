@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.table.Bounds.{Interval, Num, Recorded}
+
 /** Driver-side PLANNING cost at manifest scale (VERDICT r7 #7): the
   * commit log's per-read work is parse-checkpoint + parse-tail +
   * stateFrom fold + prune filter, all O(live files) on the driver. The
@@ -37,10 +39,10 @@ class PlanningScaleSpec extends AnyFunSuite {
       // ts tiles DISJOINTLY: file i of commit c owns exactly
       // [c*100000 + i*1000, …+999] — a one-commit probe prunes exactly
       val fs = files.indices.map(i => Map(
-        "ts" -> (s"${c * 100000 + i * 1000}.000000", s"${c * 100000 + i * 1000 + 999}.000000"),
-        "user_id" -> (s"$i.000000", s"${i + 5000}.000000")))
+        "ts" -> Recorded(s"${c * 100000 + i * 1000}.000000", s"${c * 100000 + i * 1000 + 999}.000000"),
+        "user_id" -> Recorded(s"$i.000000", s"${i + 5000}.000000")))
       log.commit("add", dataFiles = files,
-        stats = Seq(("ts", s"${c * 100000}.000000", s"${c * 100000 + 99999}.000000")),
+        stats = Seq("ts" -> Recorded(s"${c * 100000}.000000", s"${c * 100000 + 99999}.000000")),
         fileStats = fs, fileRows = files.map(_ => 10000L))
     }
     val (_, tFoldAll) = ms(log.checkpoint())
@@ -56,7 +58,7 @@ class PlanningScaleSpec extends AnyFunSuite {
     assert(st._1.size == commits * filesPer)
     val (pruned, tPrune) = ms(
       CommitLog.stateFrom(es,
-        Seq(Prune("ts", BigDecimal(42 * 100000), BigDecimal(42 * 100000 + 99999)))))
+        Seq(Prune("ts", Interval(Num(42 * 100000), Num(42 * 100000 + 99999))))))
     // the ts ranges tile disjointly per commit: exactly one commit's
     // files survive a one-commit-wide probe
     assert(pruned._1.size == filesPer)
@@ -84,7 +86,7 @@ class PlanningScaleSpec extends AnyFunSuite {
       val files = (0 until 100).map(f => f"data/e$c%02d/part-$f%05d.parquet")
       log.commit("add", dataFiles = files,
         fileStats = files.indices.map(i =>
-          Map("user_id" -> (s"$i.000000", s"${i + 5000}.000000"))),
+          Map("user_id" -> Recorded(s"$i.000000", s"${i + 5000}.000000"))),
         fileBlooms = files.map(_ => Map("user_id" -> bloom)),
         fileRows = files.map(_ => 10000L))
     }
@@ -108,7 +110,7 @@ class PlanningScaleSpec extends AnyFunSuite {
     val (h1, m1) = ioCount()
     assert(h1 == h0 && m1 == m0, "a bloom-free plan must read zero sidecars")
     // a point probe hydrates lazily (cold), then serves from the cache
-    val probe = Seq(Prune("user_id", BigDecimal(1), BigDecimal(1), bloom = Some("1")))
+    val probe = Seq(Prune("user_id", Interval.point(Num(1)), bloom = Some("1")))
     val (_, tProbeCold) = ms(CommitLog.stateFrom(es, probe))
     val (_, m2) = ioCount()
     assert(m2 > m1, "a point probe must hydrate sidecars")
@@ -136,7 +138,7 @@ class PlanningScaleSpec extends AnyFunSuite {
       // k tiles disjointly: file i of commit c holds [c*100000 + i*1000, …+999]
       log.commit("add", dataFiles = files, schemaJson = schema,
         fileStats = files.indices.map(i => Map(
-          "k" -> (s"${c * 100000 + i * 1000}.000000", s"${c * 100000 + i * 1000 + 999}.000000"))),
+          "k" -> Recorded(s"${c * 100000 + i * 1000}.000000", s"${c * 100000 + i * 1000 + 999}.000000"))),
         fileRows = files.map(_ => 10000L))
     }
     // 100 one-key delete commits above every data file: group g's key
@@ -147,7 +149,7 @@ class PlanningScaleSpec extends AnyFunSuite {
       log.commit("delete", deleteFiles = Seq(file), equalityCols = Seq("k"))
       val key = if (g % 2 == 0) (g * 5L) * 100000 + 500 else 1000000000L + g
       log.root.resolve(file).toString ->
-        DeleteScope.FileKeys(empty = false, Map("k" -> Footers.IntBound(key, key)))
+        DeleteScope.FileKeys(empty = false, Map("k" -> Interval.point(Num(key))))
     }.toMap
     log.checkpoint()
     val es = log.entries()
@@ -156,7 +158,7 @@ class PlanningScaleSpec extends AnyFunSuite {
     val (all, tAll) = ms(DeleteScope.reachable(es, data, dels, keyOf))
     assert(all.size == 50)
     val pruned = CommitLog.stateFrom(es,
-      Seq(Prune("k", BigDecimal(40 * 100000), BigDecimal(40 * 100000 + 99999))))._1
+      Seq(Prune("k", Interval(Num(40 * 100000), Num(40 * 100000 + 99999)))))._1
     assert(pruned.size == filesPer)
     val (one, tPruned) = ms(DeleteScope.reachable(es, pruned, dels, keyOf))
     assert(one.size == 1)
