@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   *    build, the standard `spark.sql.extensions` deployment path, and
   *    the `graft.fs` local file system for `file:` paths (see
   *    [[graft.fs.NioRawLocalFileSystem]]).
+  *  - [[local]]: a local-mode session built from [[builder]] for the
+  *    harness mains and the specs.
   *  - [[attach]]: apply the same settings to an EXISTING session (e.g.
   *    one provided by a notebook or job server, where the extensions
   *    class can no longer be injected — functions are registered
@@ -35,6 +37,19 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", classOf[functions.GraftExtensions].getName)
       .config(localFs.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
+
+  /** `local[cpus]` with as many shuffle partitions, no UI and WARN
+    * logging; `cpus` defaults to SPARK_GRAFT_CPUS, else every core. */
+  def local(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
+    val s = builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   def attach(s: SparkSession): SparkSession = {
     s.conf.set("spark.sql.session.timeZone", "UTC")

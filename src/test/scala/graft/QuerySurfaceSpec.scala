@@ -50,8 +50,7 @@ class QuerySurfaceSpec extends AnyFunSuite {
     val sec = survey.split("### 2B\\.")(1).split("\n## ")(0)
     val declared = "(?m)^\\| `([a-z0-9_]+)`".r.findAllMatchIn(sec).map(_.group(1)).toSet
     val registered = SparkEntry.all.map(_.name).toSet
-    val benchOnly = Set("x_ingest_stress", "x_maint_stress", "x_dedup_stress",
-      "x_ann_stress") // Bench scenarios, no queries entry
+    val benchOnly = Bench.scenarios.map(_._1).toSet // no queries entry
     assert(declared.intersect(benchOnly) == benchOnly, "bench-only ids must stay declared")
     assert((declared -- benchOnly) == registered,
       s"survey/registry drift: only-in-survey=${(declared -- benchOnly -- registered).toSeq.sorted.mkString(",")} " +

@@ -8,15 +8,6 @@ import org.apache.spark.sql.SparkSession
   * graft.fs local file system), small shuffle fan-out (local[4] test scale).
   */
 object SparkSessionFixture {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf: String = "/root/testdata/sf0.001"
 }
